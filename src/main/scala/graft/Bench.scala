@@ -1,37 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session-wide function + RangeJoinRewrite install (VERDICT r6 #6)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(Sweep.cpus)
     // warm the JVM/codegen path and the parquet footers once so the
     // alphabetically-first query doesn't absorb cold-start cost that
     // belongs to no query
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .filter(org.apache.spark.sql.functions.col("l_orderkey") > 0).count()
     catch { case _: Throwable => () }
-    // optional comma-separated name filter for single-query iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_INJECT_FAIL=1: standing self-test that a throwing
-    // query produces an "errors" entry and a nonzero exit (see Verify)
-    val injected: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] =
-      if (sys.env.contains("SPARK_GRAFT_INJECT_FAIL"))
-        Seq("zz_injected_failure" -> ((_, _) =>
-          throw new RuntimeException("injected failure (harness self-test)")))
-      else Seq.empty
-    val selected = (SparkEntry.queries.toSeq ++ injected).sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = Sweep.selected
     // pre-build the session-shared family caches (star fact/calendar,
     // dedup shingles) and report their cost as its OWN line: otherwise
     // the alphabetically-first query of each family absorbs the
@@ -50,7 +28,7 @@ object Bench {
       System.err.println(
         f"[bench] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
-    if (only.isEmpty || sys.env.contains("SPARK_GRAFT_TIERS")) {
+    if (Sweep.only.isEmpty || sys.env.contains("SPARK_GRAFT_TIERS")) {
       tier("star.siop")(graft.core.Star.siop(spark, sfDir).count())
       tier("star.calendar")(graft.core.Star.calendar(spark, sfDir).count())
       tier("dedup.shingles")(graft.dedup.Dedup.sharedShingles(spark, sfDir).count())
@@ -129,15 +107,12 @@ object Bench {
         f"[bench] $name%-28s $dt%8.2f s  (${times.map(t => f"$t%.2f").mkString("/")})")
       name -> dt
     }
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val qs = results
       .filterNot { case (k, _) => errors.contains(k) }
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
+    val errJson = errors
+      .map { case (k, v) => Sweep.jsonString(k) + ":" + Sweep.jsonString(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir","cache_build_sec":$cacheBuild}"""

@@ -6,9 +6,9 @@ import graft.registry._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the union of the per-domain registries; each registry
-  * pairs every DataFrame query with DuckDB-ANSI oracle SQL over the same
-  * parquet tables (omitted only for non-SQL-expressible ops, which get
-  * the driver's weaker rows-only check).
+  * declares every DataFrame query once, as a `QuerySpec` holding its
+  * DuckDB-ANSI oracle SQL over the same parquet tables or, for a
+  * non-SQL-expressible op, the specs that carry its evidence.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -18,40 +18,28 @@ object SparkEntry {
     graft.transform.Transform.actDemandBlankFinal(
       spark, "/root/testdata/sf0.001")
 
-  private val registries: Seq[(Map[String, (SparkSession, String) => DataFrame],
-      Map[String, String])] = Seq(
-    (ExtractQueries.queries, ExtractQueries.oracles),
-    (ReconQueries.queries, ReconQueries.oracles),
-    (TextQueries.queries, TextQueries.oracles),
-    (DedupQueries.queries, DedupQueries.oracles),
-    (SimilarityQueries.queries, SimilarityQueries.oracles),
-    (AnalyticsQueries.queries, AnalyticsQueries.oracles),
-    (StreamQueries.queries, StreamQueries.oracles),
-    (MultimodalQueries.queries, MultimodalQueries.oracles),
-    (PipelineQueries.queries, PipelineQueries.oracles),
-    (LoadQueries.queries, LoadQueries.oracles),
-    (MaintQueries.queries, MaintQueries.oracles))
-
-  /** Within-registry duplicates die at `Reg.strict`; this closes the
-    * remaining hole — the same name bound in TWO registries would
-    * still silently shadow through a plain `reduce(_ ++ _)`
-    * (VERDICT r9 #1 class). */
-  private def mergeStrict[V](maps: Seq[Map[String, V]]): Map[String, V] = {
-    val dups = maps.flatMap(_.keys).groupBy(identity)
-      .collect { case (k, vs) if vs.sizeIs > 1 => k }
-    require(dups.isEmpty, "query name bound in multiple registries: " +
+  /** Every registered query, each declared once with its check. Two
+    * registries binding the same name would silently shadow one another
+    * in a map, so a repeated name fails initialization here. */
+  val specs: Seq[QuerySpec] = {
+    val all = Seq(ExtractQueries.specs, ReconQueries.specs, TextQueries.specs,
+      DedupQueries.specs, SimilarityQueries.specs, AnalyticsQueries.specs,
+      StreamQueries.specs, MultimodalQueries.specs, PipelineQueries.specs,
+      LoadQueries.specs, MaintQueries.specs).flatten
+    val dups = all.groupBy(_.name).collect { case (n, ss) if ss.sizeIs > 1 => n }
+    require(dups.isEmpty, "query name declared more than once: " +
       dups.toSeq.sorted.mkString(", "))
-    maps.reduce(_ ++ _)
+    all
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    mergeStrict(registries.map(_._1))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    mergeStrict(registries.map(_._2))
+  val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(n, _, Oracle(sql)) => n -> sql }.toMap
 
   /** Every declared surface WITHOUT a batch DuckDB oracle, with the
     * suite that carries its evidence (VERDICT r7 #7): the correctness
@@ -59,14 +47,8 @@ object SparkEntry {
     * rows here are spec-verified by design (streaming state,
     * side-effecting writes, learned models), not untested leftovers.
     * Verify dumps this as `spec_only.json` next to `oracle_sql.json`. */
-  val specOnly: Map[String, String] = Map(
-    // no-oracle QUERY rows (present in `queries`, absent from oracleSql)
-    "ml_stream_train" -> ("StreamingTrainerSpec — LBFGS fit is not " +
-      "SQL-expressible; MemoryStream convergence asserted; the scoring " +
-      "half is oracle-green as ml_stream_eval; the final_loss_e6 curve " +
-      "(frozen final weights, integer micro-nats) is asserted to EXACT " +
-      "integer values against an independent scalar re-derivation from " +
-      "the raw events table"),
+  val specOnly: Map[String, String] =
+    specs.collect { case QuerySpec(n, _, SpecOnly(e)) => n -> e }.toMap ++ Map(
     // operator surfaces with no queries entry (side-effecting /
     // driver-side / streaming-state semantics)
     "X230_stream_static_enrichment" -> ("StreamEnrichSpec — " +

@@ -1,45 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Sweep.{jsonString => q}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production install path for the library's SQL functions and the
-      // RangeJoinRewrite optimizer rule — session-wide from the start,
-      // so no query's plan depends on which query ran first (VERDICT r6 #6)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(Sweep.cpus)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for single-query iteration
-    // (same contract as Bench's SPARK_GRAFT_ONLY)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // A throwing query must be LOUD: r6 lost 19 correctness rows to a
     // silent catch (VERDICT r6 #2). Failures now leave a per-query
     // .failed/<name>.txt with the stack trace, an errors.json map, and a
     // final stderr banner with the failure count.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_INJECT_FAIL=1 adds a query that always throws — the
-    // standing proof that a broken query surfaces as a loud artifact
-    // instead of a silent omission
-    val injected: Map[String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] =
-      if (sys.env.contains("SPARK_GRAFT_INJECT_FAIL"))
-        Map("zz_injected_failure" -> ((_, _) =>
-          throw new RuntimeException("injected failure (harness self-test)")))
-      else Map.empty
-    (SparkEntry.queries ++ injected)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY / SPARK_GRAFT_INJECT_FAIL: same selection as Bench
+    Sweep.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -57,18 +32,6 @@ object Verify {
       graft.core.CacheBay.drain() // drop per-query transient persists
       graft.core.CheckpointBay.drain() // release leaked checkpoint blocks
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

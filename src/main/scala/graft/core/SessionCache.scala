@@ -22,6 +22,7 @@ import org.apache.spark.storage.StorageLevel
 object SessionCache {
   private val cache =
     scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+  private val memos = scala.collection.mutable.Map[(SparkSession, String), Any]()
 
   def cached(spark: SparkSession, key: String)(
       build: => DataFrame): DataFrame = synchronized {
@@ -29,11 +30,20 @@ object SessionCache {
       build.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
+  /** Session-lifetime memo for a derived value that is not one frame
+    * (e.g. a sequence of [[cached]] tier frames), evicted by [[clear]]
+    * together with the frames it holds. */
+  def memo[T](spark: SparkSession, key: String)(build: => T): T =
+    synchronized {
+      memos.getOrElseUpdate((spark, key), build).asInstanceOf[T]
+    }
+
   /** Evict every entry owned by `spark`: unpersist (non-blocking) and
     * drop the key references so the session can be collected. */
   def clear(spark: SparkSession): Unit = synchronized {
     cache.keys.filter(_._1 eq spark).toSeq.foreach { k =>
       cache.remove(k).foreach(_.unpersist(false))
     }
+    memos.keys.filter(_._1 eq spark).toSeq.foreach(memos.remove)
   }
 }

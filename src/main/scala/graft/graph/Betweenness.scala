@@ -123,20 +123,28 @@ object Betweenness {
     * `[cache:graph.bfslevels]` Bench tier. */
   def sharedForwardLevels(spark: org.apache.spark.sql.SparkSession,
       dir: String): IndexedSeq[DataFrame] =
-    levelsMemos.computeIfAbsent(
-      System.identityHashCode(spark).toString + "|" + dir,
-      _ => {
-        val (e, g) = PageRank.sharedPurchaseGraph(spark, dir)
-        forwardLevels(e, g, BfsHops.Rounds, SeedMod,
-          pin = (df, i) => {
-            val c = graft.core.SessionCache.cached(
-              spark, s"bfslevels:$dir:$i")(df.trackedCheckpoint())
-            c.count() // materialize before any drain (contract above)
-            c
-          })
-      })
-  private val levelsMemos = new java.util.concurrent.ConcurrentHashMap[
-    String, IndexedSeq[DataFrame]]()
+    graft.core.SessionCache.memo(spark, s"bfslevels:$dir") {
+      val (e, g) = PageRank.sharedPurchaseGraph(spark, dir)
+      forwardLevels(e, g, BfsHops.Rounds, SeedMod,
+        pin = (df, i) => {
+          val c = graft.core.SessionCache.cached(
+            spark, s"bfslevels:$dir:$i")(df.trackedCheckpoint())
+          c.count() // materialize before any drain (contract above)
+          c
+        })
+    }
+
+  /** Level frames handed in as `levelsIn` are [[sharedForwardLevels]]'
+    * (levels 0..[[BfsHops.Rounds]] at [[SeedMod]]); a caller asking for
+    * another horizon or seed rate would silently read mismatched
+    * frames, so it fails here instead. */
+  private[graph] def checkLevels(levels: IndexedSeq[DataFrame],
+      rounds: Int, seedMod: Int): Unit = {
+    require(levels.size == rounds + 1, s"levelsIn holds ${levels.size} " +
+      s"BFS levels but rounds = $rounds needs ${rounds + 1}")
+    require(seedMod == SeedMod, s"levelsIn was built at seed rate " +
+      s"$SeedMod, not $seedMod")
+  }
 
   /** Brandes betweenness in e6 micro-units over arbitrary symmetric
     * `(src, dst)` edges with odd-node seeds (the purchase-graph
@@ -146,6 +154,7 @@ object Betweenness {
       rounds: Int = BfsHops.Rounds,
       seedMod: Int = SeedMod,
       levelsIn: Option[IndexedSeq[DataFrame]] = None): DataFrame = {
+    levelsIn.foreach(checkLevels(_, rounds, seedMod))
     val levels = levelsIn.getOrElse(
       forwardLevels(edges, deg, rounds, seedMod))
     // deepest level: no successors inside the horizon -> delta = 0

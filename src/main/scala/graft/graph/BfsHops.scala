@@ -102,6 +102,7 @@ object BfsHops {
     // the whole BFS below is skipped
     val dist = levelsIn match {
       case Some(levels) =>
+        Betweenness.checkLevels(levels, rounds, HarmonicSeedMod)
         (1 to rounds).map(i => levels(i)
           .select(col("seed"), col("node"), lit(i.toLong).as("hops")))
           .reduce(_ unionByName _)

@@ -129,9 +129,24 @@ object Sinks {
     // collect the affected values ALREADY CAST to the reader's
     // (inferred) partition type so the isin literals match the column
     // and the filter prunes directories instead of coercing the column
-    val affected = delta
-      .select(col(partCol).cast(raw.schema(partCol).dataType))
-      .distinct().collect().map(_.get(0))
+    val tType = raw.schema(partCol).dataType
+    val pairs = delta
+      .select(col(partCol), col(partCol).cast(tType),
+        col(partCol).cast("string").cast(tType))
+      .distinct().collect()
+    // the reader parses a partition's value from its directory name,
+    // the delta value's string form; a cast that yields NULL or another
+    // value (float 0.1 is the double 0.10000000149, the directory reads
+    // 0.1) leaves that partition out of the pruning set, so its
+    // survivors would never be read while dynamic overwrite still
+    // replaces the directory
+    val lossy = pairs.filter(r => !r.isNullAt(0) &&
+      (r.isNullAt(1) || !java.util.Objects.equals(r.get(1), r.get(2))))
+    require(lossy.isEmpty, s"partitionedUpsert: delta $partCol value(s) " +
+      s"${lossy.map(_.get(0)).mkString(", ")} do not cast losslessly to " +
+      s"the target's partition type ${tType.simpleString}; upserting them " +
+      "would drop the surviving rows of their partitions")
+    val affected = pairs.map(_.get(1)).distinct
     // partition-column type inference would retype e.g. "199601" to
     // INT; cast back to the delta's declared type so the joins align
     val target = raw.filter(col(partCol).isin(affected.toIndexedSeq: _*))

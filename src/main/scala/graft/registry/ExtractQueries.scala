@@ -25,40 +25,6 @@ object ExtractQueries {
     d.getYear * 100L + d.getMonthValue
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Reg.strict(
-    "act_demand_blank" -> ((s, d) => Extracts.actDemandBlank(s, d)),
-    "act_demand_nonblank_1" -> ((s, d) =>
-      Extracts.demandWindow(s, d, -6, Some(0))),
-    "act_demand_nonblank_2" -> ((s, d) =>
-      Extracts.demandWindow(s, d, -12, Some(-6))),
-    "fcst_demand_window" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 0, Some(6))),
-    "fcst_demand_window_6_12" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 6, Some(12))),
-    "fcst_demand_window_12_18" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 12, Some(18))),
-    "fcst_demand_window_18_24" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 18, Some(24))),
-    "fcst_demand_window_24_30" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 24, Some(30))),
-    "fcst_demand_window_30_36" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 30, Some(36))),
-    "fcst_demand_window_36p" -> ((s, d) =>
-      Extracts.demandWindow(s, d, 36, None)),
-    "fcst_demand_blank" -> ((s, d) => Extracts.fcstDemandBlank(s, d)),
-    "bpc_vad_summarize" -> ((s, d) => Extracts.bpcVad(s, d)),
-    "bpc_by_sku_rollup" -> ((s, d) => Extracts.bpcBySku(s, d)),
-    "act_unknown_latest_snapshot" -> ((s, d) => Extracts.actUnknown(s, d)),
-    "fcst_unknown_latest_snapshot" -> ((s, d) => Extracts.fcstUnknown(s, d)),
-    "demand_to_final" -> ((s, d) => Transform.actDemandBlankFinal(s, d)),
-    // config-driven runner variants (pipeline/runner.py:22-178):
-    // constant source/BU + blank sales org + F2 country cleaning, and
-    // from-file snapshot + source-from-column
-    "job_bpc_vad" -> ((s, d) =>
-      Runner.runJob(s, d, Runner.jobs("bpc_vad"))),
-    "job_fcst_unknown" -> ((s, d) =>
-      Runner.runJob(s, d, Runner.jobs("fcst_unknown"))))
-
   /** One SQL shape for the 12 window scripts (see Extracts.windowedExtract):
     * country-blankness dual × month window [lo, hi), Cycle=Current, the
     * BU IN-list, calendar join, grouped sum, non-zero filter. */
@@ -112,20 +78,40 @@ object ExtractQueries {
        |      OR month_year IS NOT NULL OR month_sort IS NOT NULL""".stripMargin
   }
 
-  val oracles: Map[String, String] = Reg.strict(
-    "act_demand_blank" -> windowedSql(blank = true, -12, Some(0)),
-    "act_demand_nonblank_1" -> windowedSql(blank = false, -6, Some(0)),
-    "act_demand_nonblank_2" -> windowedSql(blank = false, -12, Some(-6)),
-    "fcst_demand_window" -> windowedSql(blank = false, 0, Some(6)),
-    "fcst_demand_window_6_12" -> windowedSql(blank = false, 6, Some(12)),
-    "fcst_demand_window_12_18" -> windowedSql(blank = false, 12, Some(18)),
-    "fcst_demand_window_18_24" -> windowedSql(blank = false, 18, Some(24)),
-    "fcst_demand_window_24_30" -> windowedSql(blank = false, 24, Some(30)),
-    "fcst_demand_window_30_36" -> windowedSql(blank = false, 30, Some(36)),
-    "fcst_demand_window_36p" -> windowedSql(blank = false, 36, None),
-    "fcst_demand_blank" -> windowedSql(blank = true, 0, None),
-    "bpc_vad_summarize" ->
-      s"""$W
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("act_demand_blank", (s, d) => Extracts.actDemandBlank(s, d),
+      Oracle(windowedSql(blank = true, -12, Some(0)))),
+    QuerySpec("act_demand_nonblank_1", (s, d) =>
+      Extracts.demandWindow(s, d, -6, Some(0)),
+      Oracle(windowedSql(blank = false, -6, Some(0)))),
+    QuerySpec("act_demand_nonblank_2", (s, d) =>
+      Extracts.demandWindow(s, d, -12, Some(-6)),
+      Oracle(windowedSql(blank = false, -12, Some(-6)))),
+    QuerySpec("fcst_demand_window", (s, d) =>
+      Extracts.demandWindow(s, d, 0, Some(6)),
+      Oracle(windowedSql(blank = false, 0, Some(6)))),
+    QuerySpec("fcst_demand_window_6_12", (s, d) =>
+      Extracts.demandWindow(s, d, 6, Some(12)),
+      Oracle(windowedSql(blank = false, 6, Some(12)))),
+    QuerySpec("fcst_demand_window_12_18", (s, d) =>
+      Extracts.demandWindow(s, d, 12, Some(18)),
+      Oracle(windowedSql(blank = false, 12, Some(18)))),
+    QuerySpec("fcst_demand_window_18_24", (s, d) =>
+      Extracts.demandWindow(s, d, 18, Some(24)),
+      Oracle(windowedSql(blank = false, 18, Some(24)))),
+    QuerySpec("fcst_demand_window_24_30", (s, d) =>
+      Extracts.demandWindow(s, d, 24, Some(30)),
+      Oracle(windowedSql(blank = false, 24, Some(30)))),
+    QuerySpec("fcst_demand_window_30_36", (s, d) =>
+      Extracts.demandWindow(s, d, 30, Some(36)),
+      Oracle(windowedSql(blank = false, 30, Some(36)))),
+    QuerySpec("fcst_demand_window_36p", (s, d) =>
+      Extracts.demandWindow(s, d, 36, None),
+      Oracle(windowedSql(blank = false, 36, None))),
+    QuerySpec("fcst_demand_blank", (s, d) => Extracts.fcstDemandBlank(s, d),
+      Oracle(windowedSql(blank = true, 0, None))),
+    QuerySpec("bpc_vad_summarize", (s, d) => Extracts.bpcVad(s, d),
+      Oracle(s"""$W
          |SELECT * FROM (
          |  SELECT reltio_bu, country, segment,
          |         ROUND(SUM(siop_consensus), 4) AS actual_units,
@@ -134,15 +120,16 @@ object ExtractQueries {
          |  WHERE reltio_bu IS NULL OR reltio_bu NOT IN ('FURNITURE')
          |  GROUP BY ALL
          |) WHERE reltio_bu IS NOT NULL OR country IS NOT NULL
-         |        OR segment IS NOT NULL""".stripMargin,
-    "bpc_by_sku_rollup" ->
-      s"""$W
+         |        OR segment IS NOT NULL""".stripMargin)),
+    QuerySpec("bpc_by_sku_rollup", (s, d) => Extracts.bpcBySku(s, d),
+      Oracle(s"""$W
          |SELECT reltio_bu, country,
          |       ROUND(SUM(siop_consensus), 4) AS units,
          |       GROUPING(reltio_bu, country) AS is_total
-         |FROM siop GROUP BY ROLLUP (reltio_bu, country)""".stripMargin,
-    "act_unknown_latest_snapshot" ->
-      s"""$W, f AS (
+         |FROM siop GROUP BY ROLLUP (reltio_bu, country)""".stripMargin)),
+    QuerySpec("act_unknown_latest_snapshot", (s, d) =>
+      Extracts.actUnknown(s, d),
+      Oracle(s"""$W, f AS (
          |  SELECT * FROM siop
          |  WHERE reltio_bu IN ${Extracts.BuSetSql} AND siop_consensus <> 0
          |)
@@ -150,51 +137,12 @@ object ExtractQueries {
          |       ROUND(SUM(siop_consensus), 4) AS units,
          |       COUNT(*) AS n_rows
          |FROM f WHERE snapshot_date = (SELECT MAX(snapshot_date) FROM f)
-         |GROUP BY ALL""".stripMargin,
-    "fcst_unknown_latest_snapshot" -> FcstUnknownSql,
-    // runner variant: constant source/BU, blank sales org, F2 literal
-    // replace-all of " Performance", no month grain -> NULL attribute
-    "job_bpc_vad" ->
-      s"""$W,
-         |ext AS (
-         |  SELECT * FROM (
-         |    SELECT material_id, reltio_bu,
-         |           CASE WHEN country IS NOT NULL AND length(country) % 2 = 0
-         |                THEN country || ' Performance' ELSE country
-         |           END AS country,
-         |           segment,
-         |           ROUND(SUM(siop_consensus), 4) AS actual_units
-         |    FROM siop
-         |    WHERE reltio_bu IS NULL OR reltio_bu NOT IN ('FURNITURE')
-         |    GROUP BY ALL
-         |  ) WHERE material_id IS NOT NULL OR reltio_bu IS NOT NULL
-         |        OR country IS NOT NULL OR segment IS NOT NULL
-         |)
-         |SELECT 'BPC' AS source,
-         |       DATE '${Star.AsOf}' AS snapshot,
-         |       material_id AS material,
-         |       '' AS sales_organization,
-         |       replace(country, ' Performance', '') AS country,
-         |       CAST(NULL AS DATE) AS attribute,
-         |       actual_units AS value,
-         |       'MDS' AS bu
-         |FROM ext""".stripMargin,
-    // runner variant: snapshot taken from the extract's snapshot_date
-    // column, source from the planning-system column
-    "job_fcst_unknown" ->
-      s"""WITH fu AS ($FcstUnknownSql)
-         |SELECT planning_system AS source,
-         |       snapshot_date AS snapshot,
-         |       material_id AS material,
-         |       sales_organization,
-         |       country,
-         |       CAST(strptime(CAST(month_sort AS VARCHAR) || '01',
-         |            '%Y%m%d') AS DATE) AS attribute,
-         |       consensus AS value,
-         |       reltio_bu AS bu
-         |FROM fu""".stripMargin,
-    "demand_to_final" ->
-      s"""$W,
+         |GROUP BY ALL""".stripMargin)),
+    QuerySpec("fcst_unknown_latest_snapshot", (s, d) =>
+      Extracts.fcstUnknown(s, d),
+      Oracle(FcstUnknownSql)),
+    QuerySpec("demand_to_final", (s, d) => Transform.actDemandBlankFinal(s, d),
+      Oracle(s"""$W,
          |mapping AS (
          |  SELECT CAST(s_suppkey AS VARCHAR) AS map_sales_org,
          |         n_name AS corrected_country
@@ -225,5 +173,51 @@ object ExtractQueries {
          |       e.consensus AS value,
          |       'BLNK-C-' || trim(e.reltio_bu) AS bu
          |FROM ext e LEFT JOIN mapping m
-         |  ON e.sales_organization = m.map_sales_org""".stripMargin)
+         |  ON e.sales_organization = m.map_sales_org""".stripMargin)),
+    // config-driven runner variants (pipeline/runner.py:22-178):
+    // constant source/BU + blank sales org + F2 country cleaning, and
+    // from-file snapshot + source-from-column
+    QuerySpec("job_bpc_vad", (s, d) =>
+      Runner.runJob(s, d, Runner.jobs("bpc_vad")),
+      // runner variant: constant source/BU, blank sales org, F2 literal
+      // replace-all of " Performance", no month grain -> NULL attribute
+      Oracle(s"""$W,
+         |ext AS (
+         |  SELECT * FROM (
+         |    SELECT material_id, reltio_bu,
+         |           CASE WHEN country IS NOT NULL AND length(country) % 2 = 0
+         |                THEN country || ' Performance' ELSE country
+         |           END AS country,
+         |           segment,
+         |           ROUND(SUM(siop_consensus), 4) AS actual_units
+         |    FROM siop
+         |    WHERE reltio_bu IS NULL OR reltio_bu NOT IN ('FURNITURE')
+         |    GROUP BY ALL
+         |  ) WHERE material_id IS NOT NULL OR reltio_bu IS NOT NULL
+         |        OR country IS NOT NULL OR segment IS NOT NULL
+         |)
+         |SELECT 'BPC' AS source,
+         |       DATE '${Star.AsOf}' AS snapshot,
+         |       material_id AS material,
+         |       '' AS sales_organization,
+         |       replace(country, ' Performance', '') AS country,
+         |       CAST(NULL AS DATE) AS attribute,
+         |       actual_units AS value,
+         |       'MDS' AS bu
+         |FROM ext""".stripMargin)),
+    QuerySpec("job_fcst_unknown", (s, d) =>
+      Runner.runJob(s, d, Runner.jobs("fcst_unknown")),
+      // runner variant: snapshot taken from the extract's snapshot_date
+      // column, source from the planning-system column
+      Oracle(s"""WITH fu AS ($FcstUnknownSql)
+         |SELECT planning_system AS source,
+         |       snapshot_date AS snapshot,
+         |       material_id AS material,
+         |       sales_organization,
+         |       country,
+         |       CAST(strptime(CAST(month_sort AS VARCHAR) || '01',
+         |            '%Y%m%d') AS DATE) AS attribute,
+         |       consensus AS value,
+         |       reltio_bu AS bu
+         |FROM fu""".stripMargin)))
 }

@@ -11,45 +11,6 @@ import graft.multimodal.Multimodal
   */
 object MultimodalQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Reg.strict(
-    "multimodal_features" -> ((s, d) => Multimodal.mediaFeatures(s, d)),
-    "multimodal_frame_sample" -> ((s, d) => Multimodal.sampleFrames(s, d)),
-    // X232: cross-document duplicate-frame ledger — clip-reuse dedup
-    // at sampled-frame grain, struct-min keeper
-    "multimodal_frame_dups" -> ((s, d) => Multimodal.frameDups(s, d)),
-    "multimodal_pcm_decode" -> ((s, d) => Multimodal.pcmFeatures(s, d)),
-    // X155: short-time energy per fixed sample window — the audio
-    // frame grain VAD/silence-trim/loudness consume; exact Longs end
-    // to end, so the real decode hash-matches the SQL replay
-    "multimodal_pcm_energy" -> ((s, d) =>
-      Multimodal.pcmWindowEnergy(s, d)),
-    // X225: clipping-rate audit over the same PCM decode — integer
-    // rail comparisons, quarantine flag past 1% of samples
-    "multimodal_pcm_clipping" -> ((s, d) =>
-      Multimodal.pcmClipping(s, d)),
-    // X265: leading/trailing silence trim — endpoint voice-activity
-    // trim over the X13 window-energy frame, no new decode pass
-    "multimodal_pcm_trim" -> ((s, d) =>
-      Multimodal.pcmSilenceTrim(s, d)),
-    // X238: image-geometry curation profile — metadata-only screen
-    // that prunes the decode queue (extreme aspect / tiny assets)
-    "multimodal_dim_profile" -> ((s, d) => Multimodal.dimProfile(s, d)),
-    "multimodal_image_decode" -> ((s, d) => Multimodal.imageFeatures(s, d)),
-    // X294: 2x box-downsample resize over the real decoded raster —
-    // integer block means, odd edges dropped, (0,0) probe pixel
-    "multimodal_image_resize" -> ((s, d) => Multimodal.imageResize(s, d)),
-    // X307: histogram entropy over the real PNG decode — the
-    // flat/degenerate-image screen, X205 integer-bits device
-    "multimodal_image_entropy" -> ((s, d) =>
-      Multimodal.imageEntropy(s, d)),
-    // X295: 2:1 PCM decimation — floor pair means (floorDiv, signed),
-    // decimated-signal sum/peak evidence
-    "multimodal_pcm_downsample" -> ((s, d) =>
-      Multimodal.pcmDownsample(s, d)),
-    "multimodal_ahash" -> ((s, d) => Multimodal.imageHashes(s, d)),
-    "multimodal_ahash_pairs" -> ((s, d) =>
-      Multimodal.ahashPairs(Multimodal.imageHashes(s, d))))
-
   /** PCM16LE byte→sample decode + short-time window energy as a CTE
     * (`we(doc_id, win, n_samples, energy)`) — shared verbatim by the
     * energy oracle and the silence-trim oracle so the trim provably
@@ -77,9 +38,9 @@ object MultimodalQueries {
        |  FROM u GROUP BY 1, 2)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Reg.strict(
-    "multimodal_features" ->
-      """WITH c AS (
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("multimodal_features", (s, d) => Multimodal.mediaFeatures(s, d),
+      Oracle("""WITH c AS (
         |  SELECT doc_id, 'img/' || source AS media_type, text,
         |    list_transform(range(1, length(text) + 1),
         |      i -> ascii(text[i:i])) AS codes
@@ -94,9 +55,10 @@ object MultimodalQueries {
         |  CAST(len(list_filter(codes, c -> c // 64 = 1)) AS BIGINT) AS hist_1,
         |  CAST(len(list_filter(codes, c -> c // 64 = 2)) AS BIGINT) AS hist_2,
         |  CAST(len(list_filter(codes, c -> c // 64 = 3)) AS BIGINT) AS hist_3
-        |FROM c""".stripMargin,
-
-    "multimodal_frame_sample" -> {
+        |FROM c""".stripMargin)),
+    QuerySpec("multimodal_frame_sample", (s, d) =>
+      Multimodal.sampleFrames(s, d),
+      Oracle({
       val w = Multimodal.FrameBytes * 2
       val k = Multimodal.FrameEvery
       s"""WITH m AS (
@@ -117,11 +79,13 @@ object MultimodalQueries {
          |  length(substring(hx, CAST(frame_index * $w + 1 AS INT), $w)) // 2
          |    AS n_bytes
          |FROM fr""".stripMargin
-    },
-
-    // same frame extraction, fingerprint-grain rollup, keeper = the
-    // lexicographic-min (doc, frame) occurrence via row_number
-    "multimodal_frame_dups" -> {
+    })),
+    // X232: cross-document duplicate-frame ledger — clip-reuse dedup
+    // at sampled-frame grain, struct-min keeper
+    QuerySpec("multimodal_frame_dups", (s, d) => Multimodal.frameDups(s, d),
+      // same frame extraction, fingerprint-grain rollup, keeper = the
+      // lexicographic-min (doc, frame) occurrence via row_number
+      Oracle({
       val w = Multimodal.FrameBytes * 2
       val k = Multimodal.FrameEvery
       s"""WITH m AS (
@@ -155,13 +119,12 @@ object MultimodalQueries {
          |SELECT frame_md5, n_frames, n_docs, doc_id AS keeper_doc,
          |  frame_index AS keeper_frame
          |FROM rk WHERE rn = 1 AND n_frames >= 2""".stripMargin
-    },
-
-    // PCM16LE: byte pairs are samples — the oracle replays the exact
-    // decode (low byte unsigned + high byte signed·256), exact integer
-    // sum-of-squares, IEEE sqrt
-    "multimodal_pcm_decode" ->
-      """WITH m AS (
+    })),
+    QuerySpec("multimodal_pcm_decode", (s, d) => Multimodal.pcmFeatures(s, d),
+      // PCM16LE: byte pairs are samples — the oracle replays the exact
+      // decode (low byte unsigned + high byte signed·256), exact integer
+      // sum-of-squares, IEEE sqrt
+      Oracle("""WITH m AS (
         |  SELECT doc_id, text FROM documents WHERE length(text) >= 2),
         |s AS (
         |  SELECT doc_id, list_transform(range(1, length(text)//2 + 1),
@@ -179,34 +142,23 @@ object MultimodalQueries {
         |  CAST(COALESCE(list_sum(list_transform(range(2, len(smp) + 1),
         |    i -> CASE WHEN (smp[i] >= 0) <> (smp[i-1] >= 0)
         |              THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_cross
-        |FROM s""".stripMargin,
-
-    // the %64/%48 metadata rule replayed from n_chars; div vs // safe
-    // (all operands non-negative)
-    "multimodal_dim_profile" -> {
-      val ex = Multimodal.ExtremeAspectE6
-      val lo = 1000000000000L / Multimodal.ExtremeAspectE6
-      val tiny = Multimodal.TinyPixels
-      s"""WITH m AS (
-         |  SELECT doc_id,
-         |    CAST(n_chars % 64 + 1 AS BIGINT) AS width,
-         |    CAST(n_chars % 48 + 1 AS BIGINT) AS height
-         |  FROM documents),
-         |p AS (SELECT doc_id, width, height,
-         |        width * height AS n_pixels,
-         |        (width * 1000000) // height AS aspect_ppm
-         |      FROM m)
-         |SELECT doc_id, width, height, n_pixels,
-         |  CAST(aspect_ppm AS BIGINT) AS aspect_ppm,
-         |  CAST(CASE WHEN aspect_ppm > $ex OR aspect_ppm < $lo
-         |    THEN 1 ELSE 0 END AS BIGINT) AS is_extreme,
-         |  CAST(CASE WHEN n_pixels < $tiny THEN 1 ELSE 0 END
-         |    AS BIGINT) AS is_tiny
-         |FROM p""".stripMargin
-    },
-
-    // same sample decode, rail count via list_filter, ppm + 1% flag
-    "multimodal_pcm_clipping" -> {
+        |FROM s""".stripMargin)),
+    // X155: short-time energy per fixed sample window — the audio
+    // frame grain VAD/silence-trim/loudness consume; exact Longs end
+    // to end, so the real decode hash-matches the SQL replay
+    QuerySpec("multimodal_pcm_energy", (s, d) =>
+      Multimodal.pcmWindowEnergy(s, d),
+      // same sample decode, grouped to the fixed analysis window; the
+      // struct-unnest carries each sample's ordinal so the window id is
+      // (i-1) div W in both engines
+      Oracle(s"""WITH $PcmEnergyCte
+         |SELECT doc_id, win, n_samples, energy FROM we""".stripMargin)),
+    // X225: clipping-rate audit over the same PCM decode — integer
+    // rail comparisons, quarantine flag past 1% of samples
+    QuerySpec("multimodal_pcm_clipping", (s, d) =>
+      Multimodal.pcmClipping(s, d),
+      // same sample decode, rail count via list_filter, ppm + 1% flag
+      Oracle({
       val th = Multimodal.ClipThreshold
       val bar = Multimodal.ClipPpmBar
       s"""WITH m AS (
@@ -228,18 +180,14 @@ object MultimodalQueries {
          |  CAST(CASE WHEN (n_clipped * 1000000) // n_samples > $bar
          |    THEN 1 ELSE 0 END AS BIGINT) AS is_clipped
          |FROM a""".stripMargin
-    },
-
-    // same sample decode, grouped to the fixed analysis window; the
-    // struct-unnest carries each sample's ordinal so the window id is
-    // (i-1) div W in both engines
-    "multimodal_pcm_energy" ->
-      s"""WITH $PcmEnergyCte
-         |SELECT doc_id, win, n_samples, energy FROM we""".stripMargin,
-
-    // the same window-energy CTE, gated at the shared activity floor
-    // and reduced to endpoint trim offsets
-    "multimodal_pcm_trim" -> {
+    })),
+    // X265: leading/trailing silence trim — endpoint voice-activity
+    // trim over the X13 window-energy frame, no new decode pass
+    QuerySpec("multimodal_pcm_trim", (s, d) =>
+      Multimodal.pcmSilenceTrim(s, d),
+      // the same window-energy CTE, gated at the shared activity floor
+      // and reduced to endpoint trim offsets
+      Oracle({
       val f = Multimodal.ActiveMsFloor
       s"""WITH $PcmEnergyCte,
          |a AS (SELECT doc_id, win,
@@ -267,13 +215,40 @@ object MultimodalQueries {
          |        ELSE last_active - first_active + 1 END) * 1000000
          |    // n_windows AS BIGINT) AS kept_ppm
          |FROM g""".stripMargin
-    },
-
-    // PNG is lossless, so the REAL encode→decode round trip through
-    // javax.imageio must reproduce the deterministic pixel function of
-    // the text exactly — the oracle replays that function (byte at
-    // (k mod len), w×h from the % 64 / % 48 metadata rule) in SQL
-    "multimodal_image_decode" -> {
+    })),
+    // X238: image-geometry curation profile — metadata-only screen
+    // that prunes the decode queue (extreme aspect / tiny assets)
+    QuerySpec("multimodal_dim_profile", (s, d) => Multimodal.dimProfile(s, d),
+      // the %64/%48 metadata rule replayed from n_chars; div vs // safe
+      // (all operands non-negative)
+      Oracle({
+      val ex = Multimodal.ExtremeAspectE6
+      val lo = 1000000000000L / Multimodal.ExtremeAspectE6
+      val tiny = Multimodal.TinyPixels
+      s"""WITH m AS (
+         |  SELECT doc_id,
+         |    CAST(n_chars % 64 + 1 AS BIGINT) AS width,
+         |    CAST(n_chars % 48 + 1 AS BIGINT) AS height
+         |  FROM documents),
+         |p AS (SELECT doc_id, width, height,
+         |        width * height AS n_pixels,
+         |        (width * 1000000) // height AS aspect_ppm
+         |      FROM m)
+         |SELECT doc_id, width, height, n_pixels,
+         |  CAST(aspect_ppm AS BIGINT) AS aspect_ppm,
+         |  CAST(CASE WHEN aspect_ppm > $ex OR aspect_ppm < $lo
+         |    THEN 1 ELSE 0 END AS BIGINT) AS is_extreme,
+         |  CAST(CASE WHEN n_pixels < $tiny THEN 1 ELSE 0 END
+         |    AS BIGINT) AS is_tiny
+         |FROM p""".stripMargin
+    })),
+    QuerySpec("multimodal_image_decode", (s, d) =>
+      Multimodal.imageFeatures(s, d),
+      // PNG is lossless, so the REAL encode→decode round trip through
+      // javax.imageio must reproduce the deterministic pixel function of
+      // the text exactly — the oracle replays that function (byte at
+      // (k mod len), w×h from the % 64 / % 48 metadata rule) in SQL
+      Oracle({
       val t = Multimodal.EdgeThreshold
       s"""WITH m AS (
          |  SELECT doc_id, text, length(text) AS len,
@@ -294,42 +269,14 @@ object MultimodalQueries {
          |              AND abs(p[k + 2] - p[k + 1]) >= $t
          |         THEN 1 ELSE 0 END)), 0) AS BIGINT) AS edges
          |FROM px""".stripMargin
-    },
-
-    // entropy replay: the same pixel function, histogram by GROUP BY
-    // over the exploded levels, the X205 bits device for H
-    "multimodal_image_entropy" ->
-      """WITH m AS (
-        |  SELECT doc_id, text, length(text) AS len,
-        |    (length(text) % 64) + 1 AS w, (length(text) % 48) + 1 AS h
-        |  FROM documents WHERE length(text) > 0),
-        |px AS (
-        |  SELECT doc_id, w, h,
-        |    list_transform(range(0, w * h),
-        |      k -> ascii(text[(k % len) + 1:(k % len) + 1])) AS p
-        |  FROM m),
-        |cnt AS (
-        |  SELECT doc_id, pv, CAST(count(*) AS BIGINT) AS c
-        |  FROM (SELECT doc_id, unnest(p) AS pv FROM px)
-        |  GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_levels,
-        |    CAST(SUM(c * length(format('{:b}', c))) AS BIGINT)
-        |      AS sum_cb
-        |  FROM cnt GROUP BY 1)
-        |SELECT doc_id, n AS n_pixels, n_levels,
-        |  CAST(((n * length(format('{:b}', n)) - sum_cb) * 1000000)
-        |    // n AS BIGINT) AS h_bits_e6,
-        |  CAST(length(format('{:b}', n_levels)) * 1000000 AS BIGINT)
-        |    AS max_bits_e6
-        |FROM agg""".stripMargin,
-
-    // resize replay: the same pixel function grouped into 2x2 blocks
-    // (j -> bx = j % ow, by = j // ow; source index 2·by·w + 2·bx),
-    // floor block means; odd trailing rows/columns never indexed
-    "multimodal_image_resize" ->
-      s"""WITH m AS (
+    })),
+    // X294: 2x box-downsample resize over the real decoded raster —
+    // integer block means, odd edges dropped, (0,0) probe pixel
+    QuerySpec("multimodal_image_resize", (s, d) => Multimodal.imageResize(s, d),
+      // resize replay: the same pixel function grouped into 2x2 blocks
+      // (j -> bx = j % ow, by = j // ow; source index 2·by·w + 2·bx),
+      // floor block means; odd trailing rows/columns never indexed
+      Oracle(s"""WITH m AS (
          |  SELECT doc_id, text, length(text) AS len,
          |    (length(text) % 64) + 1 AS w, (length(text) % 48) + 1 AS h
          |  FROM documents
@@ -356,12 +303,45 @@ object MultimodalQueries {
          |  CAST((CAST(list_sum(q) AS BIGINT) * 1000000) // (ow * oh)
          |    AS BIGINT) AS out_mean_e6,
          |  CAST(q[1] AS BIGINT) AS px00
-         |FROM bl""".stripMargin,
-
-    // decimation replay over the same PCM16LE list decode; // floors
-    // signed pair sums exactly like the Scala leg's floorDiv
-    "multimodal_pcm_downsample" ->
-      """WITH m AS (
+         |FROM bl""".stripMargin)),
+    // X307: histogram entropy over the real PNG decode — the
+    // flat/degenerate-image screen, X205 integer-bits device
+    QuerySpec("multimodal_image_entropy", (s, d) =>
+      Multimodal.imageEntropy(s, d),
+      // entropy replay: the same pixel function, histogram by GROUP BY
+      // over the exploded levels, the X205 bits device for H
+      Oracle("""WITH m AS (
+        |  SELECT doc_id, text, length(text) AS len,
+        |    (length(text) % 64) + 1 AS w, (length(text) % 48) + 1 AS h
+        |  FROM documents WHERE length(text) > 0),
+        |px AS (
+        |  SELECT doc_id, w, h,
+        |    list_transform(range(0, w * h),
+        |      k -> ascii(text[(k % len) + 1:(k % len) + 1])) AS p
+        |  FROM m),
+        |cnt AS (
+        |  SELECT doc_id, pv, CAST(count(*) AS BIGINT) AS c
+        |  FROM (SELECT doc_id, unnest(p) AS pv FROM px)
+        |  GROUP BY 1, 2),
+        |agg AS (
+        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
+        |    CAST(count(*) AS BIGINT) AS n_levels,
+        |    CAST(SUM(c * length(format('{:b}', c))) AS BIGINT)
+        |      AS sum_cb
+        |  FROM cnt GROUP BY 1)
+        |SELECT doc_id, n AS n_pixels, n_levels,
+        |  CAST(((n * length(format('{:b}', n)) - sum_cb) * 1000000)
+        |    // n AS BIGINT) AS h_bits_e6,
+        |  CAST(length(format('{:b}', n_levels)) * 1000000 AS BIGINT)
+        |    AS max_bits_e6
+        |FROM agg""".stripMargin)),
+    // X295: 2:1 PCM decimation — floor pair means (floorDiv, signed),
+    // decimated-signal sum/peak evidence
+    QuerySpec("multimodal_pcm_downsample", (s, d) =>
+      Multimodal.pcmDownsample(s, d),
+      // decimation replay over the same PCM16LE list decode; // floors
+      // signed pair sums exactly like the Scala leg's floorDiv
+      Oracle("""WITH m AS (
         |  SELECT doc_id, text FROM documents WHERE length(text) >= 4),
         |s AS (
         |  SELECT doc_id, list_transform(range(1, length(text)//2 + 1),
@@ -381,21 +361,21 @@ object MultimodalQueries {
         |    AS BIGINT) AS sum_abs_out,
         |  CAST(list_max(list_transform(ds, x -> abs(x))) AS BIGINT)
         |    AS peak_out
-        |FROM q""".stripMargin,
-
-    // aHash replay: the same pixel function, cell assignment
-    // ((y·8)//h)·8 + (x·8)//w, integer cell means, global mean of
-    // means, bit = mean > gm; w/h < 8 drop (no full cell cover)
-    "multimodal_ahash" ->
-      s"""WITH $AhashCtes
+        |FROM q""".stripMargin)),
+    QuerySpec("multimodal_ahash", (s, d) => Multimodal.imageHashes(s, d),
+      // aHash replay: the same pixel function, cell assignment
+      // ((y·8)//h)·8 + (x·8)//w, integer cell means, global mean of
+      // means, bit = mean > gm; w/h < 8 drop (no full cell cover)
+      Oracle(s"""WITH $AhashCtes
          |SELECT doc_id,
          |  CAST(w AS BIGINT) AS img_w, CAST(h AS BIGINT) AS img_h,
          |  ahash, n_ones
-         |FROM ah""".stripMargin,
-
-    // block pigeonhole + per-position bitstring hamming over the same
-    // ah CTE; DISTINCT collapses multi-block candidate repeats
-    "multimodal_ahash_pairs" -> {
+         |FROM ah""".stripMargin)),
+    QuerySpec("multimodal_ahash_pairs", (s, d) =>
+      Multimodal.ahashPairs(Multimodal.imageHashes(s, d)),
+      // block pigeonhole + per-position bitstring hamming over the same
+      // ah CTE; DISTINCT collapses multi-block candidate repeats
+      Oracle({
       val blocks = Multimodal.AhashBlocks
       s"""WITH $AhashCtes,
          |seg AS (SELECT doc_id, ahash,
@@ -418,7 +398,7 @@ object MultimodalQueries {
          |  i -> a_h[CAST(i AS INT):CAST(i AS INT)]
          |    <> b_h[CAST(i AS INT):CAST(i AS INT)]))
          |  <= ${Multimodal.AhashMaxHamming}""".stripMargin
-    })
+    })))
 
   /** The pixel→cell-mean→bit chain ending in
     * `ah(doc_id, w, h, ahash, n_ones)` — shared by the hash oracle and

@@ -48,226 +48,6 @@ object TextQueries {
           col("ctrl_ppm") >= graft.text.TextAnalysis.CtrlPpmQuarantine,
           1L).otherwise(0L))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Reg.strict(
-    "text_token_counts" -> ((s, d) => docs(s, d).select(
-      col("doc_id"),
-      tokenCount(col("text")).as("n_tokens"),
-      bpeishTokenCount(col("text")).as("n_bpeish"))),
-
-    "text_quality_scores" -> ((s, d) => docs(s, d).select(
-      col("doc_id"),
-      length(col("text")).cast("long").as("len_chars"),
-      round(punctRatio(col("text")), 6).as("punct_ratio"),
-      round(stopwordRatio(col("text")), 6).as("stopword_ratio"),
-      qualityScore(col("text")).as("quality"))),
-
-    "text_lang_id" -> ((s, d) => docs(s, d).select(
-      col("doc_id"), col("lang"),
-      langId(col("text")).as("lang_pred"))),
-
-    // X261: lang-ID confusion matrix — the eval read for the X7 leg:
-    // per (tagged, predicted) cell the count and row-normalized ppm
-    // (the diagonal's share_ppm IS per-lang recall); |langs|²-grain
-    // map-side-combinable aggregates + one broadcast row-total join
-    "text_langid_confusion" -> ((s, d) => {
-      val cm = docs(s, d)
-        .select(col("lang"), langId(col("text")).as("lang_pred"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).cast("long").as("n"))
-      val tot = cm.groupBy(col("lang"))
-        .agg(sum(col("n")).cast("long").as("n_true"))
-      cm.join(broadcast(tot), Seq("lang"))
-        .withColumn("share_ppm", expr("n * 1000000 div n_true"))
-    }),
-
-    "text_fingerprints" -> ((s, d) => docs(s, d).select(
-      col("doc_id"),
-      fingerprintMd5(col("text")).as("fp_md5"),
-      rollingFingerprint(col("text")).as("fp_rolling"))),
-
-    // X252: encoding/mojibake ingest QC — per-doc U+FFFD count, C0/C1
-    // control ppm, quarantine verdict (see TextAnalysis scaladoc)
-    "text_encoding_qc" -> ((s, d) => encodingQc(s, d)),
-    // X253: the per-source rollup of X252 — the "which feed is
-    // transcoding garbage" triage view
-    "text_encoding_by_source" -> ((s, d) => encodingQc(s, d)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("is_quarantined")).cast("long").as("n_quarantined"),
-        sum(col("repl_count")).cast("long").as("repl_total"),
-        sum(col("ctrl_count")).cast("long").as("ctrl_total"),
-        sum(col("char_len")).cast("long").as("char_total"))
-      .withColumn("ctrl_ppm",
-        expr("ctrl_total * 1000000 div greatest(char_total, 1)"))),
-
-    // X254: Gopher-rule structural screen — published thresholds as
-    // shared constants, all-integer verdict (see TextAnalysis scaladoc)
-    "text_gopher_screen" -> ((s, d) => {
-      import graft.text.TextAnalysis._
-      docs(s, d).select(col("doc_id"),
-          tokenCount(col("text")).as("n_words"),
-          wordChars(col("text")).as("word_chars"),
-          alphaWordCount(col("text")).as("alpha_words"),
-          stopwordHits(col("text")).as("stop_hits"),
-          symbolCount(col("text")).as("sym_count"))
-        .withColumn("mean_wlen_e6",
-          expr("word_chars * 1000000 div greatest(n_words, 1)"))
-        .withColumn("alpha_ppm",
-          expr("alpha_words * 1000000 div greatest(n_words, 1)"))
-        .withColumn("sym_ppm",
-          expr("sym_count * 1000000 div greatest(n_words, 1)"))
-        .withColumn("passes_gopher",
-          when(col("n_words").between(GopherMinWords, GopherMaxWords) &&
-            col("mean_wlen_e6")
-              .between(GopherMinWlenE6, GopherMaxWlenE6) &&
-            col("alpha_ppm") >= GopherMinAlphaPpm &&
-            col("stop_hits") >= GopherMinStopHits &&
-            col("sym_ppm") <= GopherMaxSymPpm, 1L).otherwise(0L))
-        .drop("word_chars", "alpha_words", "sym_count")
-    }),
-
-    // X256: markup-density / boilerplate screen — tag ppm, anchor-text
-    // link ppm over visible chars, jusText-style verdict (see
-    // TextAnalysis scaladoc)
-    "text_markup_density" -> ((s, d) => {
-      import graft.text.TextAnalysis._
-      docs(s, d).select(col("doc_id"),
-          length(col("text")).cast("long").as("char_len"),
-          tagCount(col("text")).as("tag_count"),
-          tagChars(col("text")).as("tag_chars"),
-          linkChars(col("text")).as("link_chars"))
-        .withColumn("visible_chars",
-          (col("char_len") - col("tag_chars")).cast("long"))
-        .withColumn("tag_ppm",
-          expr("tag_chars * 1000000 div greatest(char_len, 1)"))
-        .withColumn("link_ppm",
-          expr("link_chars * 1000000 div greatest(visible_chars, 1)"))
-        .withColumn("is_boilerplate",
-          when(col("tag_ppm") >= TagPpmBoiler ||
-            col("link_ppm") >= LinkPpmBoiler, 1L).otherwise(0L))
-        .drop("tag_chars", "link_chars")
-    }),
-
-    "text_bm25" -> ((s, d) =>
-      graft.text.Bm25.score(Tables(s, d, "documents"))),
-
-    "text_repetition" -> ((s, d) =>
-      graft.text.CorpusStats.repetitionSignals(Tables(s, d, "documents"))),
-
-    "text_surprisal" -> ((s, d) =>
-      graft.text.CorpusStats.surprisalScores(docs(s, d))),
-    // X219: bigram conditional surprisal — the word-order-sensitive
-    // second-order leg of the perplexity quality filter
-    "text_bigram_surprisal" -> ((s, d) =>
-      graft.text.CorpusStats.bigramSurprisalScores(docs(s, d))),
-    // X308: Kneser-Ney-smoothed bigram surprisal (VERDICT r14 #5) —
-    // absolute discount D as an integer-ppm constant, continuation
-    // counts, one common-denominator integer rational per bigram type
-    "text_kn_surprisal" -> ((s, d) =>
-      graft.text.CorpusStats.knSurprisalScores(docs(s, d))),
-    // X312: Good-Turing frequency-of-frequencies per language — the
-    // unseen-mass (N1/N ppm) and discounted hapax count (2·N2/N1 e6)
-    "text_good_turing" -> ((s, d) =>
-      graft.text.CorpusStats.goodTuringProfile(docs(s, d))),
-    // X247: Church-Gale term burstiness — topical vs function-word
-    // separation from the tf/df ratio
-    "text_term_burstiness" -> ((s, d) =>
-      graft.text.CorpusStats.termBurstiness(docs(s, d))),
-    "text_vocab_growth" -> ((s, d) =>
-      graft.text.CorpusStats.vocabGrowth(docs(s, d))),
-    "text_dsir_weights" -> ((s, d) =>
-      graft.text.CorpusStats.dsirWeights(docs(s, d))),
-    "text_source_overlap" -> ((s, d) =>
-      graft.text.CorpusStats.sourceOverlap(docs(s, d))),
-    "text_ppl_buckets" -> ((s, d) =>
-      graft.text.CorpusStats.perplexityBuckets(docs(s, d))),
-    "text_vocab_drift" -> ((s, d) =>
-      graft.text.CorpusStats.vocabDrift(docs(s, d))),
-    "text_token_rarity" ->((s, d) =>
-      graft.text.CorpusStats.tokenRarity(Tables(s, d, "documents"))),
-
-    "text_cms_heavy_hitters" -> ((s, d) =>
-      graft.text.CorpusStats.cmsHeavyHitters(docs(s, d))),
-
-    "text_bpe_pair_counts" -> ((s, d) =>
-      graft.text.CorpusStats.bpePairCounts(docs(s, d))),
-
-    "text_bpe_train" -> ((s, d) => bpeArtifacts(s, d)._1),
-
-    "text_bpe_fertility" -> ((s, d) =>
-      graft.text.CorpusStats.bpeFertilityFrom(docs(s, d),
-        bpeArtifacts(s, d)._2)),
-
-    "text_vocab_topk" -> ((s, d) =>
-      graft.text.CorpusStats.vocabTopK(Tables(s, d, "documents"))),
-
-    // X202: per-source Zipf rank-frequency slope — integer-bits OLS
-    // through the X164 trend; slope near -1e6 = natural-language shape
-    "text_zipf_slope" -> ((s, d) =>
-      graft.text.CorpusStats.zipfSlope(Tables(s, d, "documents"))),
-
-    // X180: pairwise source-vocabulary overlap — the domain-
-    // similarity matrix behind mixture-weight decisions; vocabulary-
-    // sized frames, token-keyed intersection join
-    "text_source_vocab_overlap" -> ((s, d) =>
-      graft.text.CorpusStats.sourceVocabOverlap(
-        Tables(s, d, "documents"))),
-
-    // X168: Gini-impurity class balance per corpus slice — the
-    // label-quality screen before training; transcendental-free by
-    // construction (the CART impurity, not entropy)
-    "text_class_balance" -> ((s, d) =>
-      graft.text.CorpusStats.classBalance(
-        Tables(s, d, "documents"), "source", "lang")),
-
-    // X204: per-source hapax/type-token profile — vocabulary-health
-    // screen beside the Zipf slope (templated sources collapse the
-    // hapax tail; OCR noise inflates it)
-    "text_hapax_rate" -> ((s, d) =>
-      graft.text.CorpusStats.hapaxProfile(Tables(s, d, "documents"))),
-
-    // X205: per-source unigram entropy in integer bits — the
-    // transcendental-free information-density screen (the bits form
-    // IS the contract, same device as the Zipf/Hill statistics)
-    "text_token_entropy" -> ((s, d) =>
-      graft.text.CorpusStats.tokenEntropyBits(
-        Tables(s, d, "documents"))),
-
-    // X279: FORCAST readability grade per source — the
-    // punctuation-free readability formula (the normal form strips
-    // sentence punctuation, so FK's sentence term is degenerate);
-    // map-only higher-order-function counts, one keyed aggregate
-    "text_readability" -> ((s, d) =>
-      graft.text.CorpusStats.readability(docs(s, d))),
-
-    // X285: RAKE keyword extraction — top stopword-free phrases per
-    // source by summed deg/freq word scores, exact integer micro-units
-    "text_rake_keywords" -> ((s, d) =>
-      graft.text.CorpusStats.rakeKeywords(docs(s, d))),
-
-    "text_tfidf_topk" -> ((s, d) =>
-      graft.text.CorpusStats.tfIdfTopTerms(Tables(s, d, "documents"))),
-
-    "text_collocations" -> ((s, d) =>
-      graft.text.CorpusStats.collocations(Tables(s, d, "documents"))),
-
-    "text_oov_rate" -> ((s, d) =>
-      graft.text.CorpusStats.oovRate(Tables(s, d, "documents"))),
-
-    "text_dup_ngram_coverage" -> ((s, d) =>
-      graft.text.CorpusStats.dupNgramCoverage(Tables(s, d, "documents"))),
-
-    // incremental vocab: stored counts of the old corpus (doc_id % 4
-    // != 0) merged with the new batch's scan — must equal the full
-    // recomputation, which is what the oracle computes
-    "text_vocab_incremental" -> ((s, d) => {
-      val dd = Tables(s, d, "documents")
-      graft.text.CorpusStats.vocabMergeIncremental(
-        graft.text.CorpusStats.tokenCountsOf(
-          dd.filter(col("doc_id") % 4 =!= 0)),
-        dd.filter(col("doc_id") % 4 === 0))
-    }))
-
   // ---- DuckDB oracle SQL, generated from the same constants ----
 
   /** normalize(text) in DuckDB. */
@@ -406,36 +186,125 @@ object TextQueries {
        |        AS BIGINT) AS is_quarantined FROM p)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Reg.strict(
-    "text_token_counts" ->
-      s"""SELECT doc_id,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_token_counts", (s, d) => docs(s, d).select(
+      col("doc_id"),
+      tokenCount(col("text")).as("n_tokens"),
+      bpeishTokenCount(col("text")).as("n_bpeish")),
+      Oracle(s"""SELECT doc_id,
          |  CASE WHEN trim(text) = '' THEN 0
          |       ELSE len(${toksSql("text")}) END AS n_tokens,
          |  len(regexp_extract_all(text, '$BpeishPattern')) AS n_bpeish
-         |FROM documents""".stripMargin,
-
-    "text_quality_scores" ->
-      s"""SELECT doc_id,
+         |FROM documents""".stripMargin)),
+    QuerySpec("text_quality_scores", (s, d) => docs(s, d).select(
+      col("doc_id"),
+      length(col("text")).cast("long").as("len_chars"),
+      round(punctRatio(col("text")), 6).as("punct_ratio"),
+      round(stopwordRatio(col("text")), 6).as("stopword_ratio"),
+      qualityScore(col("text")).as("quality")),
+      Oracle(s"""SELECT doc_id,
          |  length(text) AS len_chars,
          |  ROUND($punctSql, 6) AS punct_ratio,
          |  ROUND($stopSql, 6) AS stopword_ratio,
          |  $qualitySql AS quality
-         |FROM documents""".stripMargin,
-
-    "text_lang_id" -> langPredSql,
-
-    // the same shared lang-pred SELECT, aggregated to cells
-    "text_langid_confusion" ->
-      s"""WITH p AS ($langPredSql),
+         |FROM documents""".stripMargin)),
+    QuerySpec("text_lang_id", (s, d) => docs(s, d).select(
+      col("doc_id"), col("lang"),
+      langId(col("text")).as("lang_pred")),
+      Oracle(langPredSql)),
+    // X261: lang-ID confusion matrix — the eval read for the X7 leg:
+    // per (tagged, predicted) cell the count and row-normalized ppm
+    // (the diagonal's share_ppm IS per-lang recall); |langs|²-grain
+    // map-side-combinable aggregates + one broadcast row-total join
+    QuerySpec("text_langid_confusion", (s, d) => {
+      val cm = docs(s, d)
+        .select(col("lang"), langId(col("text")).as("lang_pred"))
+        .groupBy(col("lang"), col("lang_pred"))
+        .agg(count(lit(1)).cast("long").as("n"))
+      val tot = cm.groupBy(col("lang"))
+        .agg(sum(col("n")).cast("long").as("n_true"))
+      cm.join(broadcast(tot), Seq("lang"))
+        .withColumn("share_ppm", expr("n * 1000000 div n_true"))
+    },
+      // the same shared lang-pred SELECT, aggregated to cells
+      Oracle(s"""WITH p AS ($langPredSql),
          |cm AS (SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
          |       FROM p GROUP BY 1, 2),
          |t AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS n_true
          |      FROM cm GROUP BY 1)
          |SELECT cm.lang, cm.lang_pred, cm.n, t.n_true,
          |  CAST(cm.n * 1000000 // t.n_true AS BIGINT) AS share_ppm
-         |FROM cm JOIN t ON cm.lang = t.lang""".stripMargin,
-
-    "text_gopher_screen" -> {
+         |FROM cm JOIN t ON cm.lang = t.lang""".stripMargin)),
+    QuerySpec("text_fingerprints", (s, d) => docs(s, d).select(
+      col("doc_id"),
+      fingerprintMd5(col("text")).as("fp_md5"),
+      rollingFingerprint(col("text")).as("fp_rolling")),
+      Oracle({
+      val t = s"substring(${normSql("text")}, 1, 64)"
+      s"""SELECT doc_id,
+         |  md5(${normSql("text")}) AS fp_md5,
+         |  list_reduce(
+         |    [CAST(0 AS BIGINT)] ||
+         |    CASE WHEN length(t) = 0 THEN CAST([] AS BIGINT[])
+         |         ELSE list_transform(range(1, length(t) + 1),
+         |                i -> CAST(ascii(substring(t, i, 1)) AS BIGINT)) END,
+         |    (acc, x) -> (acc * 31 + x) % 2147483647) AS fp_rolling
+         |FROM (SELECT doc_id, text, $t AS t FROM documents)""".stripMargin
+    })),
+    // X252: encoding/mojibake ingest QC — per-doc U+FFFD count, C0/C1
+    // control ppm, quarantine verdict (see TextAnalysis scaladoc)
+    QuerySpec("text_encoding_qc", (s, d) => encodingQc(s, d),
+      Oracle(s"""WITH $EncodingQcCte
+         |SELECT doc_id, source, char_len, repl_count, ctrl_count,
+         |  ctrl_ppm, is_quarantined
+         |FROM q""".stripMargin)),
+    // X253: the per-source rollup of X252 — the "which feed is
+    // transcoding garbage" triage view
+    QuerySpec("text_encoding_by_source", (s, d) => encodingQc(s, d)
+      .groupBy(col("source"))
+      .agg(count(lit(1)).cast("long").as("n_docs"),
+        sum(col("is_quarantined")).cast("long").as("n_quarantined"),
+        sum(col("repl_count")).cast("long").as("repl_total"),
+        sum(col("ctrl_count")).cast("long").as("ctrl_total"),
+        sum(col("char_len")).cast("long").as("char_total"))
+      .withColumn("ctrl_ppm",
+        expr("ctrl_total * 1000000 div greatest(char_total, 1)")),
+      Oracle(s"""WITH $EncodingQcCte
+         |SELECT source,
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(is_quarantined) AS BIGINT) AS n_quarantined,
+         |  CAST(sum(repl_count) AS BIGINT) AS repl_total,
+         |  CAST(sum(ctrl_count) AS BIGINT) AS ctrl_total,
+         |  CAST(sum(char_len) AS BIGINT) AS char_total,
+         |  CAST((sum(ctrl_count) * 1000000) // greatest(sum(char_len), 1)
+         |    AS BIGINT) AS ctrl_ppm
+         |FROM q GROUP BY source""".stripMargin)),
+    // X254: Gopher-rule structural screen — published thresholds as
+    // shared constants, all-integer verdict (see TextAnalysis scaladoc)
+    QuerySpec("text_gopher_screen", (s, d) => {
+      import graft.text.TextAnalysis._
+      docs(s, d).select(col("doc_id"),
+          tokenCount(col("text")).as("n_words"),
+          wordChars(col("text")).as("word_chars"),
+          alphaWordCount(col("text")).as("alpha_words"),
+          stopwordHits(col("text")).as("stop_hits"),
+          symbolCount(col("text")).as("sym_count"))
+        .withColumn("mean_wlen_e6",
+          expr("word_chars * 1000000 div greatest(n_words, 1)"))
+        .withColumn("alpha_ppm",
+          expr("alpha_words * 1000000 div greatest(n_words, 1)"))
+        .withColumn("sym_ppm",
+          expr("sym_count * 1000000 div greatest(n_words, 1)"))
+        .withColumn("passes_gopher",
+          when(col("n_words").between(GopherMinWords, GopherMaxWords) &&
+            col("mean_wlen_e6")
+              .between(GopherMinWlenE6, GopherMaxWlenE6) &&
+            col("alpha_ppm") >= GopherMinAlphaPpm &&
+            col("stop_hits") >= GopherMinStopHits &&
+            col("sym_ppm") <= GopherMaxSymPpm, 1L).otherwise(0L))
+        .drop("word_chars", "alpha_words", "sym_count")
+    },
+      Oracle({
       import graft.text.TextAnalysis._
       val stopSum = LangMarkers.head._2.map(m =>
         s"(CASE WHEN list_contains(wl, '$m') THEN 1 ELSE 0 END)")
@@ -480,9 +349,29 @@ object TextQueries {
          |       AND sym_ppm <= $GopherMaxSymPpm
          |       THEN 1 ELSE 0 END AS BIGINT) AS passes_gopher
          |FROM r""".stripMargin
+    })),
+    // X256: markup-density / boilerplate screen — tag ppm, anchor-text
+    // link ppm over visible chars, jusText-style verdict (see
+    // TextAnalysis scaladoc)
+    QuerySpec("text_markup_density", (s, d) => {
+      import graft.text.TextAnalysis._
+      docs(s, d).select(col("doc_id"),
+          length(col("text")).cast("long").as("char_len"),
+          tagCount(col("text")).as("tag_count"),
+          tagChars(col("text")).as("tag_chars"),
+          linkChars(col("text")).as("link_chars"))
+        .withColumn("visible_chars",
+          (col("char_len") - col("tag_chars")).cast("long"))
+        .withColumn("tag_ppm",
+          expr("tag_chars * 1000000 div greatest(char_len, 1)"))
+        .withColumn("link_ppm",
+          expr("link_chars * 1000000 div greatest(visible_chars, 1)"))
+        .withColumn("is_boilerplate",
+          when(col("tag_ppm") >= TagPpmBoiler ||
+            col("link_ppm") >= LinkPpmBoiler, 1L).otherwise(0L))
+        .drop("tag_chars", "link_chars")
     },
-
-    "text_markup_density" -> {
+      Oracle({
       import graft.text.TextAnalysis._
       s"""WITH m AS (
          |  SELECT doc_id,
@@ -512,45 +401,15 @@ object TextQueries {
          |       OR link_ppm >= $LinkPpmBoiler THEN 1 ELSE 0 END
          |    AS BIGINT) AS is_boilerplate
          |FROM r""".stripMargin
-    },
-
-    "text_encoding_qc" ->
-      s"""WITH $EncodingQcCte
-         |SELECT doc_id, source, char_len, repl_count, ctrl_count,
-         |  ctrl_ppm, is_quarantined
-         |FROM q""".stripMargin,
-
-    "text_encoding_by_source" ->
-      s"""WITH $EncodingQcCte
-         |SELECT source,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(is_quarantined) AS BIGINT) AS n_quarantined,
-         |  CAST(sum(repl_count) AS BIGINT) AS repl_total,
-         |  CAST(sum(ctrl_count) AS BIGINT) AS ctrl_total,
-         |  CAST(sum(char_len) AS BIGINT) AS char_total,
-         |  CAST((sum(ctrl_count) * 1000000) // greatest(sum(char_len), 1)
-         |    AS BIGINT) AS ctrl_ppm
-         |FROM q GROUP BY source""".stripMargin,
-
-    "text_fingerprints" -> {
-      val t = s"substring(${normSql("text")}, 1, 64)"
-      s"""SELECT doc_id,
-         |  md5(${normSql("text")}) AS fp_md5,
-         |  list_reduce(
-         |    [CAST(0 AS BIGINT)] ||
-         |    CASE WHEN length(t) = 0 THEN CAST([] AS BIGINT[])
-         |         ELSE list_transform(range(1, length(t) + 1),
-         |                i -> CAST(ascii(substring(t, i, 1)) AS BIGINT)) END,
-         |    (acc, x) -> (acc * 31 + x) % 2147483647) AS fp_rolling
-         |FROM (SELECT doc_id, text, $t AS t FROM documents)""".stripMargin
-    },
-
-    // BM25 with odds-form idf (no ln — see graft.text.Bm25 scaladoc);
-    // constants interpolated PRE-COMPUTED from the Scala doubles so
-    // both engines compare/multiply the identical IEEE values, and
-    // every intermediate is cast to DOUBLE up front (DuckDB otherwise
-    // folds the +0.5 arithmetic in DECIMAL)
-    "text_bm25" -> {
+    })),
+    QuerySpec("text_bm25", (s, d) =>
+      graft.text.Bm25.score(Tables(s, d, "documents")),
+      // BM25 with odds-form idf (no ln — see graft.text.Bm25 scaladoc);
+      // constants interpolated PRE-COMPUTED from the Scala doubles so
+      // both engines compare/multiply the identical IEEE values, and
+      // every intermediate is cast to DOUBLE up front (DuckDB otherwise
+      // folds the +0.5 arithmetic in DECIMAL)
+      Oracle({
       import graft.text.Bm25.{K1, B, QueryTerms}
       val termList = graft.text.Bm25.normalizeTerms(QueryTerms)
         .map(t => s"'$t'").mkString(", ")
@@ -572,12 +431,12 @@ object TextQueries {
          |    6) AS bm25
          |FROM tf JOIN d USING (term) CROSS JOIN st
          |GROUP BY doc_id""".stripMargin
-    },
-
-    // ratios as integer ppm via // — integer-exact in both engines
-    // (values non-negative); COALESCE folds token-less docs to zeros
-    "text_repetition" ->
-      s"""WITH $TokCte,
+    })),
+    QuerySpec("text_repetition", (s, d) =>
+      graft.text.CorpusStats.repetitionSignals(Tables(s, d, "documents")),
+      // ratios as integer ppm via // — integer-exact in both engines
+      // (values non-negative); COALESCE folds token-less docs to zeros
+      Oracle(s"""WITH $TokCte,
          |uni AS (SELECT doc_id, unnest(w) AS tok FROM tw),
          |uc AS (SELECT doc_id, tok, count(*) AS c FROM uni GROUP BY 1, 2),
          |us AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -603,12 +462,496 @@ object TextQueries {
          |  CAST(COALESCE((bs.top_bigram * 1000000) // bs.n_bigrams, 0)
          |    AS BIGINT) AS top_bigram_frac_e6
          |FROM documents d
-         |LEFT JOIN us USING (doc_id) LEFT JOIN bs USING (doc_id)""".stripMargin,
-
-    // same (source, token)-grain counts; ratios as integer ppm via //
-    // (values non-negative, so // ≡ div)
-    "text_hapax_rate" ->
+         |LEFT JOIN us USING (doc_id) LEFT JOIN bs USING (doc_id)""".stripMargin)),
+    QuerySpec("text_surprisal", (s, d) =>
+      graft.text.CorpusStats.surprisalScores(docs(s, d)),
+      // integer surprisal: bit_length(N div ctf) per token (length of
+      // the binary spelling — the X95 bucket function), summed per doc;
+      // same vocab/join topology as text_token_rarity
+      Oracle(s"""WITH $TokCte,
+         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
+         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
+         |      FROM ex GROUP BY 1),
+         |t AS (SELECT CAST(SUM(ctf) AS BIGINT) AS n_total FROM v),
+         |a AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+         |        CAST(SUM(length(format('{:b}', t.n_total // v.ctf)))
+         |          AS BIGINT) AS total_bits
+         |      FROM ex e JOIN v USING (tok) CROSS JOIN t GROUP BY 1)
+         |SELECT d.doc_id,
+         |  COALESCE(a.n_tokens, 0) AS n_tokens,
+         |  COALESCE(a.total_bits, 0) AS total_bits,
+         |  CAST(COALESCE((a.total_bits * 1000000) // a.n_tokens, 0)
+         |    AS BIGINT) AS bits_per_token_e6
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin)),
+    // X219: bigram conditional surprisal — the word-order-sensitive
+    // second-order leg of the perplexity quality filter
+    QuerySpec("text_bigram_surprisal", (s, d) =>
+      graft.text.CorpusStats.bigramSurprisalScores(docs(s, d)),
+      // same bigram extraction as text_collocations, bits at bigram-TYPE
+      // grain conditioned on the head's bigram count, instance rollup
+      Oracle(s"""WITH $TokCte,
+         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
+         |         i -> w[i] || ' ' || w[i + 1])) AS bigram
+         |       FROM tw),
+         |bi AS (SELECT bigram, CAST(count(*) AS BIGINT) AS n_ab
+         |       FROM bg GROUP BY 1),
+         |hd AS (SELECT string_split(bigram, ' ')[1] AS a,
+         |         CAST(SUM(n_ab) AS BIGINT) AS n_a
+         |       FROM bi GROUP BY 1),
+         |ty AS (SELECT bigram,
+         |         CAST(length(format('{:b}', n_a // n_ab)) AS BIGINT)
+         |           AS bits
+         |       FROM bi JOIN hd ON string_split(bigram, ' ')[1] = hd.a),
+         |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |        CAST(SUM(bits) AS BIGINT) AS total_bits
+         |      FROM bg JOIN ty USING (bigram) GROUP BY 1)
+         |SELECT d.doc_id,
+         |  COALESCE(a.n_bigrams, 0) AS n_bigrams,
+         |  COALESCE(a.total_bits, 0) AS total_bits,
+         |  CAST(COALESCE((a.total_bits * 1000000) // a.n_bigrams, 0)
+         |    AS BIGINT) AS bits_per_bigram_e6
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin)),
+    // X308: Kneser-Ney-smoothed bigram surprisal (VERDICT r14 #5) —
+    // absolute discount D as an integer-ppm constant, continuation
+    // counts, one common-denominator integer rational per bigram type
+    QuerySpec("text_kn_surprisal", (s, d) =>
+      graft.text.CorpusStats.knSurprisalScores(docs(s, d)),
+      // same bigram extraction; interpolated Kneser-Ney with D as an
+      // integer-ppm constant over one common denominator — num/den are
+      // exact count rationals, bits = the X110 floor-log2 device
+      Oracle({
+      val dp = graft.text.CorpusStats.KnDiscountPpm
+      s"""WITH $TokCte,
+         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
+         |         i -> w[i] || ' ' || w[i + 1])) AS bigram
+         |       FROM tw),
+         |bi AS (SELECT bigram,
+         |         string_split(bigram, ' ')[1] AS a,
+         |         string_split(bigram, ' ')[2] AS b,
+         |         CAST(count(*) AS BIGINT) AS n_ab
+         |       FROM bg GROUP BY 1, 2, 3),
+         |hd AS (SELECT a, CAST(SUM(n_ab) AS BIGINT) AS n_a,
+         |         CAST(count(*) AS BIGINT) AS t_a
+         |       FROM bi GROUP BY 1),
+         |tl AS (SELECT b, CAST(count(*) AS BIGINT) AS t_b
+         |       FROM bi GROUP BY 1),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS tt FROM bi),
+         |ty AS (SELECT bigram,
+         |         CAST(length(format('{:b}',
+         |           (n_a * 1000000 * tt) //
+         |           (greatest(n_ab * 1000000 - $dp, 0) * tt +
+         |            $dp * t_a * t_b))) AS BIGINT) AS bits
+         |       FROM bi JOIN hd USING (a) JOIN tl USING (b), tot),
+         |ag AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |         CAST(SUM(bits) AS BIGINT) AS total_bits
+         |       FROM bg JOIN ty USING (bigram) GROUP BY 1)
+         |SELECT d.doc_id,
+         |  COALESCE(ag.n_bigrams, 0) AS n_bigrams,
+         |  COALESCE(ag.total_bits, 0) AS total_bits,
+         |  CAST(COALESCE((ag.total_bits * 1000000) // ag.n_bigrams, 0)
+         |    AS BIGINT) AS bits_per_bigram_e6
+         |FROM documents d LEFT JOIN ag USING (doc_id)""".stripMargin
+    })),
+    // X312: Good-Turing frequency-of-frequencies per language — the
+    // unseen-mass (N1/N ppm) and discounted hapax count (2·N2/N1 e6)
+    QuerySpec("text_good_turing", (s, d) =>
+      graft.text.CorpusStats.goodTuringProfile(docs(s, d)),
+      // same normalized tokenization at (lang, term) grain; frequency-
+      // of-frequencies folded into conditional sums, ppm/e6 floor-divs
+      Oracle(s"""WITH ex AS (
+         |  SELECT lang,
+         |         unnest(string_split(${normSql("text")}, ' ')) AS tok
+         |  FROM documents WHERE ${normSql("text")} <> ''),
+         |tf AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS c
+         |       FROM ex GROUP BY 1, 2),
+         |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_types,
+         |        CAST(SUM(c) AS BIGINT) AS n_tokens,
+         |        CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)
+         |          AS BIGINT) AS n_hapax,
+         |        CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END)
+         |          AS BIGINT) AS n_dis
+         |      FROM tf GROUP BY 1)
+         |SELECT lang, n_tokens, n_types, n_hapax, n_dis,
+         |  CAST((n_hapax * 1000000) // n_tokens AS BIGINT)
+         |    AS unseen_mass_ppm,
+         |  CAST(CASE WHEN n_hapax = 0 THEN 0
+         |       ELSE (2 * n_dis * 1000000) // n_hapax END AS BIGINT)
+         |    AS c1_star_e6
+         |FROM g""".stripMargin)),
+    // X247: Church-Gale term burstiness — topical vs function-word
+    // separation from the tf/df ratio
+    QuerySpec("text_term_burstiness", (s, d) =>
+      graft.text.CorpusStats.termBurstiness(docs(s, d)),
+      // (doc, term) tf rollup then term grain — df is a plain row count
+      Oracle(s"""WITH $TokCte,
+         |tf AS (SELECT doc_id, unnest(w) AS term FROM tw),
+         |dt AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf_doc
+         |       FROM tf GROUP BY 1, 2),
+         |g AS (SELECT term, CAST(SUM(tf_doc) AS BIGINT) AS tf,
+         |        CAST(count(*) AS BIGINT) AS df
+         |      FROM dt GROUP BY 1)
+         |SELECT term, tf, df,
+         |  CAST((tf * 1000000) // df AS BIGINT) AS burst_ppm
+         |FROM g WHERE df >= ${graft.text.CorpusStats.BurstMinDf}"""
+        .stripMargin)),
+    QuerySpec("text_vocab_growth", (s, d) =>
+      graft.text.CorpusStats.vocabGrowth(docs(s, d)),
+      // id-range buckets ((doc_id·B) div (max_id+1) — no global sort),
+      // first-appearance bucket per token, 10-row cumulative rollup
+      Oracle({
+      val b = graft.text.CorpusStats.GrowthBuckets
+      s"""WITH $TokCte,
+         |mx AS (SELECT MAX(doc_id) AS max_id FROM documents),
+         |db AS (SELECT (d.doc_id * $b) // (mx.max_id + 1) AS bkt
+         |       FROM documents d CROSS JOIN mx),
+         |dc AS (SELECT bkt, CAST(count(*) AS BIGINT) AS n_docs
+         |       FROM db GROUP BY 1),
+         |ex AS (SELECT (tw.doc_id * $b) // (mx.max_id + 1) AS bkt,
+         |         unnest(w) AS tok
+         |       FROM tw CROSS JOIN mx),
+         |tc AS (SELECT bkt, CAST(count(*) AS BIGINT) AS n_tokens
+         |       FROM ex GROUP BY 1),
+         |nv AS (SELECT bkt, CAST(count(*) AS BIGINT) AS new_vocab
+         |       FROM (SELECT tok, MIN(bkt) AS bkt FROM ex GROUP BY 1)
+         |       GROUP BY 1),
+         |j AS (SELECT dc.bkt, dc.n_docs,
+         |        COALESCE(tc.n_tokens, 0) AS n_tokens,
+         |        COALESCE(nv.new_vocab, 0) AS new_vocab
+         |      FROM dc LEFT JOIN tc USING (bkt)
+         |            LEFT JOIN nv USING (bkt))
+         |SELECT bkt, n_docs, n_tokens, new_vocab,
+         |  CAST(SUM(n_tokens) OVER (ORDER BY bkt) AS BIGINT) AS cum_tokens,
+         |  CAST(SUM(new_vocab) OVER (ORDER BY bkt) AS BIGINT) AS cum_vocab
+         |FROM j""".stripMargin
+    })),
+    QuerySpec("text_dsir_weights", (s, d) =>
+      graft.text.CorpusStats.dsirWeights(docs(s, d)),
+      // DSIR log-ratio in integer bits (surprisal_raw − surprisal_tgt,
+      // add-one smoothed target); offset div for the possibly-negative
+      // mean (see CorpusStats.dsirWeights)
+      Oracle({
+      val lang = graft.text.CorpusStats.DsirTargetLang
+      s"""WITH $TokCte,
+         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
+         |r AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
+         |      FROM ex GROUP BY 1),
+         |ti AS (SELECT doc_id FROM documents WHERE lang = '$lang'),
+         |t AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf_t
+         |      FROM ex JOIN ti USING (doc_id) GROUP BY 1),
+         |tot AS (SELECT
+         |  (SELECT CAST(SUM(ctf) AS BIGINT) FROM r) AS n_raw,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM r) AS v_raw,
+         |  (SELECT CAST(COALESCE(SUM(ctf_t), 0) AS BIGINT) FROM t)
+         |    AS n_tgt),
+         |b AS (SELECT e.doc_id,
+         |        CAST(length(format('{:b}', tot.n_raw // r.ctf))
+         |          AS BIGINT) AS rb,
+         |        CAST(length(format('{:b}', (tot.n_tgt + tot.v_raw)
+         |          // (COALESCE(t.ctf_t, 0) + 1))) AS BIGINT) AS tb
+         |      FROM ex e JOIN r USING (tok) LEFT JOIN t USING (tok)
+         |           CROSS JOIN tot),
+         |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+         |        CAST(SUM(rb) AS BIGINT) AS raw_bits,
+         |        CAST(SUM(tb) AS BIGINT) AS tgt_bits
+         |      FROM b GROUP BY 1)
+         |SELECT d.doc_id,
+         |  COALESCE(a.n_tokens, 0) AS n_tokens,
+         |  COALESCE(a.raw_bits, 0) AS raw_bits,
+         |  COALESCE(a.tgt_bits, 0) AS tgt_bits,
+         |  COALESCE(a.raw_bits - a.tgt_bits, 0) AS dsir_bits,
+         |  CAST(COALESCE(
+         |    ((a.raw_bits - a.tgt_bits + 64 * a.n_tokens) * 1000000)
+         |      // a.n_tokens - 64000000, 0) AS BIGINT)
+         |    AS dsir_per_tok_e6
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin
+    })),
+    QuerySpec("text_source_overlap", (s, d) =>
+      graft.text.CorpusStats.sourceOverlap(docs(s, d)),
+      // top-K token sets per source ((n desc, tok asc) rank), pairwise
+      // shared-token Jaccard in ppm over the K-sized sets only
+      Oracle({
+      val k = graft.text.CorpusStats.OverlapK
       s"""WITH tw AS (
+         |  SELECT source,
+         |    CASE WHEN ${normSql("text")} = ''
+         |         THEN CAST([] AS VARCHAR[])
+         |         ELSE string_split(${normSql("text")}, ' ') END AS w
+         |  FROM documents),
+         |ex AS (SELECT source, unnest(w) AS tok FROM tw),
+         |c AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n
+         |      FROM ex GROUP BY 1, 2),
+         |top AS (SELECT source, tok FROM (
+         |    SELECT source, tok, row_number() OVER (
+         |      PARTITION BY source ORDER BY n DESC, tok ASC) AS rk
+         |    FROM c) WHERE rk <= $k),
+         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS s
+         |       FROM top GROUP BY 1),
+         |sh AS (SELECT a.source AS a_source, b.source AS b_source,
+         |         CAST(count(*) AS BIGINT) AS shared
+         |       FROM top a JOIN top b
+         |         ON a.tok = b.tok AND a.source < b.source
+         |       GROUP BY 1, 2)
+         |SELECT sh.a_source, sh.b_source, sh.shared,
+         |  CAST((sh.shared * 1000000) // (sa.s + sb.s - sh.shared)
+         |    AS BIGINT) AS jaccard_ppm
+         |FROM sh JOIN sz sa ON sh.a_source = sa.source
+         |        JOIN sz sb ON sh.b_source = sb.source""".stripMargin
+    })),
+    QuerySpec("text_ppl_buckets", (s, d) =>
+      graft.text.CorpusStats.perplexityBuckets(docs(s, d)),
+      Oracle(s"""WITH $TokCte,
+         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
+         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
+         |      FROM ex GROUP BY 1),
+         |t AS (SELECT CAST(SUM(ctf) AS BIGINT) AS n_total FROM v),
+         |a AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+         |        CAST(SUM(length(format('{:b}', t.n_total // v.ctf)))
+         |          AS BIGINT) AS total_bits
+         |      FROM ex e JOIN v USING (tok) CROSS JOIN t GROUP BY 1),
+         |s AS (SELECT d.doc_id, d.lang,
+         |        CAST(COALESCE((a.total_bits * 1000000) // a.n_tokens,
+         |          0) AS BIGINT) AS bits_per_token_e6
+         |      FROM documents d LEFT JOIN a USING (doc_id)),
+         |r AS (SELECT doc_id, lang, bits_per_token_e6,
+         |        CAST(row_number() OVER (PARTITION BY lang
+         |          ORDER BY bits_per_token_e6, doc_id) AS BIGINT) AS rk,
+         |        CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
+         |      FROM s)
+         |SELECT doc_id, lang, bits_per_token_e6,
+         |  CASE ((rk - 1) * 3) // n WHEN 0 THEN 'head'
+         |       WHEN 1 THEN 'middle' ELSE 'tail' END AS ppl_bucket
+         |FROM r""".stripMargin)),
+    QuerySpec("text_vocab_drift", (s, d) =>
+      graft.text.CorpusStats.vocabDrift(docs(s, d)),
+      // doc-parity halves, full-outer token join, cross-multiplied
+      // exact-integer TV contributions, (contrib desc, tok asc) top-K
+      Oracle({
+      val k = graft.text.CorpusStats.DriftK
+      s"""WITH $TokCte,
+         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
+         |s0 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c0
+         |       FROM ex WHERE doc_id % 2 = 0 GROUP BY 1),
+         |s1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
+         |       FROM ex WHERE doc_id % 2 = 1 GROUP BY 1),
+         |j AS (SELECT COALESCE(s0.tok, s1.tok) AS tok,
+         |        COALESCE(c0, 0) AS c0, COALESCE(c1, 0) AS c1
+         |      FROM s0 FULL OUTER JOIN s1 ON s0.tok = s1.tok),
+         |t AS (SELECT CAST(SUM(c0) AS BIGINT) AS n0,
+         |             CAST(SUM(c1) AS BIGINT) AS n1
+         |      FROM j),
+         |r AS (SELECT j.tok, j.c0, j.c1,
+         |        abs(j.c0 * t.n1 - j.c1 * t.n0) AS contrib
+         |      FROM j CROSS JOIN t),
+         |rk AS (SELECT tok, c0, c1, CAST(contrib AS BIGINT) AS contrib,
+         |         CAST(row_number() OVER (
+         |           ORDER BY contrib DESC, tok ASC) AS BIGINT) AS rk
+         |       FROM r)
+         |SELECT rk, tok, c0, c1, contrib FROM rk WHERE rk <= $k""".stripMargin
+    })),
+    QuerySpec("text_token_rarity", (s, d) =>
+      graft.text.CorpusStats.tokenRarity(Tables(s, d, "documents")),
+      Oracle(s"""WITH $TokCte,
+         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
+         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
+         |      FROM ex GROUP BY 1),
+         |a AS (SELECT e.doc_id, count(*) AS n_tokens,
+         |             MIN(v.ctf) AS min_corpus_tf,
+         |             CAST(SUM(v.ctf) AS BIGINT) AS sum_tf
+         |      FROM ex e JOIN v USING (tok) GROUP BY 1)
+         |SELECT d.doc_id,
+         |  COALESCE(a.n_tokens, 0) AS n_tokens,
+         |  COALESCE(a.min_corpus_tf, 0) AS min_corpus_tf,
+         |  CAST(COALESCE((a.sum_tf * 1000000) // a.n_tokens, 0) AS BIGINT)
+         |    AS mean_corpus_tf_e6
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin)),
+    QuerySpec("text_cms_heavy_hitters", (s, d) =>
+      graft.text.CorpusStats.cmsHeavyHitters(docs(s, d)),
+      // the oracle builds the IDENTICAL count-min sketch (same md5-hex8
+      // base, same mixers, same d×w geometry) directly over the global
+      // token stream; the Spark side merges per-source partial sketches —
+      // the hash-match is the mergeability proof (counter addition)
+      Oracle({
+      import graft.text.CorpusStats.{CmsDepth, CmsWidth, CmsK}
+      val base = s"(${OracleSql.hex8("md5(tok)")} % 2147483647)"
+      s"""WITH $TokCte,
+         |ex AS (SELECT unnest(w) AS tok FROM tw),
+         |cells AS (
+         |  SELECT j, ${OracleSql.mix("j", base)} % $CmsWidth AS bucket
+         |  FROM ex, range(0, $CmsDepth) t(j)),
+         |sk AS (
+         |  SELECT j, bucket, CAST(count(*) AS BIGINT) AS cnt
+         |  FROM cells GROUP BY 1, 2),
+         |top AS (
+         |  SELECT tok, CAST(count(*) AS BIGINT) AS n_exact
+         |  FROM ex GROUP BY 1 ORDER BY n_exact DESC, tok LIMIT $CmsK),
+         |probes AS (
+         |  SELECT tok, n_exact, j,
+         |    ${OracleSql.mix("j", base)} % $CmsWidth AS bucket
+         |  FROM top, range(0, $CmsDepth) t(j)),
+         |est AS (
+         |  SELECT p.tok AS token, p.n_exact,
+         |    CAST(min(s.cnt) AS BIGINT) AS est_cms
+         |  FROM probes p JOIN sk s USING (j, bucket)
+         |  GROUP BY 1, 2)
+         |SELECT token, n_exact, est_cms,
+         |  CAST(row_number() OVER (ORDER BY n_exact DESC, token)
+         |    AS BIGINT) AS rank
+         |FROM est""".stripMargin
+    })),
+    QuerySpec("text_bpe_pair_counts", (s, d) =>
+      graft.text.CorpusStats.bpePairCounts(docs(s, d)),
+      // BPE inner loop over the DISTINCT-token frequency table: adjacent
+      // pairs as 2-char substrings at ascending positions, weighted by
+      // token frequency — identical substring semantics in both engines
+      Oracle(s"""WITH $TokCte,
+         |wc AS (
+         |  SELECT token, CAST(count(*) AS BIGINT) AS n
+         |  FROM (SELECT unnest(w) AS token FROM tw) GROUP BY 1),
+         |pr AS (
+         |  SELECT unnest(list_transform(range(1, length(token)), i ->
+         |    substring(token, CAST(i AS INT), 2))) AS pair, n
+         |  FROM wc WHERE length(token) >= 2),
+         |agg AS (
+         |  SELECT pair, CAST(sum(n) AS BIGINT) AS w
+         |  FROM pr GROUP BY 1
+         |  ORDER BY w DESC, pair LIMIT ${graft.text.CorpusStats.BpeK})
+         |SELECT pair, w,
+         |  CAST(row_number() OVER (ORDER BY w DESC, pair) AS BIGINT) AS rank
+         |FROM agg""".stripMargin)),
+    QuerySpec("text_bpe_train", (s, d) => bpeArtifacts(s, d)._1,
+      // full BPE rounds unrolled as CTEs (the PageRank prStep pattern):
+      // per round — pair counts over the symbol table, top-1 by
+      // (w desc, pair), matches with overlap chains resolved by the
+      // pos − row_number islands key (odd ranks merge = greedy
+      // left-to-right), consumed second symbols dropped, positions
+      // reindexed. Identical windowed set logic to bpeTrainMerges.
+      Oracle({
+      val rounds = graft.text.CorpusStats.BpeRounds
+      s"""WITH $TokCte,
+         |${bpeCtes(rounds)}
+         |${(1 to rounds).map(i =>
+             s"SELECT CAST($i AS BIGINT) AS round, pr AS pair, w FROM t$i")
+             .mkString("\nUNION ALL\n")}""".stripMargin
+    })),
+    QuerySpec("text_bpe_fertility", (s, d) =>
+      graft.text.CorpusStats.bpeFertilityFrom(docs(s, d),
+        bpeArtifacts(s, d)._2),
+      // fertility of the trained merges: post-merge symbol counts are a
+      // VOCAB-sized aggregate of the round-$BpeRounds symbol table; the
+      // per-doc rollup joins (doc, token) occurrences on the token key
+      Oracle({
+      val rounds = graft.text.CorpusStats.BpeRounds
+      s"""WITH $TokCte,
+         |${bpeCtes(rounds)},
+         |ns AS (SELECT tid, CAST(count(*) AS BIGINT) AS n_syms
+         |       FROM s$rounds GROUP BY 1),
+         |dt AS (SELECT doc_id, unnest(w) AS tid FROM tw),
+         |dc AS (SELECT doc_id, tid, CAST(count(*) AS BIGINT) AS cnt
+         |       FROM dt GROUP BY 1, 2)
+         |SELECT doc_id,
+         |  CAST(sum(cnt) AS BIGINT) AS n_words,
+         |  CAST(sum(cnt * n_syms) AS BIGINT) AS n_bpe_tokens,
+         |  (CAST(sum(cnt * n_syms) AS BIGINT) * 1000000)
+         |    // CAST(sum(cnt) AS BIGINT) AS fertility_ppm
+         |FROM dc JOIN ns USING (tid)
+         |GROUP BY 1""".stripMargin
+    })),
+    QuerySpec("text_vocab_topk", (s, d) =>
+      graft.text.CorpusStats.vocabTopK(Tables(s, d, "documents")),
+      Oracle(s"""WITH $TokCte,
+         |ex AS (SELECT unnest(w) AS token FROM tw),
+         |v AS (SELECT token, CAST(count(*) AS BIGINT) AS n
+         |      FROM ex GROUP BY 1
+         |      ORDER BY n DESC, token LIMIT ${graft.text.CorpusStats.VocabK})
+         |SELECT token, n,
+         |  CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank
+         |FROM v""".stripMargin)),
+    // X202: per-source Zipf rank-frequency slope — integer-bits OLS
+    // through the X164 trend; slope near -1e6 = natural-language shape
+    QuerySpec("text_zipf_slope", (s, d) =>
+      graft.text.CorpusStats.zipfSlope(Tables(s, d, "documents")),
+      // the text_surprisal chain + per-lang tercile of bits-per-token
+      // same bits device (length(format('{:b}', x)) ≡ Spark length(bin)),
+      // same trend-moment spelling as supplier_qty_trend
+      Oracle(s"""WITH tws AS (
+         |  SELECT source,
+         |    CASE WHEN ${normSql("text")} = ''
+         |         THEN CAST([] AS VARCHAR[])
+         |         ELSE string_split(${normSql("text")}, ' ') END AS w
+         |  FROM documents),
+         |ex AS (SELECT source, unnest(w) AS token FROM tws),
+         |c AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
+         |      FROM ex GROUP BY 1, 2),
+         |b AS (SELECT source,
+         |        CAST(length(format('{:b}',
+         |          row_number() OVER (PARTITION BY source
+         |            ORDER BY n DESC, token))) AS BIGINT) AS x0,
+         |        CAST(length(format('{:b}', n)) AS BIGINT) AS y
+         |      FROM c),
+         |cen AS (SELECT source,
+         |          x0 - MIN(x0) OVER (PARTITION BY source) AS x, y
+         |        FROM b),
+         |st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
+         |         CAST(SUM(x) AS BIGINT) AS sx,
+         |         CAST(SUM(y) AS BIGINT) AS sy,
+         |         CAST(SUM(x * y) AS BIGINT) AS sxy,
+         |         CAST(SUM(x * x) AS BIGINT) AS sxx
+         |       FROM cen GROUP BY 1)
+         |SELECT source, n AS n_points,
+         |  CAST(CASE WHEN n * sxx - sx * sx = 0 THEN NULL
+         |    ELSE (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
+         |      * ((abs(n * sxy - sx * sy) * 1000000)
+         |         // (n * sxx - sx * sx)) END AS BIGINT) AS slope_e6,
+         |  CAST((CASE WHEN sy < 0 THEN -1 ELSE 1 END)
+         |    * (abs(sy) // n) AS BIGINT) AS avg_y
+         |FROM st""".stripMargin)),
+    // X180: pairwise source-vocabulary overlap — the domain-
+    // similarity matrix behind mixture-weight decisions; vocabulary-
+    // sized frames, token-keyed intersection join
+    QuerySpec("text_source_vocab_overlap", (s, d) =>
+      graft.text.CorpusStats.sourceVocabOverlap(
+        Tables(s, d, "documents")),
+      Oracle(s"""WITH $TokCte,
+         |sv AS (SELECT DISTINCT d.source, t.tok AS token
+         |       FROM tw
+         |       JOIN documents d ON tw.doc_id = d.doc_id,
+         |       unnest(tw.w) AS t(tok)),
+         |sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS v
+         |          FROM sv GROUP BY 1),
+         |inter AS (
+         |  SELECT a.source AS src_a, b.source AS src_b,
+         |         CAST(COUNT(*) AS BIGINT) AS n_common
+         |  FROM sv a JOIN sv b
+         |    ON a.token = b.token AND a.source < b.source
+         |  GROUP BY 1, 2)
+         |SELECT src_a, src_b, n_common, sa.v AS va, sb.v AS vb,
+         |  CAST((n_common * 1000000) // (sa.v + sb.v - n_common)
+         |    AS BIGINT) AS jaccard_ppm
+         |FROM inter JOIN sizes sa ON src_a = sa.source
+         |           JOIN sizes sb ON src_b = sb.source""".stripMargin)),
+    // X168: Gini-impurity class balance per corpus slice — the
+    // label-quality screen before training; transcendental-free by
+    // construction (the CART impurity, not entropy)
+    QuerySpec("text_class_balance", (s, d) =>
+      graft.text.CorpusStats.classBalance(
+        Tables(s, d, "documents"), "source", "lang"),
+      Oracle("""WITH cl AS (
+        |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
+        |  FROM documents GROUP BY 1, 2)
+        |SELECT source, CAST(SUM(c) AS BIGINT) AS n_rows,
+        |  CAST(COUNT(*) AS BIGINT) AS n_classes,
+        |  CAST(MAX(c) AS BIGINT) AS majority_n,
+        |  CAST(1000000 - (SUM(c * c) * 1000000)
+        |    // (SUM(c) * SUM(c)) AS BIGINT) AS impurity_e6
+        |FROM cl GROUP BY 1""".stripMargin)),
+    // X204: per-source hapax/type-token profile — vocabulary-health
+    // screen beside the Zipf slope (templated sources collapse the
+    // hapax tail; OCR noise inflates it)
+    QuerySpec("text_hapax_rate", (s, d) =>
+      graft.text.CorpusStats.hapaxProfile(Tables(s, d, "documents")),
+      // same (source, token)-grain counts; ratios as integer ppm via //
+      // (values non-negative, so // ≡ div)
+      Oracle(s"""WITH tw AS (
          |  SELECT source,
          |         CASE WHEN ${normSql("text")} = ''
          |              THEN CAST([] AS VARCHAR[])
@@ -627,15 +970,47 @@ object TextQueries {
          |    AS hapax_frac_e6,
          |  CAST((vocab * 1000000) // greatest(n_tokens, 1) AS BIGINT)
          |    AS ttr_e6
-         |FROM ag""".stripMargin,
-
-    // FORCAST per-doc counts via list lambdas on the SAME normal-form
-    // token array; vowel groups on the rejoined normal form (runs
-    // cannot span the single-space separators, so the whole-string
-    // count equals the per-token sum); integer grade, // ≡ div on the
-    // non-negative operands
-    "text_readability" ->
-      s"""WITH tw AS (
+         |FROM ag""".stripMargin)),
+    // X205: per-source unigram entropy in integer bits — the
+    // transcendental-free information-density screen (the bits form
+    // IS the contract, same device as the Zipf/Hill statistics)
+    QuerySpec("text_token_entropy", (s, d) =>
+      graft.text.CorpusStats.tokenEntropyBits(
+        Tables(s, d, "documents")),
+      // same bits device (length of the binary form), same telescoped
+      // n·bits(n) − Σ c·bits(c) identity
+      Oracle(s"""WITH tw AS (
+         |  SELECT source,
+         |         CASE WHEN ${normSql("text")} = ''
+         |              THEN CAST([] AS VARCHAR[])
+         |              ELSE string_split(${normSql("text")}, ' ') END AS w
+         |  FROM documents),
+         |ex AS (SELECT source, unnest(w) AS tok FROM tw),
+         |tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c
+         |       FROM ex GROUP BY 1, 2),
+         |ag AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
+         |              CAST(count(*) AS BIGINT) AS vocab,
+         |              CAST(SUM(c * length(format('{:b}', c)))
+         |                AS BIGINT) AS sum_cb
+         |       FROM tc GROUP BY 1)
+         |SELECT source, n_tokens, vocab,
+         |  CAST(((n_tokens * length(format('{:b}', n_tokens)) - sum_cb)
+         |    * 1000000) // greatest(n_tokens, 1) AS BIGINT) AS h_bits_e6,
+         |  CAST(length(format('{:b}', greatest(vocab, 1))) * 1000000
+         |    AS BIGINT) AS max_bits_e6
+         |FROM ag""".stripMargin)),
+    // X279: FORCAST readability grade per source — the
+    // punctuation-free readability formula (the normal form strips
+    // sentence punctuation, so FK's sentence term is degenerate);
+    // map-only higher-order-function counts, one keyed aggregate
+    QuerySpec("text_readability", (s, d) =>
+      graft.text.CorpusStats.readability(docs(s, d)),
+      // FORCAST per-doc counts via list lambdas on the SAME normal-form
+      // token array; vowel groups on the rejoined normal form (runs
+      // cannot span the single-space separators, so the whole-string
+      // count equals the per-token sum); integer grade, // ≡ div on the
+      // non-negative operands
+      Oracle(s"""WITH tw AS (
          |  SELECT source,
          |         CASE WHEN ${normSql("text")} = ''
          |              THEN CAST([] AS VARCHAR[])
@@ -661,13 +1036,16 @@ object TextQueries {
          |    AS BIGINT) AS forcast_grade_e6,
          |  CAST((1000000 * syllables) // greatest(words, 1)
          |    AS BIGINT) AS spw_e6
-         |FROM ag""".stripMargin,
-
-    // RAKE: the same stopword → '|' delimiter transform on the
-    // normal-form token array, regex phrase split, (source, word)
-    // deg/freq stats, phrase rescore by keyed join, top-k window with
-    // the (score desc, phrase asc) deterministic tie-break
-    "text_rake_keywords" -> {
+         |FROM ag""".stripMargin)),
+    // X285: RAKE keyword extraction — top stopword-free phrases per
+    // source by summed deg/freq word scores, exact integer micro-units
+    QuerySpec("text_rake_keywords", (s, d) =>
+      graft.text.CorpusStats.rakeKeywords(docs(s, d)),
+      // RAKE: the same stopword → '|' delimiter transform on the
+      // normal-form token array, regex phrase split, (source, word)
+      // deg/freq stats, phrase rescore by keyed join, top-k window with
+      // the (score desc, phrase asc) deterministic tie-break
+      Oracle({
       val stop = graft.text.CorpusStats.RakeStopwords
         .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH tw AS (
@@ -712,361 +1090,13 @@ object TextQueries {
          |  phrase_score_e6
          |FROM rk WHERE rk <= ${graft.text.CorpusStats.RakeTopK}"""
         .stripMargin
-    },
-
-    // same bits device (length of the binary form), same telescoped
-    // n·bits(n) − Σ c·bits(c) identity
-    "text_token_entropy" ->
-      s"""WITH tw AS (
-         |  SELECT source,
-         |         CASE WHEN ${normSql("text")} = ''
-         |              THEN CAST([] AS VARCHAR[])
-         |              ELSE string_split(${normSql("text")}, ' ') END AS w
-         |  FROM documents),
-         |ex AS (SELECT source, unnest(w) AS tok FROM tw),
-         |tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c
-         |       FROM ex GROUP BY 1, 2),
-         |ag AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |              CAST(count(*) AS BIGINT) AS vocab,
-         |              CAST(SUM(c * length(format('{:b}', c)))
-         |                AS BIGINT) AS sum_cb
-         |       FROM tc GROUP BY 1)
-         |SELECT source, n_tokens, vocab,
-         |  CAST(((n_tokens * length(format('{:b}', n_tokens)) - sum_cb)
-         |    * 1000000) // greatest(n_tokens, 1) AS BIGINT) AS h_bits_e6,
-         |  CAST(length(format('{:b}', greatest(vocab, 1))) * 1000000
-         |    AS BIGINT) AS max_bits_e6
-         |FROM ag""".stripMargin,
-
-    "text_token_rarity" ->
-      s"""WITH $TokCte,
-         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
-         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
-         |      FROM ex GROUP BY 1),
-         |a AS (SELECT e.doc_id, count(*) AS n_tokens,
-         |             MIN(v.ctf) AS min_corpus_tf,
-         |             CAST(SUM(v.ctf) AS BIGINT) AS sum_tf
-         |      FROM ex e JOIN v USING (tok) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(a.n_tokens, 0) AS n_tokens,
-         |  COALESCE(a.min_corpus_tf, 0) AS min_corpus_tf,
-         |  CAST(COALESCE((a.sum_tf * 1000000) // a.n_tokens, 0) AS BIGINT)
-         |    AS mean_corpus_tf_e6
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // doc-parity halves, full-outer token join, cross-multiplied
-    // exact-integer TV contributions, (contrib desc, tok asc) top-K
-    "text_vocab_drift" -> {
-      val k = graft.text.CorpusStats.DriftK
-      s"""WITH $TokCte,
-         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
-         |s0 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c0
-         |       FROM ex WHERE doc_id % 2 = 0 GROUP BY 1),
-         |s1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1
-         |       FROM ex WHERE doc_id % 2 = 1 GROUP BY 1),
-         |j AS (SELECT COALESCE(s0.tok, s1.tok) AS tok,
-         |        COALESCE(c0, 0) AS c0, COALESCE(c1, 0) AS c1
-         |      FROM s0 FULL OUTER JOIN s1 ON s0.tok = s1.tok),
-         |t AS (SELECT CAST(SUM(c0) AS BIGINT) AS n0,
-         |             CAST(SUM(c1) AS BIGINT) AS n1
-         |      FROM j),
-         |r AS (SELECT j.tok, j.c0, j.c1,
-         |        abs(j.c0 * t.n1 - j.c1 * t.n0) AS contrib
-         |      FROM j CROSS JOIN t),
-         |rk AS (SELECT tok, c0, c1, CAST(contrib AS BIGINT) AS contrib,
-         |         CAST(row_number() OVER (
-         |           ORDER BY contrib DESC, tok ASC) AS BIGINT) AS rk
-         |       FROM r)
-         |SELECT rk, tok, c0, c1, contrib FROM rk WHERE rk <= $k""".stripMargin
-    },
-
-    // the text_surprisal chain + per-lang tercile of bits-per-token
-    // same bits device (length(format('{:b}', x)) ≡ Spark length(bin)),
-    // same trend-moment spelling as supplier_qty_trend
-    "text_zipf_slope" ->
-      s"""WITH tws AS (
-         |  SELECT source,
-         |    CASE WHEN ${normSql("text")} = ''
-         |         THEN CAST([] AS VARCHAR[])
-         |         ELSE string_split(${normSql("text")}, ' ') END AS w
-         |  FROM documents),
-         |ex AS (SELECT source, unnest(w) AS token FROM tws),
-         |c AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
-         |      FROM ex GROUP BY 1, 2),
-         |b AS (SELECT source,
-         |        CAST(length(format('{:b}',
-         |          row_number() OVER (PARTITION BY source
-         |            ORDER BY n DESC, token))) AS BIGINT) AS x0,
-         |        CAST(length(format('{:b}', n)) AS BIGINT) AS y
-         |      FROM c),
-         |cen AS (SELECT source,
-         |          x0 - MIN(x0) OVER (PARTITION BY source) AS x, y
-         |        FROM b),
-         |st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-         |         CAST(SUM(x) AS BIGINT) AS sx,
-         |         CAST(SUM(y) AS BIGINT) AS sy,
-         |         CAST(SUM(x * y) AS BIGINT) AS sxy,
-         |         CAST(SUM(x * x) AS BIGINT) AS sxx
-         |       FROM cen GROUP BY 1)
-         |SELECT source, n AS n_points,
-         |  CAST(CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-         |    ELSE (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-         |      * ((abs(n * sxy - sx * sy) * 1000000)
-         |         // (n * sxx - sx * sx)) END AS BIGINT) AS slope_e6,
-         |  CAST((CASE WHEN sy < 0 THEN -1 ELSE 1 END)
-         |    * (abs(sy) // n) AS BIGINT) AS avg_y
-         |FROM st""".stripMargin,
-
-    "text_ppl_buckets" ->
-      s"""WITH $TokCte,
-         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
-         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
-         |      FROM ex GROUP BY 1),
-         |t AS (SELECT CAST(SUM(ctf) AS BIGINT) AS n_total FROM v),
-         |a AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |        CAST(SUM(length(format('{:b}', t.n_total // v.ctf)))
-         |          AS BIGINT) AS total_bits
-         |      FROM ex e JOIN v USING (tok) CROSS JOIN t GROUP BY 1),
-         |s AS (SELECT d.doc_id, d.lang,
-         |        CAST(COALESCE((a.total_bits * 1000000) // a.n_tokens,
-         |          0) AS BIGINT) AS bits_per_token_e6
-         |      FROM documents d LEFT JOIN a USING (doc_id)),
-         |r AS (SELECT doc_id, lang, bits_per_token_e6,
-         |        CAST(row_number() OVER (PARTITION BY lang
-         |          ORDER BY bits_per_token_e6, doc_id) AS BIGINT) AS rk,
-         |        CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
-         |      FROM s)
-         |SELECT doc_id, lang, bits_per_token_e6,
-         |  CASE ((rk - 1) * 3) // n WHEN 0 THEN 'head'
-         |       WHEN 1 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-         |FROM r""".stripMargin,
-
-    // top-K token sets per source ((n desc, tok asc) rank), pairwise
-    // shared-token Jaccard in ppm over the K-sized sets only
-    "text_source_overlap" -> {
-      val k = graft.text.CorpusStats.OverlapK
-      s"""WITH tw AS (
-         |  SELECT source,
-         |    CASE WHEN ${normSql("text")} = ''
-         |         THEN CAST([] AS VARCHAR[])
-         |         ELSE string_split(${normSql("text")}, ' ') END AS w
-         |  FROM documents),
-         |ex AS (SELECT source, unnest(w) AS tok FROM tw),
-         |c AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n
-         |      FROM ex GROUP BY 1, 2),
-         |top AS (SELECT source, tok FROM (
-         |    SELECT source, tok, row_number() OVER (
-         |      PARTITION BY source ORDER BY n DESC, tok ASC) AS rk
-         |    FROM c) WHERE rk <= $k),
-         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS s
-         |       FROM top GROUP BY 1),
-         |sh AS (SELECT a.source AS a_source, b.source AS b_source,
-         |         CAST(count(*) AS BIGINT) AS shared
-         |       FROM top a JOIN top b
-         |         ON a.tok = b.tok AND a.source < b.source
-         |       GROUP BY 1, 2)
-         |SELECT sh.a_source, sh.b_source, sh.shared,
-         |  CAST((sh.shared * 1000000) // (sa.s + sb.s - sh.shared)
-         |    AS BIGINT) AS jaccard_ppm
-         |FROM sh JOIN sz sa ON sh.a_source = sa.source
-         |        JOIN sz sb ON sh.b_source = sb.source""".stripMargin
-    },
-
-    // DSIR log-ratio in integer bits (surprisal_raw − surprisal_tgt,
-    // add-one smoothed target); offset div for the possibly-negative
-    // mean (see CorpusStats.dsirWeights)
-    "text_dsir_weights" -> {
-      val lang = graft.text.CorpusStats.DsirTargetLang
-      s"""WITH $TokCte,
-         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
-         |r AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
-         |      FROM ex GROUP BY 1),
-         |ti AS (SELECT doc_id FROM documents WHERE lang = '$lang'),
-         |t AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf_t
-         |      FROM ex JOIN ti USING (doc_id) GROUP BY 1),
-         |tot AS (SELECT
-         |  (SELECT CAST(SUM(ctf) AS BIGINT) FROM r) AS n_raw,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM r) AS v_raw,
-         |  (SELECT CAST(COALESCE(SUM(ctf_t), 0) AS BIGINT) FROM t)
-         |    AS n_tgt),
-         |b AS (SELECT e.doc_id,
-         |        CAST(length(format('{:b}', tot.n_raw // r.ctf))
-         |          AS BIGINT) AS rb,
-         |        CAST(length(format('{:b}', (tot.n_tgt + tot.v_raw)
-         |          // (COALESCE(t.ctf_t, 0) + 1))) AS BIGINT) AS tb
-         |      FROM ex e JOIN r USING (tok) LEFT JOIN t USING (tok)
-         |           CROSS JOIN tot),
-         |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |        CAST(SUM(rb) AS BIGINT) AS raw_bits,
-         |        CAST(SUM(tb) AS BIGINT) AS tgt_bits
-         |      FROM b GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(a.n_tokens, 0) AS n_tokens,
-         |  COALESCE(a.raw_bits, 0) AS raw_bits,
-         |  COALESCE(a.tgt_bits, 0) AS tgt_bits,
-         |  COALESCE(a.raw_bits - a.tgt_bits, 0) AS dsir_bits,
-         |  CAST(COALESCE(
-         |    ((a.raw_bits - a.tgt_bits + 64 * a.n_tokens) * 1000000)
-         |      // a.n_tokens - 64000000, 0) AS BIGINT)
-         |    AS dsir_per_tok_e6
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin
-    },
-
-    // id-range buckets ((doc_id·B) div (max_id+1) — no global sort),
-    // first-appearance bucket per token, 10-row cumulative rollup
-    "text_vocab_growth" -> {
-      val b = graft.text.CorpusStats.GrowthBuckets
-      s"""WITH $TokCte,
-         |mx AS (SELECT MAX(doc_id) AS max_id FROM documents),
-         |db AS (SELECT (d.doc_id * $b) // (mx.max_id + 1) AS bkt
-         |       FROM documents d CROSS JOIN mx),
-         |dc AS (SELECT bkt, CAST(count(*) AS BIGINT) AS n_docs
-         |       FROM db GROUP BY 1),
-         |ex AS (SELECT (tw.doc_id * $b) // (mx.max_id + 1) AS bkt,
-         |         unnest(w) AS tok
-         |       FROM tw CROSS JOIN mx),
-         |tc AS (SELECT bkt, CAST(count(*) AS BIGINT) AS n_tokens
-         |       FROM ex GROUP BY 1),
-         |nv AS (SELECT bkt, CAST(count(*) AS BIGINT) AS new_vocab
-         |       FROM (SELECT tok, MIN(bkt) AS bkt FROM ex GROUP BY 1)
-         |       GROUP BY 1),
-         |j AS (SELECT dc.bkt, dc.n_docs,
-         |        COALESCE(tc.n_tokens, 0) AS n_tokens,
-         |        COALESCE(nv.new_vocab, 0) AS new_vocab
-         |      FROM dc LEFT JOIN tc USING (bkt)
-         |            LEFT JOIN nv USING (bkt))
-         |SELECT bkt, n_docs, n_tokens, new_vocab,
-         |  CAST(SUM(n_tokens) OVER (ORDER BY bkt) AS BIGINT) AS cum_tokens,
-         |  CAST(SUM(new_vocab) OVER (ORDER BY bkt) AS BIGINT) AS cum_vocab
-         |FROM j""".stripMargin
-    },
-
-    // integer surprisal: bit_length(N div ctf) per token (length of
-    // the binary spelling — the X95 bucket function), summed per doc;
-    // same vocab/join topology as text_token_rarity
-    "text_surprisal" ->
-      s"""WITH $TokCte,
-         |ex AS (SELECT doc_id, unnest(w) AS tok FROM tw),
-         |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS ctf
-         |      FROM ex GROUP BY 1),
-         |t AS (SELECT CAST(SUM(ctf) AS BIGINT) AS n_total FROM v),
-         |a AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |        CAST(SUM(length(format('{:b}', t.n_total // v.ctf)))
-         |          AS BIGINT) AS total_bits
-         |      FROM ex e JOIN v USING (tok) CROSS JOIN t GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(a.n_tokens, 0) AS n_tokens,
-         |  COALESCE(a.total_bits, 0) AS total_bits,
-         |  CAST(COALESCE((a.total_bits * 1000000) // a.n_tokens, 0)
-         |    AS BIGINT) AS bits_per_token_e6
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // (doc, term) tf rollup then term grain — df is a plain row count
-    "text_term_burstiness" ->
-      s"""WITH $TokCte,
-         |tf AS (SELECT doc_id, unnest(w) AS term FROM tw),
-         |dt AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf_doc
-         |       FROM tf GROUP BY 1, 2),
-         |g AS (SELECT term, CAST(SUM(tf_doc) AS BIGINT) AS tf,
-         |        CAST(count(*) AS BIGINT) AS df
-         |      FROM dt GROUP BY 1)
-         |SELECT term, tf, df,
-         |  CAST((tf * 1000000) // df AS BIGINT) AS burst_ppm
-         |FROM g WHERE df >= ${graft.text.CorpusStats.BurstMinDf}"""
-        .stripMargin,
-
-    // same bigram extraction as text_collocations, bits at bigram-TYPE
-    // grain conditioned on the head's bigram count, instance rollup
-    "text_bigram_surprisal" ->
-      s"""WITH $TokCte,
-         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
-         |         i -> w[i] || ' ' || w[i + 1])) AS bigram
-         |       FROM tw),
-         |bi AS (SELECT bigram, CAST(count(*) AS BIGINT) AS n_ab
-         |       FROM bg GROUP BY 1),
-         |hd AS (SELECT string_split(bigram, ' ')[1] AS a,
-         |         CAST(SUM(n_ab) AS BIGINT) AS n_a
-         |       FROM bi GROUP BY 1),
-         |ty AS (SELECT bigram,
-         |         CAST(length(format('{:b}', n_a // n_ab)) AS BIGINT)
-         |           AS bits
-         |       FROM bi JOIN hd ON string_split(bigram, ' ')[1] = hd.a),
-         |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |        CAST(SUM(bits) AS BIGINT) AS total_bits
-         |      FROM bg JOIN ty USING (bigram) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(a.n_bigrams, 0) AS n_bigrams,
-         |  COALESCE(a.total_bits, 0) AS total_bits,
-         |  CAST(COALESCE((a.total_bits * 1000000) // a.n_bigrams, 0)
-         |    AS BIGINT) AS bits_per_bigram_e6
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // same bigram extraction; interpolated Kneser-Ney with D as an
-    // integer-ppm constant over one common denominator — num/den are
-    // exact count rationals, bits = the X110 floor-log2 device
-    "text_kn_surprisal" -> {
-      val dp = graft.text.CorpusStats.KnDiscountPpm
-      s"""WITH $TokCte,
-         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
-         |         i -> w[i] || ' ' || w[i + 1])) AS bigram
-         |       FROM tw),
-         |bi AS (SELECT bigram,
-         |         string_split(bigram, ' ')[1] AS a,
-         |         string_split(bigram, ' ')[2] AS b,
-         |         CAST(count(*) AS BIGINT) AS n_ab
-         |       FROM bg GROUP BY 1, 2, 3),
-         |hd AS (SELECT a, CAST(SUM(n_ab) AS BIGINT) AS n_a,
-         |         CAST(count(*) AS BIGINT) AS t_a
-         |       FROM bi GROUP BY 1),
-         |tl AS (SELECT b, CAST(count(*) AS BIGINT) AS t_b
-         |       FROM bi GROUP BY 1),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS tt FROM bi),
-         |ty AS (SELECT bigram,
-         |         CAST(length(format('{:b}',
-         |           (n_a * 1000000 * tt) //
-         |           (greatest(n_ab * 1000000 - $dp, 0) * tt +
-         |            $dp * t_a * t_b))) AS BIGINT) AS bits
-         |       FROM bi JOIN hd USING (a) JOIN tl USING (b), tot),
-         |ag AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |         CAST(SUM(bits) AS BIGINT) AS total_bits
-         |       FROM bg JOIN ty USING (bigram) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  COALESCE(ag.n_bigrams, 0) AS n_bigrams,
-         |  COALESCE(ag.total_bits, 0) AS total_bits,
-         |  CAST(COALESCE((ag.total_bits * 1000000) // ag.n_bigrams, 0)
-         |    AS BIGINT) AS bits_per_bigram_e6
-         |FROM documents d LEFT JOIN ag USING (doc_id)""".stripMargin
-    },
-
-    // same normalized tokenization at (lang, term) grain; frequency-
-    // of-frequencies folded into conditional sums, ppm/e6 floor-divs
-    "text_good_turing" ->
-      s"""WITH ex AS (
-         |  SELECT lang,
-         |         unnest(string_split(${normSql("text")}, ' ')) AS tok
-         |  FROM documents WHERE ${normSql("text")} <> ''),
-         |tf AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS c
-         |       FROM ex GROUP BY 1, 2),
-         |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_types,
-         |        CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |        CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)
-         |          AS BIGINT) AS n_hapax,
-         |        CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END)
-         |          AS BIGINT) AS n_dis
-         |      FROM tf GROUP BY 1)
-         |SELECT lang, n_tokens, n_types, n_hapax, n_dis,
-         |  CAST((n_hapax * 1000000) // n_tokens AS BIGINT)
-         |    AS unseen_mass_ppm,
-         |  CAST(CASE WHEN n_hapax = 0 THEN 0
-         |       ELSE (2 * n_dis * 1000000) // n_hapax END AS BIGINT)
-         |    AS c1_star_e6
-         |FROM g""".stripMargin,
-
-    // integer tf-idf score: (tf · 1e6 · n_docs) // (df · dl) — exact
-    // BIGINT arithmetic in both engines, term-asc tiebreak (see
-    // CorpusStats.tfIdfTopTerms)
-    "text_tfidf_topk" ->
-      s"""WITH $TokCte,
+    })),
+    QuerySpec("text_tfidf_topk", (s, d) =>
+      graft.text.CorpusStats.tfIdfTopTerms(Tables(s, d, "documents")),
+      // integer tf-idf score: (tf · 1e6 · n_docs) // (df · dl) — exact
+      // BIGINT arithmetic in both engines, term-asc tiebreak (see
+      // CorpusStats.tfIdfTopTerms)
+      Oracle(s"""WITH $TokCte,
          |ex AS (SELECT doc_id, unnest(w) AS term FROM tw),
          |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |       FROM ex GROUP BY 1, 2),
@@ -1084,154 +1114,12 @@ object TextQueries {
          |        ORDER BY score_e6 DESC, term) AS BIGINT) AS rank
          |      FROM sc)
          |SELECT doc_id, term, tf, df, score_e6, rank
-         |FROM r WHERE rank <= ${graft.text.CorpusStats.TfIdfK}""".stripMargin,
-
-    // BPE inner loop over the DISTINCT-token frequency table: adjacent
-    // pairs as 2-char substrings at ascending positions, weighted by
-    // token frequency — identical substring semantics in both engines
-    "text_bpe_pair_counts" ->
-      s"""WITH $TokCte,
-         |wc AS (
-         |  SELECT token, CAST(count(*) AS BIGINT) AS n
-         |  FROM (SELECT unnest(w) AS token FROM tw) GROUP BY 1),
-         |pr AS (
-         |  SELECT unnest(list_transform(range(1, length(token)), i ->
-         |    substring(token, CAST(i AS INT), 2))) AS pair, n
-         |  FROM wc WHERE length(token) >= 2),
-         |agg AS (
-         |  SELECT pair, CAST(sum(n) AS BIGINT) AS w
-         |  FROM pr GROUP BY 1
-         |  ORDER BY w DESC, pair LIMIT ${graft.text.CorpusStats.BpeK})
-         |SELECT pair, w,
-         |  CAST(row_number() OVER (ORDER BY w DESC, pair) AS BIGINT) AS rank
-         |FROM agg""".stripMargin,
-
-    // full BPE rounds unrolled as CTEs (the PageRank prStep pattern):
-    // per round — pair counts over the symbol table, top-1 by
-    // (w desc, pair), matches with overlap chains resolved by the
-    // pos − row_number islands key (odd ranks merge = greedy
-    // left-to-right), consumed second symbols dropped, positions
-    // reindexed. Identical windowed set logic to bpeTrainMerges.
-    "text_bpe_train" -> {
-      val rounds = graft.text.CorpusStats.BpeRounds
-      s"""WITH $TokCte,
-         |${bpeCtes(rounds)}
-         |${(1 to rounds).map(i =>
-             s"SELECT CAST($i AS BIGINT) AS round, pr AS pair, w FROM t$i")
-             .mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    // fertility of the trained merges: post-merge symbol counts are a
-    // VOCAB-sized aggregate of the round-$BpeRounds symbol table; the
-    // per-doc rollup joins (doc, token) occurrences on the token key
-    "text_bpe_fertility" -> {
-      val rounds = graft.text.CorpusStats.BpeRounds
-      s"""WITH $TokCte,
-         |${bpeCtes(rounds)},
-         |ns AS (SELECT tid, CAST(count(*) AS BIGINT) AS n_syms
-         |       FROM s$rounds GROUP BY 1),
-         |dt AS (SELECT doc_id, unnest(w) AS tid FROM tw),
-         |dc AS (SELECT doc_id, tid, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM dt GROUP BY 1, 2)
-         |SELECT doc_id,
-         |  CAST(sum(cnt) AS BIGINT) AS n_words,
-         |  CAST(sum(cnt * n_syms) AS BIGINT) AS n_bpe_tokens,
-         |  (CAST(sum(cnt * n_syms) AS BIGINT) * 1000000)
-         |    // CAST(sum(cnt) AS BIGINT) AS fertility_ppm
-         |FROM dc JOIN ns USING (tid)
-         |GROUP BY 1""".stripMargin
-    },
-
-    // the oracle builds the IDENTICAL count-min sketch (same md5-hex8
-    // base, same mixers, same d×w geometry) directly over the global
-    // token stream; the Spark side merges per-source partial sketches —
-    // the hash-match is the mergeability proof (counter addition)
-    "text_cms_heavy_hitters" -> {
-      import graft.text.CorpusStats.{CmsDepth, CmsWidth, CmsK}
-      val base = s"(${OracleSql.hex8("md5(tok)")} % 2147483647)"
-      s"""WITH $TokCte,
-         |ex AS (SELECT unnest(w) AS tok FROM tw),
-         |cells AS (
-         |  SELECT j, ${OracleSql.mix("j", base)} % $CmsWidth AS bucket
-         |  FROM ex, range(0, $CmsDepth) t(j)),
-         |sk AS (
-         |  SELECT j, bucket, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM cells GROUP BY 1, 2),
-         |top AS (
-         |  SELECT tok, CAST(count(*) AS BIGINT) AS n_exact
-         |  FROM ex GROUP BY 1 ORDER BY n_exact DESC, tok LIMIT $CmsK),
-         |probes AS (
-         |  SELECT tok, n_exact, j,
-         |    ${OracleSql.mix("j", base)} % $CmsWidth AS bucket
-         |  FROM top, range(0, $CmsDepth) t(j)),
-         |est AS (
-         |  SELECT p.tok AS token, p.n_exact,
-         |    CAST(min(s.cnt) AS BIGINT) AS est_cms
-         |  FROM probes p JOIN sk s USING (j, bucket)
-         |  GROUP BY 1, 2)
-         |SELECT token, n_exact, est_cms,
-         |  CAST(row_number() OVER (ORDER BY n_exact DESC, token)
-         |    AS BIGINT) AS rank
-         |FROM est""".stripMargin
-    },
-
-    "text_source_vocab_overlap" ->
-      s"""WITH $TokCte,
-         |sv AS (SELECT DISTINCT d.source, t.tok AS token
-         |       FROM tw
-         |       JOIN documents d ON tw.doc_id = d.doc_id,
-         |       unnest(tw.w) AS t(tok)),
-         |sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS v
-         |          FROM sv GROUP BY 1),
-         |inter AS (
-         |  SELECT a.source AS src_a, b.source AS src_b,
-         |         CAST(COUNT(*) AS BIGINT) AS n_common
-         |  FROM sv a JOIN sv b
-         |    ON a.token = b.token AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT src_a, src_b, n_common, sa.v AS va, sb.v AS vb,
-         |  CAST((n_common * 1000000) // (sa.v + sb.v - n_common)
-         |    AS BIGINT) AS jaccard_ppm
-         |FROM inter JOIN sizes sa ON src_a = sa.source
-         |           JOIN sizes sb ON src_b = sb.source""".stripMargin,
-
-    "text_class_balance" ->
-      """WITH cl AS (
-        |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT source, CAST(SUM(c) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(*) AS BIGINT) AS n_classes,
-        |  CAST(MAX(c) AS BIGINT) AS majority_n,
-        |  CAST(1000000 - (SUM(c * c) * 1000000)
-        |    // (SUM(c) * SUM(c)) AS BIGINT) AS impurity_e6
-        |FROM cl GROUP BY 1""".stripMargin,
-
-    "text_vocab_topk" ->
-      s"""WITH $TokCte,
-         |ex AS (SELECT unnest(w) AS token FROM tw),
-         |v AS (SELECT token, CAST(count(*) AS BIGINT) AS n
-         |      FROM ex GROUP BY 1
-         |      ORDER BY n DESC, token LIMIT ${graft.text.CorpusStats.VocabK})
-         |SELECT token, n,
-         |  CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank
-         |FROM v""".stripMargin,
-
-    // the merge of stored counts + batch scan must EQUAL the full
-    // recomputation — the oracle is exactly the text_vocab_topk SQL
-    "text_vocab_incremental" ->
-      s"""WITH $TokCte,
-         |ex AS (SELECT unnest(w) AS token FROM tw),
-         |v AS (SELECT token, CAST(count(*) AS BIGINT) AS n
-         |      FROM ex GROUP BY 1
-         |      ORDER BY n DESC, token LIMIT ${graft.text.CorpusStats.VocabK})
-         |SELECT token, n,
-         |  CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank
-         |FROM v""".stripMargin,
-
-    // integer-exact PMI lift (see CorpusStats.collocations): one
-    // BIGINT expression, monotone in PMI, no cross-engine ln
-    "text_collocations" ->
-      s"""WITH $TokCte,
+         |FROM r WHERE rank <= ${graft.text.CorpusStats.TfIdfK}""".stripMargin)),
+    QuerySpec("text_collocations", (s, d) =>
+      graft.text.CorpusStats.collocations(Tables(s, d, "documents")),
+      // integer-exact PMI lift (see CorpusStats.collocations): one
+      // BIGINT expression, monotone in PMI, no cross-engine ln
+      Oracle(s"""WITH $TokCte,
          |uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_tok
          |        FROM (SELECT unnest(w) AS tok FROM tw) GROUP BY 1),
          |bg AS (SELECT unnest(list_transform(range(1, len(w)),
@@ -1256,11 +1144,11 @@ object TextQueries {
          |        ORDER BY lift_e6 DESC, bigram) AS BIGINT) AS rank
          |      FROM sc)
          |SELECT bigram, n_ab, n_a, n_b, lift_e6, rank
-         |FROM r WHERE rank <= ${graft.text.CorpusStats.CollocK}""".stripMargin,
-
-    // OOV rate vs the same top-k vocab CTE as text_vocab_topk
-    "text_oov_rate" ->
-      s"""WITH $TokCte,
+         |FROM r WHERE rank <= ${graft.text.CorpusStats.CollocK}""".stripMargin)),
+    QuerySpec("text_oov_rate", (s, d) =>
+      graft.text.CorpusStats.oovRate(Tables(s, d, "documents")),
+      // OOV rate vs the same top-k vocab CTE as text_vocab_topk
+      Oracle(s"""WITH $TokCte,
          |v AS (SELECT tok FROM (
          |        SELECT tok, count(*) AS n
          |        FROM (SELECT unnest(w) AS tok FROM tw) GROUP BY 1
@@ -1277,12 +1165,13 @@ object TextQueries {
          |  COALESCE(a.n_oov, 0) AS n_oov,
          |  CAST(COALESCE((a.n_oov * 1000000) // a.n_tokens, 0) AS BIGINT)
          |    AS oov_ppm
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // within-doc duplicate n-gram coverage: positions covered by any
-    // gram occurring ≥2× in the SAME doc (cross-doc df is
-    // dedup_dup_spans' job)
-    "text_dup_ngram_coverage" -> {
+         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin)),
+    QuerySpec("text_dup_ngram_coverage", (s, d) =>
+      graft.text.CorpusStats.dupNgramCoverage(Tables(s, d, "documents")),
+      // within-doc duplicate n-gram coverage: positions covered by any
+      // gram occurring ≥2× in the SAME doc (cross-doc df is
+      // dedup_dup_spans' job)
+      Oracle({
       val n = graft.text.CorpusStats.DupGramN
       s"""WITH $TokCte,
          |sp AS (SELECT doc_id,
@@ -1307,5 +1196,25 @@ object TextQueries {
          |            ELSE COALESCE((ca.n_cov * 1000000) // len(t.w), 0) END
          |    AS BIGINT) AS dup_coverage_ppm
          |FROM tw t LEFT JOIN ca USING (doc_id)""".stripMargin
-    })
+    })),
+    // incremental vocab: stored counts of the old corpus (doc_id % 4
+    // != 0) merged with the new batch's scan — must equal the full
+    // recomputation, which is what the oracle computes
+    QuerySpec("text_vocab_incremental", (s, d) => {
+      val dd = Tables(s, d, "documents")
+      graft.text.CorpusStats.vocabMergeIncremental(
+        graft.text.CorpusStats.tokenCountsOf(
+          dd.filter(col("doc_id") % 4 =!= 0)),
+        dd.filter(col("doc_id") % 4 === 0))
+    },
+      // the merge of stored counts + batch scan must EQUAL the full
+      // recomputation — the oracle is exactly the text_vocab_topk SQL
+      Oracle(s"""WITH $TokCte,
+         |ex AS (SELECT unnest(w) AS token FROM tw),
+         |v AS (SELECT token, CAST(count(*) AS BIGINT) AS n
+         |      FROM ex GROUP BY 1
+         |      ORDER BY n DESC, token LIMIT ${graft.text.CorpusStats.VocabK})
+         |SELECT token, n,
+         |  CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank
+         |FROM v""".stripMargin)))
 }

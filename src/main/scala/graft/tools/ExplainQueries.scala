@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print the FORMATTED physical plan of named registry
   * queries (default: the bench's historically most expensive ones) so
   * plan regressions — a lost pushdown, a surprise exchange, a
@@ -20,14 +18,7 @@ object ExplainQueries {
     val names = args.lift(1)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Default)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local(4)
     names.foreach { n =>
       graft.SparkEntry.queries.get(n) match {
         case None => println(s"== $n: NOT IN REGISTRY ==")

@@ -32,6 +32,60 @@ class BetweennessSpec extends SparkSpec {
       s"got $got")
   }
 
+  test("sampledBetweenness: levelsIn must match rounds and seedMod") {
+    val (e, deg) = frames(Seq((1L, 2L)))
+    val five = Some(IndexedSeq.fill(5)(e))
+    val short = intercept[IllegalArgumentException](
+      Betweenness.sampledBetweenness(e, deg, rounds = 3, levelsIn = five))
+    assert(short.getMessage.contains("rounds = 3 needs 4"))
+    val rate = intercept[IllegalArgumentException](
+      Betweenness.sampledBetweenness(e, deg, seedMod = 10, levelsIn = five))
+    assert(rate.getMessage.contains("seed rate 100, not 10"))
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a trailing sentinel job is seen every job `body`
+    * started has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobsDuring-sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("jobsDuring-sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(started.contains("jobsDuring-sentinel"))
+      started.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("sharedForwardLevels belongs to its session: a repeat call runs " +
+    "no job, and after clear + drain the levels rebuild") {
+    val s2 = spark.newSession()
+    try {
+      val counts = Betweenness.sharedForwardLevels(s2, SfDir).map(_.count())
+      assert(counts.size == graft.graph.BfsHops.Rounds + 1 && counts(0) > 0)
+      assert(jobsDuring(Betweenness.sharedForwardLevels(s2, SfDir)) == 0)
+      // the tier's checkpoint blocks are gone after these two calls; a
+      // memo that outlived clear would hand back unreadable frames
+      graft.core.SessionCache.clear(s2)
+      graft.core.CheckpointBay.drain()
+      assert(Betweenness.sharedForwardLevels(s2, SfDir).map(_.count()) ==
+        counts)
+    } finally graft.core.SessionCache.clear(s2)
+  }
+
   test("sampledBetweenness property: random bipartite graphs equal a " +
     "naive driver Brandes with the identical e6 quantization") {
     import org.scalacheck.Gen

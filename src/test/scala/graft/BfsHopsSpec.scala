@@ -75,6 +75,13 @@ class BfsHopsSpec extends SparkSpec {
     assert(got.valuesIterator.exists(_ > 0L), "BFS never left the seeds")
   }
 
+  test("harmonicSampled: levelsIn must hold rounds + 1 levels") {
+    val o = Seq((1L, 1L)).toDF("o_orderkey", "o_custkey")
+    val ex = intercept[IllegalArgumentException](BfsHops.harmonicSampled(
+      o, o, rounds = 2, levelsIn = Some(IndexedSeq.fill(5)(o))))
+    assert(ex.getMessage.contains("rounds = 2 needs 3"))
+  }
+
   test("harmonicSampled: per-node sum of 1e6 div hops over both seeds " +
     "of a hand graph; seeds excluded from their own score") {
     // seeds = suppliers 0 and 100 (HarmonicSeedMod = 100):

@@ -609,7 +609,7 @@ class CorpusStatsSpec extends SparkSpec {
       .map { case (i, t) => (i, t, "en", "srcA", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.registry.TextQueries.queries("text_markup_density")(
+    val r = SparkEntry.queries("text_markup_density")(
       spark, dir).orderBy($"doc_id").collect()
     assert(r.map(_.getAs[Long]("is_boilerplate")).toSeq ==
       Seq(0L, 1L, 1L, 0L))

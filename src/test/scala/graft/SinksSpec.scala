@@ -191,6 +191,29 @@ class SinksSpec extends SparkSpec {
       new java.io.File(dir))
   }
 
+  test("partitioned upsert fails loudly, and writes nothing, when a " +
+    "delta partition value does not cast losslessly to the target's type") {
+    val dir = Files.createTempDirectory("pup_lossy").toFile.getAbsolutePath
+    val t = s"$dir/t"
+    // a FLOAT partition column lands in directory p=0.1, which the
+    // reader infers as the DOUBLE 0.1; the float cast to double is
+    // 0.10000000149, so that partition would leave the pruning set and
+    // its survivor k=1 would be dropped by the dynamic overwrite
+    Seq((1L, 0.1f, 10L), (2L, 0.5f, 20L)).toDF("k", "p", "cents")
+      .write.partitionBy("p").parquet(t)
+    val delta = Seq((3L, 0.1f, 30L)).toDF("k", "p", "cents")
+    try {
+      val ex = intercept[IllegalArgumentException](
+        Sinks.partitionedUpsert(spark, delta, t, "p", Seq("k")))
+      assert(ex.getMessage.contains("do not cast losslessly"), ex.getMessage)
+      assert(spark.read.parquet(t).select($"k").as[Long].collect().toSet ==
+        Set(1L, 2L))
+    } finally {
+      graft.core.CacheBay.drain()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("S17 line-array payload parses to one row per line") {
     val df = Seq("""["line one", "line two", "line three"]""").toDF("value")
     val rows = graft.streaming.StreamIngest.parseLineArray(df)

@@ -5,15 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // same install path production uses: functions + RangeJoinRewrite
-    // active session-wide, so tests exercise the plans users would get
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .getOrCreate()
+  // the production session config (functions + RangeJoinRewrite active
+  // session-wide), so tests exercise the plans users would get
+  lazy val spark: SparkSession = graft.core.Sessions.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

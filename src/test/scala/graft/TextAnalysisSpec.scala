@@ -94,7 +94,7 @@ class TextAnalysisSpec extends SparkSpec {
       .map { case (i, t) => (i, t, "en", "srcA", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.registry.TextQueries.queries("text_gopher_screen")(
+    val r = SparkEntry.queries("text_gopher_screen")(
       spark, dir).orderBy($"doc_id").collect()
     assert(r.map(_.getAs[Long]("passes_gopher")).toSeq ==
       Seq(1L, 0L, 0L, 0L))
@@ -116,7 +116,7 @@ class TextAnalysisSpec extends SparkSpec {
       .map { case (i, t, l) => (i, t, l, "srcA", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.registry.TextQueries.queries("text_langid_confusion")(
+    val r = SparkEntry.queries("text_langid_confusion")(
       spark, dir).collect()
       .map(x => (x.getAs[String]("lang"), x.getAs[String]("lang_pred")) ->
         ((x.getAs[Long]("n"), x.getAs[Long]("share_ppm")))).toMap
@@ -134,14 +134,14 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "control\u0001\u0002\u0003\u0004heavy", "en", "srcB", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val q = graft.registry.TextQueries.queries("text_encoding_qc")(
+    val q = SparkEntry.queries("text_encoding_qc")(
       spark, dir).orderBy($"doc_id").collect()
     assert(q.map(_.getAs[Long]("is_quarantined")).toSeq == Seq(0L, 1L, 1L))
     assert(q(1).getAs[Long]("repl_count") == 2L)
     assert(q(2).getAs[Long]("ctrl_count") == 4L)
     // doc 3: 16 chars, 4 ctrl -> 250000 ppm, over the 1000 ppm bar
     assert(q(2).getAs[Long]("ctrl_ppm") == 4L * 1000000L / 16L)
-    val roll = graft.registry.TextQueries.queries("text_encoding_by_source")(
+    val roll = SparkEntry.queries("text_encoding_by_source")(
       spark, dir).orderBy($"source").collect()
     assert(roll.map(r => (r.getAs[String]("source"),
       r.getAs[Long]("n_docs"), r.getAs[Long]("n_quarantined"))).toSeq ==
