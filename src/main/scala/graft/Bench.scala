@@ -98,8 +98,7 @@ object Bench {
         // per-query transients so cached blocks don't accumulate across
         // the full sweep — the long-lived Star fact/calendar cache that
         // all extract-family queries share survives deliberately
-        graft.core.CacheBay.drain()
-        graft.core.CheckpointBay.drain()
+        graft.core.SessionCache.endQuery()
         (System.nanoTime() - t0) / 1e9
       }
       val dt = times.min

@@ -29,8 +29,7 @@ object Verify {
         e.printStackTrace(new java.io.PrintWriter(sw))
         Files.writeString(failDir.resolve(s"$name.txt"), sw.toString)
       }
-      graft.core.CacheBay.drain() // drop per-query transient persists
-      graft.core.CheckpointBay.drain() // release leaked checkpoint blocks
+      graft.core.SessionCache.endQuery()
       }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

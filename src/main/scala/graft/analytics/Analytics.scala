@@ -98,7 +98,7 @@ object Analytics {
     // persisted: the share-of-total crossJoin reads `cells` twice (the
     // rows and the 1-row total) — without the boundary BOTH abc legs
     // (two fact scans + windows each) re-evaluate for the total side
-    val cells = graft.core.CacheBay.register(
+    val cells = graft.core.SessionCache.transient(
       early.join(late, Seq("l_partkey"), "full_outer")
       .select(coalesce(col("abc_early"), lit("N")).as("abc_early"),
         coalesce(col("abc_late"), lit("N")).as("abc_late"))
@@ -134,7 +134,7 @@ object Analytics {
     // aggregate, the part spine, and the dense left join) — without the
     // cache boundary the fact-grain groupBy re-runs per consumer
     // (measured 3 lineitem scans in the r16 plan dump)
-    val obs = graft.core.CacheBay.register(
+    val obs = graft.core.SessionCache.transient(
       li.groupBy(col("l_partkey"),
         (year(col("l_shipdate")) * 12 + month(col("l_shipdate")) - 1)
           .cast("long").as("m"))
@@ -442,7 +442,7 @@ object Analytics {
     val cur = dim.filter(col("is_current") === 1)
       .select(col("o_custkey"), col("attr").as("cur_attr"),
         col("valid_from").as("cur_from"))
-    val j = graft.core.CacheBay.register(
+    val j = graft.core.SessionCache.transient(
       cur.join(changes.select(col("o_custkey"),
         col("attr").as("new_attr")), Seq("o_custkey"), "full_outer"))
       .toDF()
@@ -693,7 +693,7 @@ object Analytics {
     // exchange bought nothing but local parallelism repair — on an
     // already-split source it was a full-table shuffle for free
     // (the r7 Similarity cleanup, applied here)
-    val base = graft.core.CacheBay.register(graft.core.Spread(scored))
+    val base = graft.core.SessionCache.transient(graft.core.Spread(scored))
     val off = base.groupBy(col("cents")).agg(count(lit(1)).as("c"))
       .withColumn("below", coalesce(
         sum(col("c")).over(Window.orderBy(col("cents"))
@@ -726,7 +726,7 @@ object Analytics {
     * sub-second normalization. */
   def funnelStages(events: DataFrame,
       stages: Seq[String] = Seq("view", "click", "purchase")): DataFrame = {
-    val base = graft.core.CacheBay.register(
+    val base = graft.core.SessionCache.transient(
       events.repartition(col("user_id"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us")))
@@ -868,12 +868,12 @@ object Analytics {
     * [[acfDaily]] and [[runsTest]]: the (type, day) count aggregate
     * left-joined onto each type's min..max calendar sequence; `n` is
     * NULL on gap days (callers coalesce to the honest zero, or read
-    * the null as the gap flag). The daily aggregate is CacheBay-
-    * registered because the spine derivation consumes it twice
+    * the null as the gap flag). The daily aggregate is a transient
+    * persist because the spine derivation consumes it twice
     * (min/max + the join back) — one events scan per query, not
     * two. */
   private def dailySpine(events: DataFrame): DataFrame = {
-    val daily = graft.core.CacheBay.register(
+    val daily = graft.core.SessionCache.transient(
       events.select(col("event_type"), to_date(col("ts")).as("day"))
         .groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).cast("long").as("n")))
@@ -1128,7 +1128,7 @@ object Analytics {
       .agg(count(lit(1)).cast("long").as("n"))
     val spine = daily.select(col("day")).distinct()
       .crossJoin(daily.select(col("event_type")).distinct())
-    val filled = graft.core.CacheBay.register(
+    val filled = graft.core.SessionCache.transient(
       spine.join(daily, Seq("event_type", "day"), "left")
         .select(col("event_type"), col("day"),
           coalesce(col("n"), lit(0L)).as("n")))
@@ -1204,7 +1204,7 @@ object Analytics {
     * never a per-row sort; fence counting reuses the same value
     * frame, and the per-type fence table broadcasts. */
   def iqrOutliers(events: DataFrame): DataFrame = {
-    val vc = graft.core.CacheBay.register(
+    val vc = graft.core.SessionCache.transient(
       events.select(col("event_type"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
         .groupBy(col("event_type"), col("cents"))
@@ -1418,7 +1418,7 @@ object Analytics {
     * per-user min aggregate, two day-keyed rollups and a prefix
     * window over the day spine — all exact integers. */
   def dailyUsers(events: DataFrame): DataFrame = {
-    val ud = graft.core.CacheBay.register(
+    val ud = graft.core.SessionCache.transient(
       events.select(col("user_id"), to_date(col("ts")).as("day"))
         .distinct())
     val active = ud.groupBy(col("day"))
@@ -1458,7 +1458,7 @@ object Analytics {
     // shift cohort cells. pmod-based floordiv (subtract the always-
     // non-negative remainder, then exact-multiple div) gives floor
     // semantics in exact integers — the lloydCentersE6 discipline.
-    val uw = graft.core.CacheBay.register(
+    val uw = graft.core.SessionCache.transient(
       events.select(col("user_id"),
         expr("(unix_micros(ts) - pmod(unix_micros(ts), " +
           "604800000000)) div 604800000000").as("w"))
@@ -1491,7 +1491,7 @@ object Analytics {
     // three consumers below (offsets, total, join) — without the
     // persist a CHAIN of tileOn calls re-evaluates its upstream 3^depth
     // times (measured 7.4 s for the RFM triple at sf0.1; 0.9 s with it)
-    val base = graft.core.CacheBay.register(input)
+    val base = graft.core.SessionCache.transient(input)
     val off = base.groupBy(col(v)).agg(count(lit(1)).as("c"))
       .withColumn("off", coalesce(
         sum(col("c")).over(Window.orderBy(col(v))
@@ -1541,7 +1541,7 @@ object Analytics {
     // tile) results back is the same rank definition per dimension —
     // ties still break on c_custkey within equal values — with one
     // persist and three narrow custkey-keyed joins.
-    val b = graft.core.CacheBay.register(base)
+    val b = graft.core.SessionCache.transient(base)
     def tiles(v: String, out: String): DataFrame =
       tileOn(b.select(col("c_custkey"), col(v)), "c_custkey", v, k, out)
         .select(col("c_custkey"), col(out))
@@ -1767,7 +1767,7 @@ object Analytics {
     * itself on (key, day + k). */
   def dailyAutocorrelation(events: DataFrame, keyCol: String,
       lags: Seq[Int] = Seq(1, 7)): DataFrame = {
-    val daily = graft.core.CacheBay.register(events
+    val daily = graft.core.SessionCache.transient(events
       .select(col(keyCol).as("k"),
         expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy(col("k"), col("day"))
@@ -1868,7 +1868,7 @@ object Analytics {
   def weightedMedian(lineitem: DataFrame, part: DataFrame,
       bucketCents: Long = WMedianBucketCents,
       baseIn: Option[DataFrame] = None): DataFrame = {
-    val base = baseIn.getOrElse(graft.core.CacheBay.register(
+    val base = baseIn.getOrElse(graft.core.SessionCache.transient(
       weightedBaseOf(lineitem, part, bucketCents)))
     val hist = base.groupBy(col("p_brand"), col("bucket"))
       .agg(sum(col("w_units")).cast("long").as("bw"))
@@ -1914,7 +1914,7 @@ object Analytics {
     require(qPcts.nonEmpty && qPcts.forall(q => q > 0 && q < 100),
       "weightedQuantiles: q percentages must be in (0, 100)")
     import lineitem.sparkSession.implicits._
-    val base = baseIn.getOrElse(graft.core.CacheBay.register(
+    val base = baseIn.getOrElse(graft.core.SessionCache.transient(
       weightedBaseOf(lineitem, part, bucketCents)))
     val hscan = Window.partitionBy(col("p_brand")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2133,7 +2133,7 @@ object Analytics {
     * the X37 discipline); everything after runs on ≤ k+1 rows. */
   def tailIndexBits(values: DataFrame, valueCol: String,
       k: Int = HillK): DataFrame = {
-    val top = graft.core.CacheBay.register(
+    val top = graft.core.SessionCache.transient(
       values.select(col(valueCol).cast("long").as("x"))
         .filter(col("x") > 0)
         .orderBy(desc("x")).limit(k + 1))
@@ -2628,7 +2628,7 @@ object Analytics {
       (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
         .cast("long").as("m"),
       floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
-    val cohort = graft.core.CacheBay.register(
+    val cohort = graft.core.SessionCache.transient(
       om.groupBy(col("cust")).agg(min(col("m")).as("m0")))
     val sizes = cohort.groupBy(col("m0").as("cohort_month"))
       .agg(count(lit(1)).cast("long").as("n_custs"))
@@ -2667,7 +2667,8 @@ object Analytics {
       .select(col("l_partkey"), col("xyz_class"))
     // persisted for the same reason as [[abcMigration]]'s cells: the
     // total side of the crossJoin re-evaluates the abc⋈xyz pipeline
-    val cells = graft.core.CacheBay.register(abc.join(xyz, Seq("l_partkey"))
+    val cells = graft.core.SessionCache.transient(
+      abc.join(xyz, Seq("l_partkey"))
       .groupBy(col("abc_class"), col("xyz_class"))
       .agg(count(lit(1)).cast("long").as("n_parts")))
     cells.crossJoin(broadcast(

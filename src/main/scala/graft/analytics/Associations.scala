@@ -35,11 +35,11 @@ object Associations {
     * each surviving unordered pair. */
   def basketRules(lineitem: DataFrame,
       minSupport: Long = MinSupport): DataFrame = {
-    val op = graft.core.CacheBay.register(
+    val op = graft.core.SessionCache.transient(
       lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct())
     val nOrders = op.agg(countDistinct(col("ok")).cast("long").as("n_orders"))
-    val itemSup = graft.core.CacheBay.register(
+    val itemSup = graft.core.SessionCache.transient(
       op.groupBy(col("p")).agg(count(lit(1)).cast("long").as("n_item")))
     val pairs = op.select(col("ok"), col("p").as("a"))
       .join(op.select(col("ok"), col("p").as("b")), Seq("ok"))

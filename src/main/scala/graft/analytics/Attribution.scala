@@ -46,7 +46,7 @@ object Attribution {
     // sort + lag/cumsum windows above the (reused) user_id exchange
     // re-run once per consumer (4-5x in the physical plan; exchange
     // reuse shares only the shuffle below them)
-    val s = graft.core.CacheBay.register(events
+    val s = graft.core.SessionCache.transient(events
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_micros(ts)").as("tus"))
       .withColumn("brk", when(lag(col("tus"), 1).over(byU).isNull ||
@@ -61,7 +61,7 @@ object Attribution {
       .orderBy(col("tus"), col("event_id"))
     // persisted: one row per converting session, consumed by the
     // touch join and the (direct) anti-join
-    val fp = graft.core.CacheBay.register(
+    val fp = graft.core.SessionCache.transient(
       s.filter(col("event_type") === "purchase")
       .withColumn("pr", row_number().over(bySess))
       .filter(col("pr") === 1)
@@ -70,7 +70,7 @@ object Attribution {
     // touches: converting-session events strictly before that purchase
     // (persisted: consumed by the credit rollup and, session-distinct,
     // by the (direct) anti-join)
-    val touches = graft.core.CacheBay.register(s
+    val touches = graft.core.SessionCache.transient(s
       .join(fp, Seq("user_id", "sid"))
       .filter(col("tus") < col("fp_tus") ||
         (col("tus") === col("fp_tus") && col("event_id") < col("fp_id")))

@@ -34,7 +34,7 @@ object BestSplit {
     // the prefix scan — without the boundary the fact scan + aggregate
     // run twice (the scan's internal range-repartition cache does not
     // cover the total side)
-    val byVal = graft.core.CacheBay.register(
+    val byVal = graft.core.SessionCache.transient(
       df.select(feature.cast("long").as("v"),
         label.cast("long").as("y"))
       .groupBy(col("v"))
@@ -47,7 +47,7 @@ object BestSplit {
     val cum = graft.operators.PrefixScan
       .prefixAgg(l, Seq("v"), "a1", "sum", "l1", "l1_x")
       .crossJoin(broadcast(tot))
-    val scored = graft.core.CacheBay.register(cum
+    val scored = graft.core.SessionCache.transient(cum
       .filter(col("nl") < col("n")) // right side must be non-empty
       .select(col("v"), col("nl"), col("l1"), col("n"), col("n1"),
         expr("coalesce(cast(assert_true(n <= 3037000499, " +

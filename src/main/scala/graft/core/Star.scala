@@ -23,8 +23,8 @@ import org.apache.spark.storage.StorageLevel
   * all 16 extract-family registry queries share one materialization of
   * the 4-table join instead of re-paying it per query (the reference
   * runs its 15 extracts against one shared Vertipaq model for the same
-  * reason). [[CacheBay]] drains only per-query transient persists, so
-  * this cache survives a whole Bench/Verify sweep.
+  * reason). The end-of-query release drops only query-lifetime blocks,
+  * so this cache survives a whole Bench/Verify sweep.
   */
 object Star {
   /** Fixed as-of date for all month-window extract queries. Chosen so

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis._
@@ -148,7 +148,7 @@ object Dedup {
     // re-evaluates the chain, and the join's inferred isnotnull(fp)
     // constraint re-inlines it a second time per leg (4 regex+digest
     // passes per document in the r17 before-plan)
-    val f = graft.core.CacheBay.register(
+    val f = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), col("source"),
         col("n_chars").cast("long").as("n_chars"),
         fingerprintMd5(col("text")).as("fp")))
@@ -281,7 +281,7 @@ object Dedup {
       bands: Int = Bands, minEst: Double = MinEstJaccard,
       shingles: Option[DataFrame] = None): DataFrame = {
     // both join sides share this lineage — persist, or it computes twice
-    val sig = graft.core.CacheBay.register(
+    val sig = graft.core.SessionCache.transient(
       minhashSignature(docs, numHashes, shingles))
     val bk = banded(sig, numHashes, bands)
     val a = bk.select(col("doc_id").as("a_id"), col("sig").as("a_sig"),
@@ -332,7 +332,7 @@ object Dedup {
     def half(off: Int) =
       conv(col("simhash").substr(off + 1, 32), 2, 10).cast("long")
     // reused by both join sides
-    val sh = graft.core.CacheBay.register(
+    val sh = graft.core.SessionCache.transient(
       simhash(docs, bits, shingles).select(col("doc_id"), col("simhash"),
         half(0).as("hi"), half(32).as("lo")))
     val keyStructs = BlockCombos.zipWithIndex.map { case (blocks, ci) =>
@@ -390,10 +390,10 @@ object Dedup {
       shingles: Option[DataFrame] = None,
       pairs: Option[DataFrame] = None): DataFrame = {
     // a provided pair frame (e.g. the session-shared [[sharedPairs]])
-    // carries its own persistence; only a per-call build registers with
-    // CacheBay for the end-of-query drain
+    // carries its own persistence; only a per-call build is a transient
+    // persist, released at the end of the query
     val edges = pairs.map(_.select(col("a_id"), col("b_id")))
-      .getOrElse(graft.core.CacheBay.register(
+      .getOrElse(graft.core.SessionCache.transient(
         minhashLshPairs(docs, shingles = shingles)
           .select(col("a_id"), col("b_id"))))
     if (edges.count() * 2 <= localMaxEdges)
@@ -432,11 +432,11 @@ object Dedup {
     // else is a singleton cluster and needs no propagation (pair
     // participants are a tiny fraction of the corpus, so each round's
     // frames stay small regardless of corpus size)
-    val edges = graft.core.CacheBay.register(
+    val edges = graft.core.SessionCache.transient(
       pairs.unionByName(pairs.select(col("b_id").as("a_id"),
         col("a_id").as("b_id")))
         .toDF("s", "t"))
-    var labels = graft.core.CacheBay.register(
+    var labels = graft.core.SessionCache.transient(
       edges.select(col("s").as("doc_id")).distinct()
         .select(col("doc_id"), col("doc_id").as("cluster_id")))
     // labels only ever decrease (min-propagation is monotone), so the
@@ -491,7 +491,7 @@ object Dedup {
   def shingleNovelty(docs: DataFrame, n: Int = ShingleN,
       shingles: Option[DataFrame] = None): DataFrame = {
     val ss = shingles.getOrElse(
-      graft.core.CacheBay.register(shingleSets(docs, n)))
+      graft.core.SessionCache.transient(shingleSets(docs, n)))
     val ex = ss.select(col("doc_id"), explode(col("shingles")).as("sh"))
     val dfreq = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     ex.join(dfreq, Seq("sh"))
@@ -571,12 +571,12 @@ object Dedup {
   def dupSpanRemoval(docs: DataFrame, n: Int = SpanN,
       minDf: Int = SpanMinDf): DataFrame = {
     import graft.text.CorpusStats.tokenArray
-    val toks = graft.core.CacheBay.register(
+    val toks = graft.core.SessionCache.transient(
       graft.core.Spread(docs)
         .select(col("doc_id"), tokenArray(col("text")).as("w")))
     // spans with their 0-based start position; persisted because both
     // the df aggregate and the coverage probe read it
-    val shp = graft.core.CacheBay.register(
+    val shp = graft.core.SessionCache.transient(
       toks.select(col("doc_id"),
         posexplode(shinglesOfTokens(col("w"), n)))
         .select(col("doc_id"), col("pos"), col("col").as("sh")))
@@ -649,9 +649,9 @@ object Dedup {
       incomingShingles: Option[DataFrame] = None,
       existingShingles: Option[DataFrame] = None): DataFrame =
     incrementalDedupBySig(
-      graft.core.CacheBay.register(
+      graft.core.SessionCache.transient(
         minhashSignature(incoming, numHashes, incomingShingles)),
-      graft.core.CacheBay.register(
+      graft.core.SessionCache.transient(
         minhashSignature(existing, numHashes, existingShingles)),
       numHashes, bands, minEst,
       allIncoming = Some(incoming.select(col("doc_id"))))
@@ -762,7 +762,7 @@ object Dedup {
     // re-evaluates normalize+split per element), and the frame feeds
     // three consumers (df-cap aggregate, and both sides via exF)
     lazy val ss = shingles.getOrElse(
-      graft.core.CacheBay.register(shingleSets(docs, n)))
+      graft.core.SessionCache.transient(shingleSets(docs, n)))
     val exF = cappedIndex.getOrElse {
       val ex = ss.select(col("doc_id"), explode(col("shingles")).as("sh"))
       val rare = ex.groupBy(col("sh"))
@@ -770,7 +770,7 @@ object Dedup {
         .filter(col("df") <= maxDf)
         .select(col("sh"))
       // read by the counts agg and BOTH sides of the pair join: persist
-      graft.core.CacheBay.register(ex.join(rare, Seq("sh")))
+      graft.core.SessionCache.transient(ex.join(rare, Seq("sh")))
     }
     val counts = exF.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val shared = overlap.getOrElse(
@@ -810,14 +810,14 @@ object Dedup {
       cappedIndex: Option[DataFrame] = None,
       overlap: Option[DataFrame] = None): DataFrame = {
     lazy val ss = shingles.getOrElse(
-      graft.core.CacheBay.register(shingleSets(docs, n)))
+      graft.core.SessionCache.transient(shingleSets(docs, n)))
     val exF = cappedIndex.getOrElse {
       val ex = ss.select(col("doc_id"), explode(col("shingles")).as("sh"))
       val rare = ex.groupBy(col("sh"))
         .agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf)
         .select(col("sh"))
-      graft.core.CacheBay.register(ex.join(rare, Seq("sh")))
+      graft.core.SessionCache.transient(ex.join(rare, Seq("sh")))
     }
     val counts = exF.groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_sh"))
@@ -885,7 +885,7 @@ object Dedup {
       shingles: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tauE6 = math.round(minJaccard * 1e6)
-    val ss = graft.core.CacheBay.register(
+    val ss = graft.core.SessionCache.transient(
       shingles.getOrElse(shingleSets(docs, n))
         .filter(size(col("shingles")) > 0))
     val ex = ss.select(col("doc_id"), explode(col("shingles")).as("sh"))
@@ -899,7 +899,7 @@ object Dedup {
     // 4.2 s tier). `pos` is the rank itself — free, and what the
     // positional filter below needs.
     // Persisted: BOTH sides of the candidate join read this frame.
-    val pfx = graft.core.CacheBay.register(ex
+    val pfx = graft.core.SessionCache.transient(ex
       .withColumn("dfc", count(lit(1))
         .over(Window.partitionBy(col("sh"))).cast("long"))
       .withColumn("n_sh", count(lit(1))
@@ -999,13 +999,13 @@ object Dedup {
     // and < n+w−1 words ⟺ < w grams, so the filter is semantics-free)
     // keeps PushDownPredicates from inlining the gram expression into a
     // predicate, Spread repairs single-file parallelism, and the
-    // persist (CacheBay) is the barrier that stops posexplode's
+    // transient persist is the barrier that stops posexplode's
     // Generate from re-inlining split(normalize) per element — without
     // it this ran 111 s at sf0.1 (one quadratic re-evaluation per gram
     // element on one core); with it, ~1 s
     val wcol = col("w")
     val cnt = size(wcol) - (n - 1)
-    val gramArrays = graft.core.CacheBay.register(
+    val gramArrays = graft.core.SessionCache.transient(
       graft.core.Spread(docs)
         .filter(size(split(normalize(col("text")), " ")) >= n + w - 1)
         .select(col("doc_id"), normalize(col("text")).as("nt"))
@@ -1069,12 +1069,12 @@ object Dedup {
     * reaches [[WinnowMinShared]]. */
   def winnowPairs(docs: DataFrame, maxDf: Int = WinnowMaxDf,
       minShared: Int = WinnowMinShared): DataFrame = {
-    val fps = graft.core.CacheBay.register(winnowedFingerprints(docs))
+    val fps = graft.core.SessionCache.transient(winnowedFingerprints(docs))
     val rare = fps.groupBy(col("fp"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select(col("fp"))
-    val f = graft.core.CacheBay.register(fps.join(rare, Seq("fp")))
+    val f = graft.core.SessionCache.transient(fps.join(rare, Seq("fp")))
     f.select(col("doc_id").as("a_id"), col("fp"))
       .join(f.select(col("doc_id").as("b_id"), col("fp")), Seq("fp"))
       .filter(col("a_id") < col("b_id"))

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -110,14 +110,14 @@ object Betweenness {
     * the same key set, hops = the level index). A sweep pays the
     * 4-round BFS once instead of twice per pass.
     *
-    * Lifetime mechanics (the [[graft.core.CheckpointBay]] tier
-    * contract, verbatim): each level is `trackedCheckpoint`ed first —
+    * Lifetime mechanics (the [[graft.core.SessionCache]] release-timing
+    * contract): each level is `trackedCheckpoint`ed first —
     * the per-round lineage truncation the loop needs regardless; a
     * level frame whose plan still chains `settled = ∪ prior levels`
     * grows combinatorially and was measured to triple the tier build
     * and slow BOTH consumers — then persisted through
     * [[graft.core.SessionCache]] and EAGERLY counted, all inside the
-    * build call, i.e. before any query-boundary drain can drop the
+    * build call, i.e. before any end-of-query release can drop the
     * checkpoint blocks the persist materialized from. Consumers see a
     * flat IMR-over-LogicalRDD plan. Priced as its own
     * `[cache:graph.bfslevels]` Bench tier. */
@@ -129,7 +129,7 @@ object Betweenness {
         pin = (df, i) => {
           val c = graft.core.SessionCache.cached(
             spark, s"bfslevels:$dir:$i")(df.trackedCheckpoint())
-          c.count() // materialize before any drain (contract above)
+          c.count() // materialize before any release (contract above)
           c
         })
     }

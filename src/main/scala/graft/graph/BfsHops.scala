@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,7 +67,7 @@ object CheapestPath {
   def seedCosts(weighted: DataFrame, rounds: Int = Rounds,
       undIn: Option[DataFrame] = None): DataFrame = {
     val und = undIn.getOrElse(
-      graft.core.CacheBay.register(costEdges(weighted)))
+      graft.core.SessionCache.transient(costEdges(weighted)))
     var dist = und.select(col("u").as("node")).distinct()
       .filter(col("node") % SeedMod === 0)
       .withColumn("cost_e6", lit(0L))

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +39,7 @@ object Communities {
   def labelPropagation(edges: DataFrame,
       rounds: Int = LpaRounds): DataFrame =
     labelPropagationUnd(
-      graft.core.CacheBay.register(Triangles.undirected(edges)), rounds)
+      graft.core.SessionCache.transient(Triangles.undirected(edges)), rounds)
 
   /** [[labelPropagation]] over an ALREADY-EXPANDED (and caller-
     * persisted) undirected edge frame `(u, v)` — the registry passes

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,7 @@ object Components {
       localMaxEdges: Long = graft.core.UnionFind.LocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val canon = graft.core.CacheBay.register(edges)
+    val canon = graft.core.SessionCache.transient(edges)
     if (canon.count() * 2 <= localMaxEdges) {
       val labels = graft.core.UnionFind.components(
         canon.select(col("a"), col("b")).as[(Long, Long)].collect())
@@ -80,7 +80,7 @@ object Components {
         .map { case (c, ms) => (c, ms.length.toLong) }
         .toSeq.toDF("component_id", "n_nodes")
     }
-    val und = graft.core.CacheBay.register(Triangles.undirected(canon))
+    val und = graft.core.SessionCache.transient(Triangles.undirected(canon))
     var labels = und.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
       .trackedCheckpoint()

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -57,7 +57,7 @@ object KCore {
     * subgraph: `(part, core_deg)`. */
   def kCore(edges: DataFrame, k: Int = K,
       rounds: Int = PeelRounds): DataFrame =
-    kCoreUnd(graft.core.CacheBay.register(Triangles.undirected(edges)),
+    kCoreUnd(graft.core.SessionCache.transient(Triangles.undirected(edges)),
       k, rounds)
 
   /** [[kCore]] over an ALREADY-EXPANDED (and caller-persisted)

@@ -35,7 +35,7 @@ object LinkPredict {
       .unionByName(edges.select(col("b").as("m"), col("a").as("x")))
     val deg = und.groupBy(col("m"))
       .agg(count(lit(1)).cast("long").as("deg"))
-    val nb = graft.core.CacheBay.register(
+    val nb = graft.core.SessionCache.transient(
       und.join(deg.filter(col("deg") <= maxMidDegree), Seq("m"))
         .select(col("m"), col("x")))
     val wedges = nb

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,8 @@ import scala.collection.mutable.ArrayBuffer
   * after the first shuffle) + one `groupBy(dst)` sum — the standard
   * distributed PageRank step, linear in |E| per iteration, no
   * adjacency ever collected. The edge list and degree table persist
-  * once ([[graft.core.CacheBay]]) and are reused by every iteration;
+  * once per query ([[graft.core.SessionCache.transient]]) and are
+  * reused by every iteration;
   * in [[purchaseRanks]] the iteration count is a small constant so the
   * unrolled lineage stays shallow, and [[purchaseRanksConverged]] is
   * the open-ended tolerance-driven loop with `localCheckpoint` per
@@ -106,9 +107,9 @@ object PageRank {
 
   private[graph] def purchaseGraph(orders: DataFrame,
       lineitem: DataFrame): (DataFrame, DataFrame) = {
-    val edges = graft.core.CacheBay.register(
+    val edges = graft.core.SessionCache.transient(
       rawPurchaseEdges(orders, lineitem))
-    (edges, graft.core.CacheBay.register(degreesOf(edges)))
+    (edges, graft.core.SessionCache.transient(degreesOf(edges)))
   }
 
   /** Session-cached purchase graph for the tables at `dir`: pagerank
@@ -169,7 +170,7 @@ object PageRank {
       graph: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val (edges, deg) = graph.getOrElse(purchaseGraph(orders, lineitem))
     // seeds: every 10th supplier — deterministic and SF-invariant
-    val restart = graft.core.CacheBay.register(
+    val restart = graft.core.SessionCache.transient(
       deg.select(col("src").as("node"),
         when(col("src") % 2 === 1 && expr("(src div 2) % 10") === 0,
           lit(RestartE6)).otherwise(lit(0L)).cast("long").as("restart")))

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -120,7 +120,7 @@ object Scc {
       : DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = graft.core.CacheBay.register(
+    val e = graft.core.SessionCache.transient(
       edges.select(col("src"), col("dst")).distinct())
     if (e.count() <= localMaxEdges) {
       val labels = localScc(e.as[(Long, Long)].collect())
@@ -307,7 +307,7 @@ object Scc {
   def tradeReciprocity(lineitem: DataFrame, orders: DataFrame,
       customer: DataFrame, supplier: DataFrame,
       nation: DataFrame): DataFrame =
-    tradeReciprocity(graft.core.CacheBay.register(
+    tradeReciprocity(graft.core.SessionCache.transient(
       tradeEdges(lineitem, orders, customer, supplier)), nation)
 
   /** Core face over a pre-derived (ideally [[sharedTradeEdges]]-
@@ -316,11 +316,11 @@ object Scc {
   def tradeReciprocity(edges: DataFrame, nation: DataFrame)
       : DataFrame = {
     // ADVICE r15: the mutual-pair self-join consumes this frame twice;
-    // register the projection so an UNPERSISTED caller doesn't pay the
+    // persist the projection so an UNPERSISTED caller doesn't pay the
     // fact-grain derivation twice in one query (on the SessionCache-
     // backed registry path the persist is a cheap projection of the
     // cached parent)
-    val e = graft.core.CacheBay.register(
+    val e = graft.core.SessionCache.transient(
       edges.select(col("src"), col("dst")))
     val mut = e.join(
       e.select(col("dst").as("src"), col("src").as("dst")),

@@ -94,12 +94,12 @@ object Triangles {
   def triangleCounts(edges: DataFrame): DataFrame = {
     // persistence belongs to the CALLER: the registry passes the
     // session-shared co-purchase cache (re-persisting it here would
-    // hand it to CacheBay's end-of-query drain and evict the family
+    // hand it to the end-of-query release and evict the family
     // cache mid-sweep); spec-sized frames don't need it
     val e = edges
     val und = e.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = graft.core.CacheBay.register(
+    val deg = graft.core.SessionCache.transient(
       und.groupBy(col("u")).agg(count(lit(1)).cast("long").as("deg")))
     val tris = triangleFrame(e, und, deg)
     val perNode = tris
@@ -118,7 +118,7 @@ object Triangles {
       deg: DataFrame): DataFrame = {
     // orient u→v iff (deg_u, u) < (deg_v, v): a strict total order, so
     // each undirected edge appears exactly once and out-degree ≤ √(2m)
-    val oriented = graft.core.CacheBay.register(
+    val oriented = graft.core.SessionCache.transient(
       und.join(deg, Seq("u"))
         .join(deg.select(col("u").as("v"), col("deg").as("deg_v")), Seq("v"))
         .filter(col("deg") < col("deg_v") ||
@@ -156,7 +156,7 @@ object Triangles {
     val e = weighted.select(col("a"), col("b"), col("w"))
     val und = e.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = graft.core.CacheBay.register(
+    val deg = graft.core.SessionCache.transient(
       und.groupBy(col("u")).agg(count(lit(1)).cast("long").as("deg")))
     val tris = triangleFrame(e, und, deg)
     val support = tris.select(explode(array(

@@ -197,7 +197,7 @@ object Readers {
       : (DataFrame, DataFrame) = {
     val corrupt = "_corrupt_record"
     val full = schema.add(corrupt, org.apache.spark.sql.types.StringType)
-    val parsed = graft.core.CacheBay.register(
+    val parsed = graft.core.SessionCache.transient(
       spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt)

@@ -1,6 +1,6 @@
 package graft.load
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -124,7 +124,7 @@ object Sinks {
     val pType = newDf.schema(partCol).dataType
     // the delta feeds three consumers (the partition-value collect,
     // the pk anti-join, the merged union) — persist for the merge span
-    val delta = graft.core.CacheBay.register(newDf)
+    val delta = graft.core.SessionCache.transient(newDf)
     val raw = spark.read.parquet(targetPath)
     // collect the affected values ALREADY CAST to the reader's
     // (inferred) partition type so the isin literals match the column

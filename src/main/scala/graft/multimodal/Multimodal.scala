@@ -450,7 +450,7 @@ object Multimodal {
       maxHamming: Long = AhashMaxHamming): DataFrame = {
     def half(off: Int) =
       conv(col("ahash").substr(off + 1, 32), 2, 10).cast("long")
-    val h = graft.core.CacheBay.register(
+    val h = graft.core.SessionCache.transient(
       hashes.select(col("doc_id"), col("ahash"),
         half(0).as("hi"), half(32).as("lo")))
     val seg = h.select(col("doc_id"), col("hi"), col("lo"),

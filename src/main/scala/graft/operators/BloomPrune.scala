@@ -107,7 +107,7 @@ object BloomPrune {
   def bloomFprAudit(fact: DataFrame, factKey: String, dim: DataFrame,
       dimKey: String, bits: Int = FilterBits,
       hashes: Int = NumHashes): DataFrame = {
-    val keys = graft.core.CacheBay.register(
+    val keys = graft.core.SessionCache.transient(
       fact.select(col(factKey)).distinct())
     val passed = bloomFilteredFact(keys, factKey, dim, dimKey,
       bits, hashes)

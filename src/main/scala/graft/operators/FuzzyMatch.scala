@@ -48,7 +48,7 @@ object FuzzyMatch {
     val n = rows.select(col(keyCol).as("key"),
       lower(col(nameCol)).as("nm"))
     // distinct-domain table — all pairwise work happens below here
-    val dn = graft.core.CacheBay.register(
+    val dn = graft.core.SessionCache.transient(
       n.groupBy(col("nm")).agg(count(lit(1)).as("n_rows"))
         .select(col("nm"),
           split(col("nm"), " ").getItem(0).as("blk")))

@@ -93,10 +93,10 @@ object KmvSketch {
     val dh = df.filter(col(typeCol).isin(keyA, keyB))
       .select(col(typeCol).as("grp"), h.as("h")).distinct()
       .withColumn("nh", -col("h"))
-    val kept = graft.core.CacheBay.register(
+    val kept = graft.core.SessionCache.transient(
       TopKPerKey.topKPerKey(dh, Seq("grp"), "nh", "h", k)
         .select(col("grp"), col("nh"), col("h")))
-    val uk = graft.core.CacheBay.register(
+    val uk = graft.core.SessionCache.transient(
       TopKPerKey.topKPerKey(
         kept.select(lit("u").as("grp"), col("nh"), col("h")).distinct(),
         Seq("grp"), "nh", "h", k)

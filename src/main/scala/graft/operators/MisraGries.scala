@@ -40,7 +40,7 @@ object MisraGries {
       k: Int = K): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val keyed = graft.core.CacheBay.register(
+    val keyed = graft.core.SessionCache.transient(
       graft.core.Spread(df)
         .select(col(keyCol).cast("string").as("key"))
         .filter(col("key").isNotNull))

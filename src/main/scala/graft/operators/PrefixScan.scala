@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * domination, "rank of first exceed") actually need.
   *
   * The range partitioner samples the frame to place boundaries; the
-  * partitioned frame is persisted (via [[graft.core.CacheBay]]) so the
-  * totals pass and the scan pass read the SAME materialized
+  * partitioned frame is persisted ([[graft.core.SessionCache.transient]])
+  * so the totals pass and the scan pass read the SAME materialized
   * partitioning.
   */
 object PrefixScan {
@@ -59,7 +59,7 @@ object PrefixScan {
     val parts = if (numParts > 0) numParts
       else spark.sparkContext.defaultParallelism
     val oc = order.map(col)
-    val ranged = graft.core.CacheBay.register(
+    val ranged = graft.core.SessionCache.transient(
       df.repartitionByRange(parts, oc: _*)
         .withColumn("_pid", spark_partition_id()))
     // phase 2: per-partition sequential scan (sorted within partition)

@@ -378,7 +378,7 @@ object Pipeline {
   def decontaminate(docs: DataFrame, benchMod: Int = BenchMod,
       minOverlap: Double = MinContamOverlap,
       shingles: Option[DataFrame] = None): DataFrame = {
-    val ss = shingles.getOrElse(graft.core.CacheBay.register(
+    val ss = shingles.getOrElse(graft.core.SessionCache.transient(
       graft.dedup.Dedup.shingleSets(docs)))
     val ex = ss.select(col("doc_id"), explode(col("shingles")).as("sh"))
     val bench = ex.filter(col("doc_id") % benchMod === 0)
@@ -418,10 +418,10 @@ object Pipeline {
   def contaminationSpans(docs: DataFrame,
       benchMod: Int = BenchMod): DataFrame = {
     val n = graft.dedup.Dedup.ShingleN
-    val toks = graft.core.CacheBay.register(
+    val toks = graft.core.SessionCache.transient(
       docs.select(col("doc_id"),
         graft.text.CorpusStats.tokenArray(col("text")).as("w")))
-    val shp = graft.core.CacheBay.register(
+    val shp = graft.core.SessionCache.transient(
       toks.select(col("doc_id"), posexplode(wordShinglesOf(col("w"), n)))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("col").as("sh")))
@@ -468,10 +468,10 @@ object Pipeline {
   def exciseContamination(docs: DataFrame,
       benchMod: Int = BenchMod): DataFrame = {
     val n = graft.dedup.Dedup.ShingleN
-    val toks = graft.core.CacheBay.register(
+    val toks = graft.core.SessionCache.transient(
       docs.select(col("doc_id"),
         graft.text.CorpusStats.tokenArray(col("text")).as("w")))
-    val shp = graft.core.CacheBay.register(
+    val shp = graft.core.SessionCache.transient(
       toks.select(col("doc_id"), posexplode(wordShinglesOf(col("w"), n)))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("col").as("sh")))
@@ -721,7 +721,7 @@ object Pipeline {
     * value key. Tile = ((rank-1)·k) div N + 1: same integer arithmetic
     * in both engines, no NTILE remainder-placement ambiguity. */
   def lengthDeciles(docs: DataFrame, k: Int = NumTiles): DataFrame = {
-    val base = graft.core.CacheBay.register(
+    val base = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), col("n_chars")))
     val off = base.groupBy(col("n_chars"))
       .agg(count(lit(1)).as("c"))
@@ -762,7 +762,7 @@ object Pipeline {
       seed: String = ShuffleSeed, nShards: Int = NumShards,
       scored: Option[DataFrame] = None): DataFrame = {
     val base = scored.map(_.select(col("doc_id"), col("quality_e6")))
-      .getOrElse(graft.core.CacheBay.register(
+      .getOrElse(graft.core.SessionCache.transient(
         qualityScored(docs).select(col("doc_id"), col("quality_e6"))))
     val off = base.groupBy(col("quality_e6"))
       .agg(count(lit(1)).as("c"))
@@ -932,7 +932,7 @@ object Pipeline {
       scoredIn: Option[DataFrame] = None): DataFrame = {
     val scored = scoredIn
       .map(_.select(col("source"), col("doc_id"), col("quality_e6")))
-      .getOrElse(graft.core.CacheBay.register(
+      .getOrElse(graft.core.SessionCache.transient(
         qualityScored(docs)
           .select(col("source"), col("doc_id"), col("quality_e6"))))
     val off = scored.groupBy(col("source"), col("quality_e6"))
@@ -979,7 +979,7 @@ object Pipeline {
     val base = scored
       .map(_.select(col("lang"), col("doc_id"), col("quality_e6"),
         col("n_tokens")))
-      .getOrElse(graft.core.CacheBay.register(
+      .getOrElse(graft.core.SessionCache.transient(
         qualityScored(docs)
           .select(col("lang"), col("doc_id"), col("quality_e6"),
             col("n_tokens"))))
@@ -1121,7 +1121,7 @@ object Pipeline {
     val weights = docs.select(col("source")).distinct()
       .withColumn("weight", row_number().over(
         Window.orderBy(col("source"))).cast("long"))
-    val ranged = graft.core.CacheBay.register(
+    val ranged = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), col("source"))
         .join(broadcast(weights), Seq("source"))
         .withColumn("src_rank", row_number().over(
@@ -1170,7 +1170,7 @@ object Pipeline {
           .when(col("hb") < TrainPct + ValidPct, lit("valid"))
           .otherwise(lit("test")).as("split"),
         expr(s"q_e6 div $DriftBucketE6").cast("long").as("q_bucket"))
-    val counts = graft.core.CacheBay.register(
+    val counts = graft.core.SessionCache.transient(
       b.groupBy(col("split"), col("q_bucket"))
         .agg(count(lit(1)).cast("long").as("n")))
     val splitTotals = counts.groupBy(col("split"))
@@ -1279,7 +1279,7 @@ object Pipeline {
     // materializes each once instead of once per consumer per pass
     val curated = curatedIn.getOrElse(curatedCorpus(docs, shingles))
       .select(col("doc_id"))
-    val cleaned = graft.core.CacheBay.register(
+    val cleaned = graft.core.SessionCache.transient(
       paraDedupIn.getOrElse(graft.dedup.Dedup.paragraphDedup(docs))
         .join(curated, Seq("doc_id"), "left_semi")
         .join(docs.select(col("doc_id"), col("lang"), col("source")),
@@ -1295,7 +1295,7 @@ object Pipeline {
     // subtree (join + two windows over the corpus) re-evaluates per
     // consumer (guide §2.4: two ops keyed off one derivation share
     // one materialization; measured r16: ~1 s of the 4.2 s query)
-    val selected = graft.core.CacheBay.register(tokenBudgetSelect(
+    val selected = graft.core.SessionCache.transient(tokenBudgetSelect(
       cleaned.join(keep2, Seq("doc_id"), "left_semi"), budgetPerLang)
       .select(col("doc_id"), col("n_tokens")))
     val shuffled = shuffleShards(selected, nShards = nShards)
@@ -1473,7 +1473,7 @@ object Pipeline {
   def tClosenessAudit(df: DataFrame, quasiCols: Seq[String],
       sensitive: String, tPpm: Long = TClosenessPpm): DataFrame = {
     val q = quasiCols.map(col)
-    val cells = graft.core.CacheBay.register(
+    val cells = graft.core.SessionCache.transient(
       df.groupBy(q :+ col(sensitive): _*)
         .agg(count(lit(1)).cast("long").as("c")))
     val classes = cells.groupBy(q: _*)

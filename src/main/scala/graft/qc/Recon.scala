@@ -371,7 +371,7 @@ object Recon {
           "n1 <= 3037000499 and n2 <= 3037000499, " +
           "'KS cross products exceed the Long-exact range: move to " +
           "decimal(38)') as bigint), 0) + c1 * n2 - c2 * n1").as("d"))
-    val scanned = graft.core.CacheBay.register(
+    val scanned = graft.core.SessionCache.transient(
       graft.operators.PrefixScan
         .prefixAgg(merged, Seq("v"), "d", "sum", "cum", "cum_x")
         .select(col("v"), col("n1"), col("n2"),
@@ -764,7 +764,7 @@ object Recon {
   def mutualInfoBits(df: DataFrame, a: Column, b: Column): DataFrame = {
     // the cell frame feeds three reductions — persist the |A|·|B|-row
     // aggregate so the fact table shuffles once, not three times
-    val cells = graft.core.CacheBay.register(
+    val cells = graft.core.SessionCache.transient(
       df.select(a.as("a"), b.as("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).cast("long").as("c"))).toDF()
@@ -821,7 +821,7 @@ object Recon {
       : DataFrame = {
     // four reductions read the cell frame (marginals, total, the
     // per-cell pass) — persist it so the fact shuffles once
-    val cells = graft.core.CacheBay.register(
+    val cells = graft.core.SessionCache.transient(
       df.select(a.as("a"), b.as("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).cast("long").as("c_ab"))).toDF()

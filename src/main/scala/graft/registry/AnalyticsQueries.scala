@@ -850,7 +850,7 @@ object AnalyticsQueries {
       // (cur) halves — two consumers, so without the cache boundary the
       // whole history derivation (fact aggregate + island windows) runs
       // twice (8 scans / 13 exchanges in the r16 plan dump)
-      val dim = graft.core.CacheBay.register(Analytics.scd2HistoryOf(
+      val dim = graft.core.SessionCache.transient(Analytics.scd2HistoryOf(
           orders.filter(col("o_orderdate") < lit("1999-01-01")))
         .withColumn("mx", max(col("valid_from")).over(w))
         .select(col("o_custkey"), col("attr"), col("valid_from"),

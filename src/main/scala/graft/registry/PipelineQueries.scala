@@ -490,7 +490,7 @@ object PipelineQueries {
       // documents and re-evaluates the chain, with the join's inferred
       // isnotnull(fp) re-inlining it once more per leg (the
       // dedup_savings shape, 4 chain evaluations per document)
-      val t = graft.core.CacheBay.register(
+      val t = graft.core.SessionCache.transient(
         docs(s, d).select(col("source"), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tok"),
           TextAnalysis.fingerprintMd5(col("text")).as("fp")))

@@ -24,25 +24,22 @@ object SimilarityQueries {
     * (base index) and applies the arrival batch (v1); every later
     * invocation — the bench's second pass, a Verify rerun — finds the
     * committed v1 and replays as a read-only no-op, which is exactly
-    * the incremental contract under test. A fresh temp root per JVM
-    * keeps stale state from an older build out. */
-  private val idxRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * the incremental contract under test. A fresh temp root per
+    * session (and after each `SessionCache.clear`) keeps stale state
+    * from an older build out; a shutdown hook deletes it. */
   private def stateRoot(s: SparkSession, kind: String, d: String)
       : String =
-    idxRoots.computeIfAbsent(
-      System.identityHashCode(s).toString + "|" + kind + "|" + d, _ => {
-        val p = java.nio.file.Files.createTempDirectory(
-          s"graft_${kind}_idx_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          } catch { case _: Throwable => () }
-        }))
-        p.toFile.getAbsolutePath
-      })
+    graft.core.SessionCache.memo(s, s"idxroot:$kind:$d") {
+      val p = java.nio.file.Files.createTempDirectory(s"graft_${kind}_idx_")
+      Runtime.getRuntime.addShutdownHook(new Thread(() => {
+        try {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+            .foreach(java.nio.file.Files.deleteIfExists(_))
+        } catch { case _: Throwable => () }
+      }))
+      p.toFile.getAbsolutePath
+    }
 
   /** Session-memoized deterministic Lloyd quantizer for the tables at
     * `dir` — the BPE-merges precedent (`bpemerges:$d`): the fit is a

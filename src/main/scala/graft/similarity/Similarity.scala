@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -203,8 +203,8 @@ object Similarity {
     * bucket; ranking identical to brute force within the bucket. */
   def lshTopK(emb: DataFrame, k: Int = TopK, queryMod: Int = QueryMod,
       nBits: Int = NumHyperplanes): DataFrame = {
-    // both join sides read this lineage — persist via CacheBay
-    val bucketed = graft.core.CacheBay.register(
+    // both join sides read this lineage — a transient persist
+    val bucketed = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"),
           asDouble(col("embedding")).as("v"),
@@ -239,7 +239,7 @@ object Similarity {
     * treatments, both compatible with this key. */
   def filteredTopK(emb: DataFrame, k: Int = TopK,
       queryMod: Int = QueryMod, nBits: Int = NumHyperplanes): DataFrame = {
-    val bucketed = graft.core.CacheBay.register(
+    val bucketed = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), col("label").cast("long").as("label"),
           asDouble(col("embedding")).as("v"),
@@ -279,7 +279,7 @@ object Similarity {
     * [[nearestNeighborExact]] remains the test oracle). */
   def nearestNeighbor(emb: DataFrame,
       nBits: Int = NumHyperplanes): DataFrame = {
-    val bucketed = graft.core.CacheBay.register(
+    val bucketed = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"),
           asDouble(col("embedding")).as("v"),
@@ -324,7 +324,7 @@ object Similarity {
     * the spec pins the planted-geometry case). */
   def hardNegatives(emb: DataFrame, queryMod: Int = QueryMod,
       nBits: Int = NumHyperplanes): DataFrame = {
-    val bucketed = graft.core.CacheBay.register(
+    val bucketed = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), col("label").cast("long").as("label"),
           asDouble(col("embedding")).as("v"),
@@ -425,7 +425,7 @@ object Similarity {
     * wrapped result after. */
   def lloydCentersE6(emb: DataFrame, nCells: Int = 16,
       iters: Int = LloydIters): Array[Array[Long]] = {
-    val q = graft.core.CacheBay.register(graft.core.Spread(emb)
+    val q = graft.core.SessionCache.transient(graft.core.Spread(emb)
       .select(col("vec_id"),
         transform(asDouble(col("embedding")),
           x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))
@@ -486,7 +486,7 @@ object Similarity {
       nCells: Int = 16, nProbe: Int = 2,
       iters: Int = LloydIters,
       centersE6: Option[Array[Array[Long]]] = None): DataFrame = {
-    val feat = graft.core.CacheBay.register(
+    val feat = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"),
           asDouble(col("embedding")).as("v"),
@@ -582,7 +582,7 @@ object Similarity {
         spark.read.parquet(s"$root/v0").unionByName(assignTop1(batch)),
         1L, root)
     val idx = VersionedState.current(spark, root).get
-    val feat = graft.core.CacheBay.register(
+    val feat = graft.core.SessionCache.transient(
       graft.core.Spread(emb).select(col("vec_id"),
         asDouble(col("embedding")).as("v"),
         l2Norm(asDouble(col("embedding"))).as("nrm")))
@@ -648,7 +648,7 @@ object Similarity {
     // 1000+ leaf terms — past the whole-stage-codegen method limits,
     // i.e. interpreted tree-walking per row (measured 6.8 s at sf0.1
     // vs sub-second native)
-    val bucketed = graft.core.CacheBay.register(
+    val bucketed = graft.core.SessionCache.transient(
       emb.select(col("vec_id"),
         asDouble(col("embedding")).as("v"),
         lshBucket(col("embedding"), nBits).as("bucket")))
@@ -724,7 +724,7 @@ object Similarity {
       VersionedState.commit(
         spark.read.parquet(s"$root/v0").unionByName(encode(batch)),
         1L, root)
-    val idx = graft.core.CacheBay.register(
+    val idx = graft.core.SessionCache.transient(
       VersionedState.current(spark, root).get)
     val feat = graft.core.Spread(emb)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -771,7 +771,7 @@ object Similarity {
     * key and two 1-row counts — no new corpus work. */
   def mutualNeighborRate(emb: DataFrame,
       nBits: Int = NumHyperplanes): DataFrame = {
-    val nn = graft.core.CacheBay.register(
+    val nn = graft.core.SessionCache.transient(
       nearestNeighbor(emb, nBits).select(col("q_id"), col("nn_id")))
     val mutual = nn.join(
       nn.select(col("nn_id").as("q_id"), col("q_id").as("nn_id")),
@@ -811,7 +811,7 @@ object Similarity {
     * salted join, applied to the ANN candidate join. */
   def lshSplitBuckets(emb: DataFrame, nBits: Int = NumHyperplanes,
       cap: Int = SplitCap): DataFrame = {
-    val bucketed = graft.core.CacheBay.register(
+    val bucketed = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"),
           asDouble(col("embedding")).as("v"),
@@ -833,7 +833,7 @@ object Similarity {
   def lshSplitTopK(emb: DataFrame, k: Int = TopK,
       queryMod: Int = QueryMod, nBits: Int = NumHyperplanes,
       cap: Int = SplitCap): DataFrame = {
-    val b = graft.core.CacheBay.register(lshSplitBuckets(emb, nBits, cap))
+    val b = graft.core.SessionCache.transient(lshSplitBuckets(emb, nBits, cap))
     val q = b.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("v").as("q_emb"),
         col("nrm").as("q_norm"), col("bucket"),
@@ -962,7 +962,7 @@ object Similarity {
   def ivfRecallAudit(emb: DataFrame, k: Int = TopK, queryMod: Int = QueryMod,
       nCells: Int = 16, nProbe: Int = 2,
       exactIn: Option[DataFrame] = None): DataFrame = {
-    val feat = graft.core.CacheBay.register(
+    val feat = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"),
           l2Norm(asDouble(col("embedding"))).as("nrm")))
@@ -999,7 +999,7 @@ object Similarity {
     val exact = exactIn
       .map(_.filter(col("rank") <= maxK)
         .select(col("q_id"), col("nn_id"), col("rank").as("e_rank")))
-      .getOrElse(graft.core.CacheBay.register(
+      .getOrElse(graft.core.SessionCache.transient(
         bruteForceTopK(emb, maxK, queryMod)
           .select(col("q_id"), col("nn_id"), col("rank").as("e_rank"))))
     val approx = lshTopK(emb, maxK, queryMod, nBits)
@@ -1069,7 +1069,7 @@ object Similarity {
       queryMod: Int = QueryMod,
       prefixDims: Int = MatryoshkaDims,
       exactIn: Option[DataFrame] = None): DataFrame = {
-    val feat = graft.core.CacheBay.register(
+    val feat = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"),
           slice(asDouble(col("embedding")), 1, prefixDims).as("fv")))
@@ -1098,8 +1098,8 @@ object Similarity {
   val RrfC = 60
 
   /** The matryoshka prefix / int8-quantized / JL-projected feature
-    * frames [[rrfFusion]] ranks over — session-transient, registered
-    * with [[graft.core.CacheBay]] so the three ranking legs don't
+    * frames [[rrfFusion]] ranks over — query-lifetime persists
+    * ([[graft.core.SessionCache.transient]]) so the three ranking legs don't
     * re-derive them. */
   private def fusionFeatures(emb: DataFrame): Seq[DataFrame] = {
     val base = graft.core.Spread(emb)
@@ -1117,7 +1117,7 @@ object Similarity {
       randomProjection(emb).select(col("vec_id"),
         array((0 until 8).map(j => col(s"p$j").cast("double")): _*)
           .as("fv"))
-    ).map(graft.core.CacheBay.register(_))
+    ).map(graft.core.SessionCache.transient(_))
   }
 
   /** Reciprocal-rank fusion of compressed retrieval rankings (X195) —
@@ -1194,7 +1194,7 @@ object Similarity {
       queryMod: Int = QueryMod,
       lambdaNum: Long = MmrLambdaNum,
       localMaxRows: Long = MmrLocalMaxRows): DataFrame = {
-    val feat = graft.core.CacheBay.register(
+    val feat = graft.core.SessionCache.transient(
       graft.core.Spread(emb).select(col("vec_id"),
         asDouble(col("embedding")).as("v"),
         l2Norm(asDouble(col("embedding"))).as("nrm")))
@@ -1204,7 +1204,7 @@ object Similarity {
     val c = feat.select(col("vec_id").as("nn_id"), col("v").as("c_emb"),
       col("nrm").as("c_norm"))
     val byQ = Window.partitionBy(col("q_id"))
-    val cand = graft.core.CacheBay.register(
+    val cand = graft.core.SessionCache.transient(
       broadcast(q).join(c, col("q_id") =!= col("nn_id"))
         .select(col("q_id"), col("nn_id"),
           floor(pairCos * 1000000.0 + 0.5).cast("long").as("rel_e6"))
@@ -1217,7 +1217,7 @@ object Similarity {
     val cb = cand.select(col("q_id"), col("nn_id").as("b_id"))
       .join(feat.select(col("vec_id").as("b_id"), col("v").as("c_emb"),
         col("nrm").as("c_norm")), Seq("b_id"))
-    val cc = graft.core.CacheBay.register(
+    val cc = graft.core.SessionCache.transient(
       ca.join(cb, Seq("q_id")).filter(col("a_id") =!= col("b_id"))
         .select(col("q_id"), col("a_id"), col("b_id"),
           floor(pairCos * 1000000.0 + 0.5).cast("long").as("sim_e6")))
@@ -1381,7 +1381,7 @@ object Similarity {
     * is its dim-keyed self-join (|labels|²·dim intermediate — label
     * counts are taxonomy-sized, never corpus-sized). */
   def centroidDistances(emb: DataFrame): DataFrame = {
-    val c = graft.core.CacheBay.register(labelCentroids(emb)
+    val c = graft.core.SessionCache.transient(labelCentroids(emb)
       .select(col("label"), col("dim"), col("centroid_e6")))
     c.select(col("label").as("label_a"), col("dim"),
         col("centroid_e6").as("ca"))
@@ -1415,7 +1415,7 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         col("pos").cast("long").as("dim"),
         floor(col("col") * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
-    val perVec = graft.core.CacheBay.register(
+    val perVec = graft.core.SessionCache.transient(
       q.join(broadcast(cent), Seq("label", "dim"))
         .groupBy(col("vec_id"), col("label"))
         .agg(sum((col("q") - col("centroid_e6")) *
@@ -1458,7 +1458,7 @@ object Similarity {
     // centroid aggregate and the distance join — unpersisted, the
     // embedding array explodes twice ([[labelCentroids]] re-derives
     // the same rows label-grain)
-    val q = graft.core.CacheBay.register(graft.core.Spread(emb)
+    val q = graft.core.SessionCache.transient(graft.core.Spread(emb)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         posexplode(asDouble(col("embedding"))))
       .select(col("vec_id"), col("label"),
@@ -1516,7 +1516,7 @@ object Similarity {
     * float-formatting tie cross-engine. */
   def semanticDedup(emb: DataFrame, nBits: Int = NumHyperplanes,
       minCosE6: Long = SemDupMinCosE6): DataFrame = {
-    val coded = graft.core.CacheBay.register(
+    val coded = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .withColumn("bucket", lshBucket(col("v"), nBits)))
@@ -1744,7 +1744,7 @@ object Similarity {
     * audit tail is unchanged. */
   def splitLeakageAudit(emb: DataFrame, nBits: Int = NumHyperplanes,
       minCosE6: Long = SemDupMinCosE6, trainPct: Int = 80): DataFrame = {
-    val coded = graft.core.CacheBay.register(
+    val coded = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .withColumn("bucket", lshBucket(col("v"), nBits))
@@ -1864,7 +1864,7 @@ object Similarity {
   def thresholdCalibration(emb: DataFrame,
       nBits: Int = NumHyperplanes,
       thresholds: Seq[Long] = CalibThresholdsE6): DataFrame = {
-    val coded = graft.core.CacheBay.register(
+    val coded = graft.core.SessionCache.transient(
       graft.core.Spread(emb)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .withColumn("bucket", lshBucket(col("v"), nBits)))

@@ -173,8 +173,8 @@ object StreamDedup {
       .map(_.filter(col("is_dup") === 0 && col("sig").isNotNull)
         .select(col("doc_id"), col("sig")))
       .getOrElse(emptySigs(spark))
-    // scoped persist (NOT CacheBay: a foreachBatch body must not drain
-    // caches a surrounding query registered): the signature frame
+    // scoped persist (NOT SessionCache.transient: a foreachBatch body
+    // must not release blocks a surrounding query holds): the signature frame
     // feeds both the banding join and the ledger-row join
     val inSig = Dedup.minhashSignature(batch).persist()
     try {

@@ -44,7 +44,7 @@ object Bm25 {
     // (doc_id, term) aggregate and its tiny descendants — a leading
     // repartition would exchange the ENTIRE raw corpus text for nothing
     // (VERDICT r4 #4; asserted in PlanAuditSpec)
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), split(normalize(col("text")), " ").as("w"))
         .select(col("doc_id"), col("w"), size(col("w")).cast("long").as("dl")))
     val stats = t.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.core.CheckpointBay.Checkpointable
+import graft.core.SessionCache.Checkpointable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +46,7 @@ object CorpusStats {
     // groupBys partial-aggregate map-side and shuffle their own keys);
     // bigrams derive linearly from the cached attribute
     // (wordShinglesOf) on the one leg that needs them
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), tokenArray(col("text")).as("w")))
     val uni = t.select(col("doc_id"), explode(col("w")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
@@ -87,7 +87,7 @@ object CorpusStats {
     * exploded tokens past it (both sides partitioned by token — the
     * vocab is corpus-sized, never broadcast), one per-doc rollup. */
   def tokenRarity(docs: DataFrame): DataFrame = {
-    val ex = graft.core.CacheBay.register(
+    val ex = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("tok")))
     val vocab = ex.groupBy(col("tok"))
       .agg(count(lit(1)).cast("long").as("ctf"))
@@ -124,9 +124,9 @@ object CorpusStats {
     * per-doc rollup; the global total N is a 1-row aggregate joined by
     * broadcast. */
   def surprisalScores(docs: DataFrame): DataFrame = {
-    val ex = graft.core.CacheBay.register(
+    val ex = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("tok")))
-    val vocab = graft.core.CacheBay.register(
+    val vocab = graft.core.SessionCache.transient(
       ex.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("ctf")))
     val total = vocab.agg(sum(col("ctf")).cast("long").as("n_total"))
     val agg = ex.join(vocab, Seq("tok"))
@@ -162,12 +162,12 @@ object CorpusStats {
     * at type grain and ONE bigram-keyed equi-join streams instances
     * past them — no broadcast of anything vocabulary-sized. */
   def bigramSurprisalScores(docs: DataFrame): DataFrame = {
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), tokenArray(col("text")).as("w")))
-    val exb = graft.core.CacheBay.register(
+    val exb = graft.core.SessionCache.transient(
       t.select(col("doc_id"),
         explode(wordShinglesOf(col("w"), 2)).as("bigram")))
-    val bi = graft.core.CacheBay.register(
+    val bi = graft.core.SessionCache.transient(
       exb.groupBy(col("bigram"))
         .agg(count(lit(1)).cast("long").as("n_ab")))
     val heads = bi
@@ -229,12 +229,12 @@ object CorpusStats {
     * vocabulary-sized is ever broadcast. */
   def knSurprisalScores(docs: DataFrame,
       dPpm: Long = KnDiscountPpm): DataFrame = {
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), tokenArray(col("text")).as("w")))
-    val exb = graft.core.CacheBay.register(
+    val exb = graft.core.SessionCache.transient(
       t.select(col("doc_id"),
         explode(wordShinglesOf(col("w"), 2)).as("bigram")))
-    val bi = graft.core.CacheBay.register(
+    val bi = graft.core.SessionCache.transient(
       exb.groupBy(col("bigram"))
         .agg(count(lit(1)).cast("long").as("n_ab"))
         .withColumn("a", split(col("bigram"), " ").getItem(0))
@@ -430,7 +430,7 @@ object CorpusStats {
     // cache ONLY the token array (no upstream repartition — see
     // repetitionSignals); bigrams derive linearly from the cached
     // attribute (wordShinglesOf) on the one leg that needs them
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), tokenArray(col("text")).as("w")))
     val uni = t.select(explode(col("w")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).cast("long").as("n_tok"))
@@ -500,9 +500,9 @@ object CorpusStats {
     * a bounded ×n position explode and per-doc distinct-count — every
     * shuffle on (doc, gram) or doc keys, linear at any corpus size. */
   def dupNgramCoverage(docs: DataFrame, n: Int = DupGramN): DataFrame = {
-    val t = graft.core.CacheBay.register(
+    val t = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), tokenArray(col("text")).as("w")))
-    val grams = graft.core.CacheBay.register(
+    val grams = graft.core.SessionCache.transient(
       t.select(col("doc_id"), posexplode(wordShinglesOf(col("w"), n)))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
           col("col").as("g")))
@@ -633,7 +633,7 @@ object CorpusStats {
       val bj = (40503L * (j + 7)) % P
       (base * aj + bj) % P % width
     }
-    val toks = graft.core.CacheBay.register(
+    val toks = graft.core.SessionCache.transient(
       docs.select(col("source"), explode(tokenArray(col("text"))).as("tok"))
         .withColumn("base",
           conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % P))
@@ -850,9 +850,9 @@ object CorpusStats {
     * broadcast, one token-keyed join, one per-doc rollup. */
   def dsirWeights(docs: DataFrame,
       targetLang: String = DsirTargetLang): DataFrame = {
-    val ex = graft.core.CacheBay.register(
+    val ex = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("tok")))
-    val raw = graft.core.CacheBay.register(
+    val raw = graft.core.SessionCache.transient(
       ex.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("ctf")))
     val tgtIds = docs.filter(col("lang") === targetLang).select(col("doc_id"))
     val tgt = ex.join(tgtIds, Seq("doc_id"), "left_semi")
@@ -932,11 +932,11 @@ object CorpusStats {
     * asc) total order. */
   def vocabDrift(docs: DataFrame, k: Int = DriftK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ex = graft.core.CacheBay.register(
+    val ex = graft.core.SessionCache.transient(
       docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("tok")))
     def side(p: Int) = ex.filter(col("doc_id") % 2 === p)
       .groupBy(col("tok")).agg(count(lit(1)).cast("long").as(s"c$p"))
-    val joined = graft.core.CacheBay.register(
+    val joined = graft.core.SessionCache.transient(
       side(0).join(side(1), Seq("tok"), "full_outer")
         .select(col("tok"), coalesce(col("c0"), lit(0L)).as("c0"),
           coalesce(col("c1"), lit(0L)).as("c1")))
@@ -972,7 +972,7 @@ object CorpusStats {
     * [[vocabTopK]] total order, data-independent. */
   def sourceOverlap(docs: DataFrame, k: Int = OverlapK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val top = graft.core.CacheBay.register(
+    val top = graft.core.SessionCache.transient(
       docs.select(col("source"), explode(tokenArray(col("text"))).as("tok"))
         .groupBy(col("source"), col("tok"))
         .agg(count(lit(1)).cast("long").as("n"))
@@ -1020,7 +1020,7 @@ object CorpusStats {
   def vocabGrowth(docs: DataFrame, buckets: Int = GrowthBuckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val maxId = docs.agg(max(col("doc_id")).cast("long").as("max_id"))
-    val ex = graft.core.CacheBay.register(
+    val ex = graft.core.SessionCache.transient(
       docs.crossJoin(broadcast(maxId))
         .select(col("doc_id"),
           expr(s"(doc_id * $buckets) div (max_id + 1)").as("bkt"),
@@ -1088,7 +1088,7 @@ object CorpusStats {
     * pairs, bounded by the SOURCE count squared, not by df). Output
     * is |sources|² rows. */
   def sourceVocabOverlap(docs: DataFrame): DataFrame = {
-    val sv = graft.core.CacheBay.register(
+    val sv = graft.core.SessionCache.transient(
       docs.select(col("source"),
           explode(tokenArray(col("text"))).as("token"))
         .distinct())
@@ -1336,7 +1336,7 @@ object CorpusStats {
     val uniq = pw.groupBy(col("source"), col("phrase"))
       .agg(count(lit(1)).cast("long").as("n_occ"),
         max(col("plen")).cast("long").as("plen"))
-    val euw = graft.core.CacheBay.register(uniq
+    val euw = graft.core.SessionCache.transient(uniq
       .select(col("source"), col("phrase"), col("n_occ"), col("plen"),
         explode(split(col("phrase"), " ")).as("word")))
     val wordStats = euw

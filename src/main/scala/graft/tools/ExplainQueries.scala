@@ -29,7 +29,7 @@ object ExplainQueries {
           catch { case e: Throwable =>
             println(s"[explain failed: ${e.getMessage}]")
           }
-          graft.core.CacheBay.drain()
+          graft.core.SessionCache.endQuery()
       }
     }
     graft.core.SessionCache.clear(spark)

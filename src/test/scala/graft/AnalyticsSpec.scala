@@ -317,7 +317,7 @@ class AnalyticsSpec extends SparkSpec {
       val ev = sample(evGen, seed).toDF("user_id", "event_type", "ts")
       val f = Analytics.funnelStages(ev)
         .as[(Long, Long, Long, Long, Long)].collect()
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       f.foreach { case (_, v, c, p, stage) =>
         // later stages require earlier ones, strictly increasing
         if (c != -1L) assert(v != -1L && c > v)
@@ -347,7 +347,7 @@ class AnalyticsSpec extends SparkSpec {
       (i.toLong, (i % 25).toLong, if (i % 3 == 0) 1L else 0L))
       .toDF("id", "cents", "label")
     val r = Analytics.calibrationCurve(scored)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val rows = r.orderBy("tile")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(rows.map(_._2).sum == n)          // every row in exactly one tile
@@ -518,7 +518,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.funnelStages(ev)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(t => t._1 -> (t._2, t._3, t._4, t._5)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((us(1), us(2), us(3), 3L)))
     assert(r(2L) == ((us(2), us(5), -1L, 2L)))
     assert(r(3L) == ((us(1), us(3), -1L, 2L)))
@@ -542,7 +542,7 @@ class AnalyticsSpec extends SparkSpec {
       val got = Analytics.cusumScores(ev).orderBy("day")
         .select("n", "cusum")
         .as[(Long, Long)].collect().toSeq
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       // sequential model with the same integer allowance
       val k = counts.map(_.toLong).sum / counts.length
       val want = counts.map(_.toLong)
@@ -566,7 +566,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.cusumScores(df)
       .orderBy("day").as[(String, java.sql.Date, Long, Long, Long, Long)]
       .collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(_._3).toSeq == Seq(1L, 1L, 1L, 1L, 21L))
     assert(r.map(_._4).toSeq == Seq(-4L, -4L, -4L, -4L, 16L))
     assert(r.map(_._5).toSeq == Seq(0L, 0L, 0L, 0L, 16L))
@@ -583,7 +583,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.transitionTimes(ev)
       .as[(String, String, Long, Long, Long, Long)].collect()
       .map(x => (x._1, x._2) -> (x._3, x._4, x._5, x._6)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(("view", "click")) == ((1L, 10L, 10L, 10L)))
     assert(r(("click", "click")) == ((1L, 15L, 15L, 15L)))
     assert(r(("view", "buy")) == ((1L, 4L, 4L, 4L)))
@@ -599,7 +599,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.dailyUsers(ev).orderBy("day")
       .as[(java.sql.Date, Long, Long, Long, Long)].collect()
       .map(x => (x._2, x._3, x._4, x._5)).toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r == Seq((2L, 2L, 0L, 2L), (2L, 1L, 1L, 3L),
       (1L, 0L, 1L, 3L)), r.toString)
   }
@@ -614,7 +614,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.supplierLeadTime(o, li)
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4, x._5, x._6, x._7)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((2L, 1L, 500000L, 10L, 70L, 40L)))
     assert(r(2L) == ((1L, 0L, 0L, 5L, 5L, 5L)))
   }
@@ -633,7 +633,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.typeCorrelationStats(ev)
       .as[(String, String, Long, Long, Long, Long, Long, Long, Long)]
       .collect().map(x => (x._1, x._2) -> (x._7, x._8, x._9)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(("A", "B")) == ((12L, 1L, 1000000L)))   // exact linear
     assert(r(("A", "C")) == ((0L, 0L, 0L)))          // flat covariance
     assert(r.size == 3)
@@ -657,7 +657,7 @@ class AnalyticsSpec extends SparkSpec {
       (a ++ b).toDF("event_type", "ts"))
       .as[(String, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> ((x._2, x._3, x._4, x._5, x._6))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r("A") == ((3L, 1L, 3L, 2500000L, 250000L)), r.toString)
     assert(r("B") == ((1L, 1L, 2L, 2000000L, 0L)), r.toString)
     assert(r.size == 2, r.toString)
@@ -681,7 +681,7 @@ class AnalyticsSpec extends SparkSpec {
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
       .collect().map(x => x._1 -> ((x._2, x._3, x._4, x._5, x._6,
         x._7, x._8))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r("A") == ((11L, 300L, 900L, 600L, 0L, 1L, 90909L)),
       r.toString)
   }
@@ -700,7 +700,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.acfDaily((a ++ b).toDF("event_type", "ts"))
       .as[(String, Long, Long, Long, Long, Long, Long, Long)]
       .collect().map(x => (x._1, x._2) -> ((x._3, x._7, x._8))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(("A", 1L)) == ((7L, -1L, 1000000L)))
     assert(r(("A", 2L)) == ((6L, 1L, 1000000L)))
     assert(r(("A", 3L)) == ((5L, -1L, 1000000L)))
@@ -725,7 +725,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.rfmSegmentation(o)
       .as[(Long, Long, Long, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> x._8).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r == Map(1L -> 152L, 2L -> 213L, 3L -> 324L,
       4L -> 435L, 5L -> 541L), r.toString)
   }
@@ -746,7 +746,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.intermittencyClassification(li)
       .as[(Long, Long, Long, Long, Long, String)].collect()
       .map(x => x._1 -> (x._4, x._5, x._6)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((1500000L, 0L, "intermittent")))
     assert(r(2L) == ((1000000L, 640000L, "erratic")))
     assert(r(3L) == ((1000000L, 0L, "smooth")))
@@ -761,7 +761,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.seasonalIndex(o)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4, x._5)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((2L, 3000L, 8000000L, 6000000L)))
     assert(r(2L) == ((1L, 3000L, 4000000L, 6000000L)))
   }
@@ -783,7 +783,7 @@ class AnalyticsSpec extends SparkSpec {
     val byBrand = Analytics.weightedMedian(li, part, bucketCents = 1000L)
       .collect().map(row => row.getString(0) ->
         (row.getLong(1), row.getLong(2))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(byBrand("X") == ((2000L, 400L)))
     assert(byBrand("Y") == ((5550L, 700L)))
   }
@@ -801,7 +801,7 @@ class AnalyticsSpec extends SparkSpec {
     val ev = rows.toDF("event_type", "ts")
     val r = Analytics.dailyAutocorrelation(ev, "event_type")
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r === (("w", 14L, 174L, 37L, 212643L, 87L, 500000L)))
   }
 
@@ -817,7 +817,7 @@ class AnalyticsSpec extends SparkSpec {
     val r = Analytics.weightedQuantiles(li, part, bucketCents = 1000L)
       .as[(String, Long, Long, Long)].collect()
       .map(x => (x._1, x._2) -> x._3).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(("X", 25L)) == 1000L && r(("X", 50L)) == 2000L &&
       r(("X", 75L)) == 3000L)
     assert(r(("Y", 25L)) == 5550L && r(("Y", 75L)) == 5550L)
@@ -826,10 +826,10 @@ class AnalyticsSpec extends SparkSpec {
     val partF = graft.core.Tables(spark, SfDir, "part")
     val med = Analytics.weightedMedian(liF, partF)
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val q50 = Analytics.weightedQuantiles(liF, partF, qPcts = Seq(50))
       .collect().map(x => x.getString(0) -> x.getLong(2)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(q50 === med)
   }
 
@@ -840,7 +840,7 @@ class AnalyticsSpec extends SparkSpec {
     val got = Analytics.weightedMedian(li, part, bucketCents = 50000L)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     li.join(part, li("l_partkey") === part("p_partkey"))
       .selectExpr("p_brand",
         "cast(floor(l_extendedprice * 100.0 + 0.5) as long) as pc",
@@ -1049,14 +1049,14 @@ class AnalyticsSpec extends SparkSpec {
     val v = Seq(512L, 256L, 128L, 64L, 32L, 16L, 8L).toDF("x")
     val got = graft.analytics.Analytics.tailIndexBits(v, "x", k = 4)
       .as[(Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // top-5: 512..32, ref 32 (6 bits): diffs 4+3+2+1+0 = 10
     assert(got.toList === List((4L, 10L, 2500000L, 400000L)))
     // tie at the k+1 boundary: which 4 is kept cannot matter
     val t = Seq(16L, 8L, 4L, 4L, 4L).toDF("x")
     val got2 = graft.analytics.Analytics.tailIndexBits(t, "x", k = 2)
       .as[(Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got2.toList === List((2L, 3L, 1500000L, 666666L)))
   }
 
@@ -1091,7 +1091,7 @@ class AnalyticsSpec extends SparkSpec {
     val got = graft.analytics.Analytics.cohortLtv(orders)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val jan = 1995L * 12 + 0 // 1995-01 as year*12 + month - 1
     assert(got((jan, 0L)) == ((2L, 1500L, 1500L, 750L)))
     assert(got((jan, 2L)) == ((2L, 2000L, 3500L, 1750L)))
@@ -1103,7 +1103,7 @@ class AnalyticsSpec extends SparkSpec {
     "domain, shares sum to ~1e6, classes well-formed") {
     val got = graft.analytics.Analytics.abcXyzMatrix(spark, SfDir)
       .as[(String, String, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.nonEmpty && got.length <= 9)
     assert(got.forall(c => Set("A", "B", "C")(c._1) &&
       Set("X", "Y", "Z")(c._2)))
@@ -1118,7 +1118,7 @@ class AnalyticsSpec extends SparkSpec {
     "well-formed, shares sum to ~1e6") {
     val got = graft.analytics.Analytics.abcMigration(spark, SfDir)
       .as[(String, String, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val classes = Set("A", "B", "C", "N")
     assert(got.nonEmpty && got.length <= 16)
     assert(got.forall(c => classes(c._1) && classes(c._2)))
@@ -1477,7 +1477,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(r((0L, 2L)) == ((1L, 2L, 500000L)))
     assert(r((1L, 0L)) == ((1L, 1L, 1000000L)))
     assert(r.size == 4)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   // min cohort week of the fixture, to normalize epoch-week ids
@@ -1667,7 +1667,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("o_custkey", "attr")
     val got = Analytics.scd2Apply(dim, changes, "1999-01-01")
       .as[(Long, String, Date, Date, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got == Set(
       (1L, "A", d("1995-01-01"), d("1995-12-01"), 0L),
       (1L, "B", d("1996-01-01"), d("1998-12-31"), 0L),

@@ -16,7 +16,7 @@ class AssociationsSpec extends SparkSpec {
     val r = Associations.basketRules(li)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .map(x => (x._1, x._2) -> (x._3, x._5, x._6)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.size == 2)
     // conf(1→2) = 2e6 div 3; lift·1e6 = 2e6·4 div 9
     assert(r((1L, 2L)) == ((2L, 666666L, 888888L)))
@@ -29,7 +29,7 @@ class AssociationsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val r = Associations.basketRules(li)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // pair (7,8) support 2 with N=2, n_7=n_8=2 → conf 1e6, lift 0.5e6·2
     assert(r.length == 2 && r.forall(x => x._3 == 2L && x._5 == 1000000L
       && x._6 == 1000000L))

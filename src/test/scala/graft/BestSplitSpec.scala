@@ -11,7 +11,7 @@ class BestSplitSpec extends SparkSpec {
       Seq.fill(3)((3L, 1L))).toDF("v", "y")
     val got = BestSplit.bestSplit(df, col("v"), col("y"))
       .as[(Long, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // split at v<=1 separates classes exactly: score 4+4, parent 4
     assert(got.toList === List((1L, 4L, 4L, 8L, 4L, 4L)))
   }
@@ -21,7 +21,7 @@ class BestSplitSpec extends SparkSpec {
       Seq.fill(3)((3L, 1L))).toDF("v", "y")
     val got = BestSplit.bestSplit(df, col("v"), col("y"))
       .as[(Long, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // v=1 and v=2 both score 6; the smaller threshold wins
     assert(got.toList === List((1L, 3L, 5L, 6L, 4L, 2L)))
   }
@@ -32,7 +32,7 @@ class BestSplitSpec extends SparkSpec {
       floor(col("o_totalprice") * 100.0 + 0.5),
       when(col("o_orderstatus") === "F", 1L).otherwise(0L))
       .as[(Long, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.length == 1)
     val rows = o.select(
         floor(col("o_totalprice") * 100.0 + 0.5).cast("long"),

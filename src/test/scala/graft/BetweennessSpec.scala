@@ -22,7 +22,7 @@ class BetweennessSpec extends SparkSpec {
     val (e, deg) = frames(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
     val got = Betweenness.sampledBetweenness(e, deg, seedMod = 1)
       .as[(String, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got == Set(
       ("supplier", 0L, 2L, 0L),        // node 1
       ("customer", 1L, 3L, 5000000L),  // node 2
@@ -77,10 +77,9 @@ class BetweennessSpec extends SparkSpec {
       val counts = Betweenness.sharedForwardLevels(s2, SfDir).map(_.count())
       assert(counts.size == graft.graph.BfsHops.Rounds + 1 && counts(0) > 0)
       assert(jobsDuring(Betweenness.sharedForwardLevels(s2, SfDir)) == 0)
-      // the tier's checkpoint blocks are gone after these two calls; a
-      // memo that outlived clear would hand back unreadable frames
+      // clear releases the tier and its checkpoint blocks; a memo that
+      // outlived it would hand back unreadable frames
       graft.core.SessionCache.clear(s2)
-      graft.core.CheckpointBay.drain()
       assert(Betweenness.sharedForwardLevels(s2, SfDir).map(_.count()) ==
         counts)
     } finally graft.core.SessionCache.clear(s2)
@@ -104,7 +103,7 @@ class BetweennessSpec extends SparkSpec {
         .as[(String, Long, Long, Long)].collect()
         .map(r => (if (r._1 == "customer") r._2 * 2 else r._2 * 2 + 1)
           -> ((r._3, r._4))).toMap
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       assert(got == naive(edges, graft.graph.BfsHops.Rounds),
         s"seed=$sd edges=$edges")
     }

@@ -17,7 +17,7 @@ class BfsHopsSpec extends SparkSpec {
       (105L, 7L), (106L, 9L)).toDF("l_orderkey", "l_suppkey")
     val got = BfsHops.seedHops(orders, lineitem)
       .as[(String, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got === Set(
       ("supplier", 10L, 0L),
       ("customer", 1L, 1L),
@@ -38,7 +38,7 @@ class BfsHopsSpec extends SparkSpec {
     val got = BfsHops.seedHops(orders, lineitem)
       .as[(String, Long, Long)].collect()
       .map { case (k, i, h) => (k, i) -> h }.toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got(("customer", 2L)) === 1L)
     assert(got(("supplier", 5L)) === 2L)
   }
@@ -56,7 +56,7 @@ class BfsHopsSpec extends SparkSpec {
       .select((col("o_custkey") * 2).cast("long"),
         (col("l_suppkey") * 2 + 1).cast("long"))
       .distinct().as[(Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val adj = scala.collection.mutable.Map[Long, List[Long]]()
       .withDefaultValue(Nil)
     pairs.foreach { case (c, s) => adj(c) ::= s; adj(s) ::= c }
@@ -94,7 +94,7 @@ class BfsHopsSpec extends SparkSpec {
     val got = BfsHops.harmonicSampled(orders, lineitem)
       .as[(String, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // c1 at hop 1 from both seeds: 2 sources, 2e6
     assert(got(("customer", 1L)) == ((2L, 2000000L)))
     // c2 at hop 1 from s0, hop 3 from s100 (s100-c1-s0-c2):

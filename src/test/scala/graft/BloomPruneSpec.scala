@@ -58,7 +58,7 @@ class BloomPruneSpec extends SparkSpec {
     val r = BloomPrune.bloomFprAudit(fact, "k", dim, "k",
       bits = 64, hashes = 3) // tiny filter so FPs are guaranteed
       .as[(Long, Long, Long, Long, Long)].collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // independent replay: md5 via MessageDigest, first 8 hex digits,
     // position-set membership for all 3 hashes
     def pos(key: Long, j: Int): Long = {

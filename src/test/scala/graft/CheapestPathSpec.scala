@@ -14,7 +14,7 @@ class CheapestPathSpec extends SparkSpec {
       (50L, 3L, 1L), (50L, 4L, 10L), (3L, 4L, 10L)).toDF("a", "b", "w")
     val got = CheapestPath.seedCosts(w)
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got === Map(50L -> 0L, 1L -> 500000L, 2L -> 1000000L,
       3L -> 200000L, 4L -> 100000L))
   }
@@ -25,7 +25,7 @@ class CheapestPathSpec extends SparkSpec {
     val w = graft.graph.Triangles.weightedCoPurchaseEdges(li)
     val got = CheapestPath.seedCosts(w).as[(Long, Long)].collect().toMap
     val es = w.as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val und = es.flatMap { case (a, b, wt) =>
       val c = CheapestPath.CostScale / wt
       Seq((a, b, c), (b, a, c))

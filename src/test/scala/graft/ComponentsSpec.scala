@@ -13,13 +13,13 @@ class ComponentsSpec extends SparkSpec {
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
     val r = Components.connectedComponents(edges)
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r === Map(1L -> 4L, 10L -> 2L, 20L -> 3L))
     // localMaxEdges = 0 forces the distributed fixpoint loop; labels
     // and counts must be identical to the union-find fast path
     val viaLoop = Components.connectedComponents(edges, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(viaLoop === r)
   }
 
@@ -31,7 +31,7 @@ class ComponentsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     val r = graft.graph.Assortativity.degreeMoments(edges)
       .as[(Long, Long, Long, Long, Long, Long)].collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r === ((4L, 6L, 8L, 10L, -4L, 4L)))
   }
 
@@ -43,14 +43,14 @@ class ComponentsSpec extends SparkSpec {
     // threshold actually binds: the raw co-purchase pair set is much
     // larger than the supported edge set
     val raw = graft.graph.Triangles.coPurchaseEdges(li).count()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(es.nonEmpty && es.length < raw,
       s"support filter did not bind: ${es.length} vs raw $raw")
     // force the DISTRIBUTED loop: the fast path IS the scalar model
     // below, so comparing it against itself would prove nothing
     val got = Components.connectedComponents(edges, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // scalar model: union-find over the same collected edges
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {

@@ -20,7 +20,7 @@ class CorpusStatsSpec extends SparkSpec {
     assert(r(1L) == ((4L, 2L, 500000L, 750000L, 666666L)))
     assert(r(2L) == ((1L, 1L, 0L, 1000000L, 0L)))
     assert(r(3L) == ((0L, 0L, 0L, 0L, 0L)))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("dupNgramCoverage: positions under a within-doc repeated " +
@@ -34,7 +34,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.dupNgramCoverage(docs).collect()
       .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3)))
       .toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((7L, 6L, 6000000L / 7L)))
     assert(r(2L) == ((4L, 0L, 0L)))
     assert(r(3L) == ((0L, 0L, 0L)))
@@ -53,7 +53,7 @@ class CorpusStatsSpec extends SparkSpec {
     val full = CorpusStats.vocabTopK(old.unionByName(batch), k = 10)
       .select("rank", "token", "n").as[(Long, String, Long)]
       .collect().toSeq.sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(merged == full)
     assert(merged.map(t => (t._2, t._3)) ==
       Seq(("cherry", 3L), ("apple", 2L), ("banana", 2L), ("durian", 1L)))
@@ -67,7 +67,7 @@ class CorpusStatsSpec extends SparkSpec {
       .toMap
     assert(r(1L) == ((2L, 1L, 1500000L))) // (2+1)*1e6 div 2
     assert(r(2L) == ((1L, 2L, 2000000L)))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("vocabTopK: count-desc token-asc total order; exact k boundary") {
@@ -124,7 +124,7 @@ class CorpusStatsSpec extends SparkSpec {
     assert(byB("x y") > byB("a b"), s"lift order: $byB")
     assert(!byB.contains("q r")) // below min count
     assert(r.map(_._3).sorted.sameElements(1L to r.length))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("bpePairCounts: adjacent 2-char pairs weighted by token " +
@@ -170,7 +170,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.cmsHeavyHitters(docs, k = 4)
       .select($"token", $"n_exact", $"est_cms", $"rank")
       .as[(String, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.length == 4)
     // CMS error is one-sided: never an underestimate
     assert(r.forall { case (_, ex, est, _) => est >= ex })
@@ -226,7 +226,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.tfIdfTopTerms(docs)
       .select("doc_id", "term", "rank", "score_e6")
       .as[(Long, String, Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // zebra: tf=1 df=1 dl=4 -> (1*1e6*3)/(1*4) = 750000; common in doc 1:
     // tf=3 df=3 dl=4 -> (3*1e6*3)/(3*4) = 750000 -> term-asc tiebreak
     val d1 = r.filter(_._1 == 1L).sortBy(_._3)
@@ -242,7 +242,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = Pipeline.lengthDeciles(docs)
       .select("doc_id", "n_chars", "global_rank", "tile")
       .as[(Long, Long, Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(_._3).sorted == (1L to n).toSeq)
     // rank agrees with the local sort by (n_chars, doc_id)
     val expect = r.sortBy(x => (x._2, x._1)).zipWithIndex
@@ -262,7 +262,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.surprisalScores(docs)
       .as[(Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((5L, 6L, 1200000L)))  // 4·1 + 2 bits
     assert(r(2L) == ((2L, 5L, 2500000L)))  // 2 + 3 bits
     assert(r(3L) == ((0L, 0L, 0L)))
@@ -278,7 +278,7 @@ class CorpusStatsSpec extends SparkSpec {
       (3L, "!!!"), (4L, "d a")).toDF("doc_id", "text")
     val r = CorpusStats.vocabGrowth(docs)
       .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(_._1).toSeq == Seq(0L, 2L, 4L, 6L, 8L))
     assert(r.map(_._3).toSeq == Seq(2L, 2L, 3L, 0L, 2L))  // n_tokens
     assert(r.map(_._4).toSeq == Seq(2L, 1L, 1L, 0L, 0L))  // new_vocab
@@ -295,7 +295,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.dsirWeights(docs)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4, x._5, x._6)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((3L, 7L, 6L, 1L, 333333L)))
     assert(r(2L) == ((3L, 6L, 8L, -2L, -666667L)))  // floor(-2/3·1e6)
   }
@@ -308,7 +308,7 @@ class CorpusStatsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val r = CorpusStats.vocabDrift(docs)
       .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(x => (x._1, x._2, x._5)).toSeq ==
       Seq((1L, "b", 7L), (2L, "a", 4L), (3L, "c", 3L)), r.toSeq.toString)
     assert(r.find(_._2 == "c").get._4 == 0L) // collapsed in odd half
@@ -325,7 +325,7 @@ class CorpusStatsSpec extends SparkSpec {
     val r = CorpusStats.perplexityBuckets(docs)
       .as[(Long, String, Long, String)].collect()
       .map(x => x._1 -> (x._3, x._4)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // exact tercile boundaries for n=3: ranks 1,2,3 → head/middle/tail
     assert(r(1L)._2 == "head" && r(3L)._2 == "tail")
     assert(r(2L)._2 == "middle")
@@ -340,7 +340,7 @@ class CorpusStatsSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val r = CorpusStats.sourceOverlap(docs)
       .as[(String, String, Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r == Seq(("A", "B", 2L, 500000L)), r.toString)
   }
 
@@ -374,7 +374,7 @@ class CorpusStatsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // V(w1)={alpha,beta,gamma,delta} V(w2)={beta,gamma,epsilon}
     // inter=2, union=5 -> 400000 ppm
     assert(got(("w1", "w2")) === ((2L, 4L, 3L, 400000L)))
@@ -467,7 +467,7 @@ class CorpusStatsSpec extends SparkSpec {
       val got = CorpusStats.bigramSurprisalScores(docs)
         .as[(Long, Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       // naive: corpus bigram counts, head counts, floor-bits per doc
       val docToks = texts.map(_.split("\\s+").filter(_.nonEmpty).toSeq)
       val allBi = docToks.flatMap(ts => ts.zip(ts.drop(1)))
@@ -503,7 +503,7 @@ class CorpusStatsSpec extends SparkSpec {
       val got = CorpusStats.knSurprisalScores(docs)
         .as[(Long, Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       // naive: type counts, head/tail continuation counts, the one-
       // common-denominator KN rational, floor-bits per doc
       val docToks = texts.map(_.split("\\s+").filter(_.nonEmpty).toSeq)
@@ -547,7 +547,7 @@ class CorpusStatsSpec extends SparkSpec {
     val got = CorpusStats.knSurprisalScores(docs)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got(0L) == ((5L, 5L, 1000000L)), s"doc0: ${got(0L)}")
     assert(got(1L) == ((1L, 3L, 3000000L)), s"doc1: ${got(1L)}")
     assert(got(2L) == ((0L, 0L, 0L)), s"doc2: ${got(2L)}")
@@ -564,7 +564,7 @@ class CorpusStatsSpec extends SparkSpec {
       .as[(String, Long, Long, Long, Long, Long, Long)]
       .collect().map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6, r._7)))
       .toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // en: a:2 b:1 c:2 d:1 -> N=6, types=4, N1=2, N2=2;
     // unseen = 2e6 div 6 = 333333; c1* = (2*2*1e6) div 2 = 2e6
     assert(got("en") == ((6L, 4L, 2L, 2L, 333333L, 2000000L)))
@@ -583,7 +583,7 @@ class CorpusStatsSpec extends SparkSpec {
     val got = CorpusStats.bigramSurprisalScores(docs)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // heads: c_head(a)=4, c_head(b)=2
     // bits("a b") = bitlen(4 div 3) = 1; bits("b a") = bitlen(2 div 2)
     // = 1; bits("a c") = bitlen(4 div 1) = 3
@@ -669,7 +669,7 @@ class CorpusStatsSpec extends SparkSpec {
       (3L, "", "t"))
       .toDF("doc_id", "text", "source")
     val r = graft.text.CorpusStats.rakeKeywords(docs).collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.length == 2 && r.forall(_.getString(0) == "s"))
     val byRk = r.map(x => x.getAs[Long]("rk") ->
       ((x.getAs[String]("phrase"), x.getAs[Long]("n_occ"),

@@ -94,7 +94,7 @@ class DedupSpec extends SparkSpec {
     assert(r(2L) == ((8L, 7L, 125000L)))
     // doc 3 shares nothing
     assert(r(3L) == ((8L, 0L, 1000000L)))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("near-dup clusters: pairs share labels, label = min member id") {
@@ -116,7 +116,7 @@ class DedupSpec extends SparkSpec {
     // must be identical to the union-find fast path's
     val viaLoop = Dedup.nearDupClusters(docs, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(viaLoop == labels, "loop and union-find labels diverge")
   }
 
@@ -134,13 +134,13 @@ class DedupSpec extends SparkSpec {
     val r = Dedup.incrementalDedup(incoming, existing)
       .select($"doc_id", $"is_dup")
       .as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(10L) == 1L, "planted duplicate not flagged")
     assert(r(11L) == 0L, "novel doc falsely flagged")
     val dupOf = Dedup.incrementalDedup(incoming, existing)
       .filter($"doc_id" === 10L).select($"dup_of")
       .as[Long].head()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(dupOf == 1L)
   }
 
@@ -149,7 +149,7 @@ class DedupSpec extends SparkSpec {
     val hist = Dedup.clusterSizeHistogram(docs)
       .as[(Long, Long)].collect().toMap
     val labels = Dedup.nearDupClusters(docs).as[(Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // Σ size · n_clusters = corpus size; histogram matches the labels
     assert(hist.map { case (sz, n) => sz * n }.sum == docs.count())
     val fromLabels = labels.groupBy(_._2).values
@@ -168,7 +168,7 @@ class DedupSpec extends SparkSpec {
       .orderBy("doc_id")
       .select("doc_id", "n_tokens", "n_covered", "covered_ppm", "clean_fp")
       .as[(Long, Long, Long, Long, String)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // only "red orange yellow green blue" is duplicated -> positions
     // 0..4 covered in both docs; doc 12 untouched
     assert(r(0) == (10L, 8L, 5L, 625000L,
@@ -187,7 +187,7 @@ class DedupSpec extends SparkSpec {
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val tru = Dedup.ngramJaccardPairs(d)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(audit.map(a => (a._1, a._2)).toSet == (est ++ tru))
     audit.foreach { case (a, b, st) =>
       val expected =
@@ -207,7 +207,7 @@ class DedupSpec extends SparkSpec {
     val docs = graft.core.Tables(spark, SfDir, "documents")
     val r = Dedup.canonicalReps(docs)
       .as[(Long, Long, Double, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.size == docs.count())
     r.groupBy(_._2).foreach { case (cl, members) =>
       assert(members.count(_._4 == 1L) == 1, s"cluster $cl rep count != 1")
@@ -227,7 +227,7 @@ class DedupSpec extends SparkSpec {
     val r = Dedup.goldenRecords(docs, clusterLabels = Some(labels))
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4, x._5, x._6)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == ((1L, 2L, 1L, 7L, 7L)))
     assert(r(3L) == ((3L, 1L, 1L, 5L, 1L)))
   }
@@ -241,7 +241,7 @@ class DedupSpec extends SparkSpec {
       (3L, "q r s t u v")).toDF("doc_id", "text")
     val r = Dedup.prefixFilterPairs(docs, minJaccard = 0.5)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.toSeq == Seq((1L, 2L, 3L, 4L, 4L, 600000L)))
   }
 
@@ -251,7 +251,7 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.prefixFilterPairs(docs)
       .select("a_id", "b_id", "inter", "jac_e6")
       .as[(Long, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // brute force: inverted-index join with NO prefix and NO df cap
     val ss = Dedup.shingleSets(docs)
       .filter(size(col("shingles")) > 0)
@@ -288,7 +288,7 @@ class DedupSpec extends SparkSpec {
     val got = graft.dedup.Dedup.containmentPairs(docs, minPpm = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4))
       .toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // every shingle of doc 1 appears in doc 2 -> containment 1e6
     assert(got((1L, 2L)) === 1000000L)
     // the reverse direction is diluted by doc 2's extra shingles
@@ -332,7 +332,7 @@ class DedupSpec extends SparkSpec {
       .select(col("cluster_id")).distinct().count()
     val got = Dedup.dedupMixShift(spark, SfDir)
       .as[(String, Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.map(r => r._1 -> r._2).toMap == before)
     assert(got.map(_._3).sum == nClusters)
     val (tb, tk) = (got.map(_._2).sum, got.map(_._3).sum)
@@ -356,7 +356,7 @@ class DedupSpec extends SparkSpec {
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
     val got = Dedup.sourceDupMatrix(spark, SfDir)
       .as[(String, String, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.map(c => (c._1, c._2) -> c._3).toMap == expected)
     assert(got.forall(c => c._1 <= c._2))
     assert(got.forall(c => (c._5 == 1L) == (c._1 == c._2)))

@@ -16,7 +16,7 @@ class FuzzyMatchSpec extends SparkSpec {
       .toDF("id", "name")
     val r = FuzzyMatch.canonicalMap(rows, "id", "name")
       .as[(Long, String, String)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // "acme corp" ~ "acme corpn" (lev 1); "acme holdings" is 8 edits
     // away; "apex corp" blocks under 'apex' and never compares
     assert(r.map(x => x._1 -> x._3).toSeq == Seq(
@@ -29,7 +29,7 @@ class FuzzyMatchSpec extends SparkSpec {
       (3L, "red widgit")).toDF("id", "name")
     val r = FuzzyMatch.canonicalMap(rows, "id", "name")
       .as[(Long, String, String)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(_._3).distinct.toSeq == Seq("red widget"))
   }
 
@@ -42,7 +42,7 @@ class FuzzyMatchSpec extends SparkSpec {
       FuzzyMatch.canonicalMap(rows, "id", "name")
         .agg(org.apache.spark.sql.functions.max("rep")).collect()
     }
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(e.getMessage != null &&
       (e.getMessage.contains("fuzzy blocking") ||
         e.getCause != null &&

@@ -15,7 +15,7 @@ class KCoreSpec extends SparkSpec {
       .toDF("a", "b")
     val r = KCore.kCore(e, k = 2, rounds = 4)
       .as[(Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.toSeq == Seq(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 
@@ -26,14 +26,14 @@ class KCoreSpec extends SparkSpec {
     val e = (k4 ++ Seq((4L, 5L), (4L, 6L), (5L, 6L))).toDF("a", "b")
     val r = KCore.kCore(e, k = 3, rounds = 4)
       .as[(Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.toSeq == Seq(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
   test("whole graph below k peels to empty") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val r = KCore.kCore(e, k = 3, rounds = 3).count()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r == 0L)
   }
 
@@ -60,7 +60,7 @@ class KCoreSpec extends SparkSpec {
       val want = degrees(surv).map { case (n, d) => n -> d.toLong }
       val got = KCore.kCore(edges.toDF("a", "b"), k = 2, rounds = 4)
         .as[(Long, Long)].collect().toMap
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       assert(got == want, s"seed=$seed edges=$edges")
     }
   }
@@ -72,10 +72,10 @@ class KCoreSpec extends SparkSpec {
       .localCheckpoint()
     val atR = KCore.kCore(edges).orderBy("part")
       .as[(Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val atR1 = KCore.kCore(edges, rounds = KCore.PeelRounds + 1)
       .orderBy("part").as[(Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(atR == atR1, "peeling not converged at PeelRounds")
     assert(atR.nonEmpty && atR.forall(_._2 >= KCore.K))
   }

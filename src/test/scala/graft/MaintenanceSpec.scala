@@ -17,7 +17,7 @@ class MaintenanceSpec extends SparkSpec {
     val r = PageRank.purchaseRanks(orders, lineitem)
       .filter($"kind" === "supplier")
       .select($"id", $"rank_e6").as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) > r(2L), s"shared supplier should rank higher: $r")
     // floor division only ever LOSES mass: total ≤ N · 10⁶
     assert(r.values.forall(_ > 0) && r.values.sum <= 4 * 1000000L)
@@ -31,7 +31,7 @@ class MaintenanceSpec extends SparkSpec {
       orders, lineitem, tolE6 = 3000000L)
     val got = ranks.select($"kind", $"id", $"rank_e6")
       .as[(String, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // the loop ran, converged before the cap, and every round moved
     // the ranks LESS than the round before (damping contracts the
     // iteration; integer floor can only help)
@@ -45,7 +45,7 @@ class MaintenanceSpec extends SparkSpec {
       iters = deltas.size)
       .select($"kind", $"id", $"rank_e6")
       .as[(String, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got == unrolled)
   }
 
@@ -193,7 +193,7 @@ class MaintenanceSpec extends SparkSpec {
       Seq("k" -> col("k"), "v" -> col("v")), k = 8)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> ((x._2, x._3, x._4, x._5, x._6, x._7))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r("k") == ((5L, 0L, 1L, 5L, 5L, 5L)))
     assert(r("v") == ((5L, 2L, 10L, 30L, 2L, 2L)))
   }

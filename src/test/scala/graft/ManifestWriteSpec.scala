@@ -14,7 +14,7 @@ class ManifestWriteSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_manifest").toString +
       "/shards"
     val metrics = Pipeline.writeManifestShards(docs, out)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // 1. round-trip equality: partition column comes back as the
     // directory value (int) — cast before comparing
@@ -27,7 +27,7 @@ class ManifestWriteSpec extends SparkSpec {
     assert(written.exceptAll(plan).count() == 0 &&
       plan.exceptAll(written).count() == 0,
       "written shards diverge from the lazy manifest plan")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // 2. metrics-vs-written parity: the observe() numbers came from
     // the WRITE job, the right side from an independent re-read

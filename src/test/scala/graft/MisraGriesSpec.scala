@@ -13,7 +13,7 @@ class MisraGriesSpec extends SparkSpec {
       .toDF("k")
     val got = MisraGries.exactHeavyHitters(df, "k")
       .as[(String, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // n = 1000, k = 125 -> threshold 8: only "hot" (500 > 8) passes
     assert(got.toList === List(("hot", 500L, 1000L, 500000L)))
   }
@@ -24,7 +24,7 @@ class MisraGriesSpec extends SparkSpec {
       .repartition(13)
     val got = MisraGries.exactHeavyHitters(df, "k")
       .as[(String, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val naive = (1 to 2000).map(i => (i % 37).toString)
       .groupBy(identity).map { case (k, xs) => (k, xs.size.toLong) }
       .filter(_._2 * MisraGries.K > 2000L)
@@ -38,7 +38,7 @@ class MisraGriesSpec extends SparkSpec {
     val ev = graft.core.Tables(spark, SfDir, "events")
     val got = MisraGries.exactHeavyHitters(ev, "user_id")
       .as[(String, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val n = ev.count()
     val naive = ev.groupBy(col("user_id").cast("string").as("key"))
       .agg(count(lit(1)).as("cnt"))

@@ -286,7 +286,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "img_w", "img_h", "ahash", "n_ones")
     val p = graft.multimodal.Multimodal.ahashPairs(hashes)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(p == Seq((1L, 2L, 2L)), p.toString)
   }
 

@@ -498,7 +498,7 @@ class OperatorsSpec extends SparkSpec {
     assert(!r.contains(3L))              // no query term -> no row
     assert(r(1L)._1 == 2 && r(2L)._1 == 1)
     assert(r(1L)._2 > r(2L)._2)          // more hits + rarer term
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("topKPerKey: equals the plain rank window across partitionings") {

@@ -142,7 +142,7 @@ class PipelineSpec extends SparkSpec {
     val q3 = Pipeline.curriculumOrder(docs)
       .select($"doc_id", $"quality_e6").as[(Long, Long)].collect()
       .map { case (id, q) => id -> q / 1000L }.toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val xs = toks.keys.toSeq.map(id => (toks(id), q3(id)))
     assert(r == ((xs.size.toLong, xs.map(_._1).sum, xs.map(_._2).sum,
       xs.map(p => p._1 * p._2).sum, xs.map(p => p._1 * p._1).sum,
@@ -153,7 +153,7 @@ class PipelineSpec extends SparkSpec {
     "never invert), ranks contiguous per (phase, shard)") {
     val o = Pipeline.curriculumOrder(docs)
       .as[(Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(o.length == docs.count())
     assert(o.map(_._1).distinct.length == o.length)
     assert(o.forall(r => r._3 >= 1L && r._3 <= 3L))
@@ -248,7 +248,7 @@ class PipelineSpec extends SparkSpec {
       .filter($"split" =!= "train").select($"doc_id")
     assert(c.join(split, Seq("doc_id"), "left_semi").count() == 0)
     c.unpersist()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("tClosenessAudit: hand fixture — uniform class scores 0, " +
@@ -270,7 +270,7 @@ class PipelineSpec extends SparkSpec {
     assert(r("g1") == ((4L, 0L, 0L)))
     assert(r("g2") == ((2L, 500000L, 1L)))
     assert(r("g3") == ((2L, 500000L, 1L)))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("mixEpochs: shares sum to ~1, epochs = share/p, repeat flag " +
@@ -297,7 +297,7 @@ class PipelineSpec extends SparkSpec {
     val byN = r.sortBy(_._2)
     assert(byN.last._4 < 1000000L, "head language not downsampled")
     assert(byN.head._4 > 1000000L, "tail language not upsampled")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("pretrainManifest: manifest equals the stage-by-stage " +
@@ -342,7 +342,7 @@ class PipelineSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet
     assert(m.select($"doc_id").as[Long].collect().toSet == expected)
     m.unpersist()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("chunkWithOverlap: stride/overlap invariants, tokens reconcile") {
@@ -391,7 +391,7 @@ class PipelineSpec extends SparkSpec {
   test("tokenBudgetSelect: greedy prefix by (quality desc, id), " +
     "budget never exceeded, no back-fill") {
     val r = Pipeline.tokenBudgetSelect(docs, budgetPerLang = 200L)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // budget holds per language
     val over = r.groupBy($"lang").agg(max($"cum_tokens").as("m"))
       .filter($"m" > 200L)
@@ -405,7 +405,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("cum2", sum($"n_tokens").over(w))
       .filter($"cum2" <= 200L)
       .select($"lang", $"doc_id")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val got = r.select($"lang", $"doc_id")
     assert(got.exceptAll(brute).count() == 0 &&
       brute.exceptAll(got).count() == 0)
@@ -415,7 +415,7 @@ class PipelineSpec extends SparkSpec {
   test("perSourceCap: at most cap per source, best quality kept, " +
     "rank is the contiguous within-source prefix") {
     val r = Pipeline.perSourceCap(docs, cap = 5)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val bySrc = r.groupBy($"source")
       .agg(count(lit(1)).as("n"), max($"rk").as("mx"), min($"rk").as("mn"))
       .as[(String, Long, Long, Long)].collect()
@@ -431,7 +431,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("rk2", row_number().over(w).cast("long"))
       .filter($"rk2" <= 5)
       .select($"source", $"doc_id", $"rk2".as("rk"))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val got = r.select($"source", $"doc_id", $"rk")
     assert(got.exceptAll(brute).count() == 0 &&
       brute.exceptAll(got).count() == 0)
@@ -443,7 +443,7 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.splitDrift(docs)
       .select($"split", $"q_bucket", $"n", $"share_ppm")
       .as[(String, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val buckets = r.map(_._2).distinct
     assert(r.length == buckets.length * 3, "grid not dense")
     // per split, shares are n_i*1e6 div n_split: sum within 1e6 minus
@@ -508,7 +508,7 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.contaminationSpans(docs).collect()
       .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(4),
         x.getLong(5), x.getLong(6), x.getLong(7))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // (n_sh, n_hit, n_spans, max_span_shingles, max_span_tokens, first)
     assert(r(1L) == ((7L, 3L, 1L, 3L, 5L, 2L)), s"got ${r.get(1L)}")
     assert(r(2L) == ((7L, 2L, 2L, 1L, 3L, 0L)), s"got ${r.get(2L)}")
@@ -521,7 +521,7 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.mixInterleave(docs)
       .select($"doc_id", $"source", $"weight", $"mix_pos")
       .as[(Long, String, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.length == docs.count())
     assert(r.map(_._4).sorted.sameElements(1L to r.length))
     // in the first half of the schedule, a weight-w source appears
@@ -547,7 +547,7 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.sourceCalibratedQuality(docs)
       .as[(String, Long, Long, Long)].collect()
       .map(x => x._2 -> x._4).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(1L) == 0L && r(2L) == 500000L && r(3L) == 1000000L)
     assert(r(4L) == 0L)
   }
@@ -562,7 +562,7 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.exciseContamination(docs)
       .as[(Long, Long, Long, String)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(!r.contains(0L)) // bench side not emitted
     assert(r(1L) == ((7L, 3L, "intro words trailing tail")))
     assert(r(2L) == ((4L, 0L, "no overlap at all")))
@@ -584,7 +584,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("a_id", "b_id", "est_jaccard")
     val r = Pipeline.splitLeakage(docs, pairs = Some(pairs))
       .as[(Long, Long, String, String, Double)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.length == 1, r.toSeq.toString)
     assert(Set(r(0)._1, r(0)._2) == Set(cross._1, cross._2))
     assert(r(0)._3 != r(0)._4 && r(0)._5 == 0.9)

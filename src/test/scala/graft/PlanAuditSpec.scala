@@ -41,7 +41,7 @@ class PlanAuditSpec extends SparkSpec {
   test("decontaminate broadcasts the benchmark side only") {
     val p = plan(SparkEntry.queries("pipe_decontaminate")(spark, SfDir))
     assert(count(p, "BroadcastExchange") == 1, s"broadcast count:\n$p")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("bm25 broadcasts df + corpus stats; corpus side never broadcast") {
@@ -57,7 +57,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(shuffles == 4, s"shuffle count $shuffles:\n$p")
     assert(!p.contains("Exchange RoundRobinPartitioning"),
       s"corpus repartition resurfaced:\n$p")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("vocab top-k never exchanges the raw corpus: one token-keyed " +
@@ -118,7 +118,7 @@ class PlanAuditSpec extends SparkSpec {
     // every hash exchange is on source or pid, never on key
     assert(!p.contains("hashpartitioning(key"),
       s"schedule-key exchange resurfaced:\n$p")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("round-5 family: no global sort, no single-partition funnel, " +
@@ -131,7 +131,7 @@ class PlanAuditSpec extends SparkSpec {
       !pr.contains("Exchange SinglePartition") &&
       !pr.contains("NestedLoop") && !pr.contains("CartesianProduct"),
       s"pagerank plan degraded:\n$pr")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // compaction planner: ONE hash shuffle on the partition key; the
     // running sum is a partitioned window, never a global sort
@@ -154,7 +154,7 @@ class PlanAuditSpec extends SparkSpec {
       !sp.contains("BroadcastExchange") &&
       !sp.contains("Exchange rangepartitioning"),
       s"source profile shape:\n$sp")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // incremental dedup: the band join is a hash EQUI-join on
     // (band, bval) — the broadcast side is the |batch|-bounded banded
@@ -166,7 +166,7 @@ class PlanAuditSpec extends SparkSpec {
       !di.contains("NestedLoop") && !di.contains("CartesianProduct") &&
       !di.contains("Exchange SinglePartition"),
       s"incremental dedup band join shape:\n$di")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("round-6 family: no single-partition funnels over unbounded " +
@@ -179,7 +179,7 @@ class PlanAuditSpec extends SparkSpec {
       !cs.contains("Exchange rangepartitioning") &&
       !cs.contains("NestedLoop") && !cs.contains("CartesianProduct"),
       s"contamination spans shape:\n$cs")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // dup n-gram coverage: (doc, gram)-keyed equi-joins only
     val dc = plan(SparkEntry.queries("text_dup_ngram_coverage")(spark, SfDir))
@@ -187,13 +187,13 @@ class PlanAuditSpec extends SparkSpec {
       !dc.contains("Exchange rangepartitioning") &&
       !dc.contains("NestedLoop") && !dc.contains("CartesianProduct"),
       s"dup coverage shape:\n$dc")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // semantic dedup: bucket/keeper equi-joins, never pairwise
     val sd = plan(SparkEntry.queries("sim_semantic_dedup")(spark, SfDir))
     assert(!sd.contains("NestedLoop") && !sd.contains("CartesianProduct"),
       s"semantic dedup shape:\n$sd")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // incremental vocab: token-keyed merge + TakeOrdered, no raw-text
     // exchange and no global sort
@@ -219,7 +219,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!tr.contains("CartesianProduct") && !tr.contains("NestedLoop") &&
       !tr.contains("Exchange rangepartitioning"),
       s"triangle shape:\n$tr")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // per-source cap: offset joins back on the compound key (never a
     // broadcast of the unbounded source domain), the only windows are
@@ -230,7 +230,7 @@ class PlanAuditSpec extends SparkSpec {
       !sc.contains("Exchange rangepartitioning") &&
       !sc.contains("CartesianProduct") && !sc.contains("NestedLoop"),
       s"source cap shape:\n$sc")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // CMS: the sketch aggregate shuffles on the bounded (j, bucket)
     // domain; candidates via TakeOrdered; the probe join broadcasts
@@ -240,7 +240,7 @@ class PlanAuditSpec extends SparkSpec {
       !cm.contains("CartesianProduct") &&
       !cm.contains("Exchange rangepartitioning"),
       s"CMS shape:\n$cm")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
 
     // PQ: candidates come from the LSH bucket equi-join — the ADC
     // ranking never plans an all-pairs join
@@ -248,7 +248,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!pq.contains("CartesianProduct") && !pq.contains("NestedLoop") &&
       !pq.contains("Exchange rangepartitioning"),
       s"PQ shape:\n$pq")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("Spread: an already-split source gains NO exchange through the " +
@@ -470,7 +470,7 @@ class PlanAuditSpec extends SparkSpec {
       case (name, _) if ActionOnBuild(name) => None
       case (name, fn) =>
         val p = plan(fn(spark, SfDir))
-        graft.core.CacheBay.drain()
+        graft.core.SessionCache.endQuery()
         val bad = p.contains("CartesianProduct") ||
           (p.contains("BroadcastNestedLoopJoin") && !JustifiedCross(name))
         if (bad) Some(name) else None

@@ -16,7 +16,7 @@ class PrefixScanSpec extends SparkSpec {
       .toDF("k", "v")
     val got = PrefixScan.prefixSum(df, Seq("k"), "v", "cum")
       .select("k", "cum").as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     var acc = 0L
     val want = rows.sortBy(_._1).map { case (k, v) =>
       acc += v; (k, acc)
@@ -32,7 +32,7 @@ class PrefixScanSpec extends SparkSpec {
       .prefixAgg(df, Seq("k"), "v", "max", "mi", "me")
       .select("k", "mi", "me").as[(Long, Long, Long)].collect()
       .sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.toSeq === Seq(
       (1L, 5L, Long.MinValue), (2L, 5L, 5L), (3L, 9L, 5L),
       (4L, 9L, 9L), (5L, 9L, 9L)))
@@ -53,7 +53,7 @@ class PrefixScanSpec extends SparkSpec {
       .select(col("id").as("k"), (col("id") % 7 + 1).as("v"))
     val scanned = PrefixScan.prefixSum(df, Seq("k"), "v", "cum")
     val p = scanned.queryExecution.executedPlan.toString
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(!p.contains("Window"), s"global window leaked in:\n$p")
     assert(!p.contains("Exchange hashpartitioning"),
       s"full-frame hash exchange in:\n$p")
@@ -67,18 +67,18 @@ class PrefixScanSpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("k", "v")
     assert(PrefixScan.prefixSum(empty, Seq("k"), "v", "cum").count() == 0)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val one = Seq((7L, 42L)).toDF("k", "v")
     val r = PrefixScan.prefixSum(one, Seq("k"), "v", "cum")
       .select("k", "cum").as[(Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.toSeq == Seq((7L, 42L)))
     // ties on the order key: per-row cums are boundary-dependent (the
     // documented contract) but the FINAL cumulative is still the total
     val tied = Seq((1L, 10L), (1L, 20L), (1L, 30L)).toDF("k", "v")
     val cums = PrefixScan.prefixSum(tied, Seq("k"), "v", "cum")
       .select("cum").as[Long].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(cums.max == 60L)
   }
 
@@ -112,7 +112,7 @@ class PrefixScanSpec extends SparkSpec {
     val got = scanned.select("id", "cum", "cum_excl")
       .as[(Long, Long, Long)].collect()
       .map { case (id, c, e) => id -> (c, e) }.toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     var acc = 0L
     val want = rows.sortBy(r => (r._1, r._2)).map { case (_, id, v) =>
       val e = acc; acc += v; id -> (acc, e)
@@ -133,7 +133,7 @@ class PrefixScanSpec extends SparkSpec {
     ).toDF("p_partkey", "p_brand", "p_retailprice", "p_size")
     val got = Skyline.frontier(part)
       .select("p_partkey").as[Long].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got === Set(1L, 3L, 4L, 6L))
   }
 
@@ -142,7 +142,7 @@ class PrefixScanSpec extends SparkSpec {
     val part = graft.core.Tables(spark, SfDir, "part")
     val got = Skyline.frontier(part).select("p_partkey")
       .as[Long].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val rows = part.select(col("p_partkey"),
       floor(col("p_retailprice") * 100.0 + 0.5).cast("long").as("pc"),
       col("p_size").cast("long").as("sz"))

@@ -189,7 +189,7 @@ class ReadersSpec extends SparkSpec {
       Readers.jsonlWithQuarantine(spark, f.getAbsolutePath, schema)
     val good = clean.as[(Long, String)].collect().sortBy(_._1)
     val badLines = quarantined.as[String].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(good.toSeq == Seq(1L -> "hello", 3L -> "ok"))
     assert(badLines == Set(lines(1), lines(3)))
     assert(good.length + badLines.size == lines.length)

@@ -69,7 +69,7 @@ class ReconSpec extends SparkSpec {
     val r = Recon.benfordAudit(df, "v")
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(x => x._1 -> (x._2, x._3, x._4, x._5)).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.keySet == Set(1L, 2L, 9L))
     assert(r(1L) == ((2L, 500000L, 301030L, 198970L)))
     assert(r(2L) == ((1L, 250000L, 176091L, 73909L)))
@@ -329,7 +329,7 @@ class ReconSpec extends SparkSpec {
     val after = Seq(2.0, 3.0).toDF("x")
     val r = graft.qc.Recon.ksDrift(before, after, "x")
       .as[(Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // F1 jumps to 2/3 at v=100 cents while F2 is still 0:
     // dev = |2*2 - 0*3| = 4 of n1*n2 = 6 (KS = 2/3), attained at 100
     assert(r === Array((3L, 2L, 4L, 4L, 100L)))
@@ -342,7 +342,7 @@ class ReconSpec extends SparkSpec {
     def slice(y: Int) = o.filter(year(col("o_orderdate")) === y)
     val got = graft.qc.Recon.ksDrift(slice(1995), slice(1996),
       "o_totalprice").as[(Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.length == 1)
     val (n1, n2, dev, ppm, at) = got.head
     def cents(y: Int) = slice(y).select(col("o_totalprice"))
@@ -368,7 +368,7 @@ class ReconSpec extends SparkSpec {
       .select(col("a"), col("a").as("b"))
     val d = Recon.mutualInfoBits(dep, col("a"), col("b"))
       .collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(d.getAs[Long]("n") == 4L && d.getAs[Long]("cells") == 2L)
     assert(d.getAs[Long]("ha_bits_e6") == 1000000L)
     assert(d.getAs[Long]("hb_bits_e6") == 1000000L)
@@ -379,7 +379,7 @@ class ReconSpec extends SparkSpec {
       .toDF("a", "b")
     val i = Recon.mutualInfoBits(ind, col("a"), col("b"))
       .collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(i.getAs[Long]("hab_bits_e6") == 2000000L)
     assert(i.getAs[Long]("mi_bits_e6") == 0L)
   }
@@ -390,7 +390,7 @@ class ReconSpec extends SparkSpec {
       .toDF("a", "b")
     val i = Recon.chisqIndependence(ind, col("a"), col("b"))
       .collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(i.getAs[Long]("chi2_e6") == 0L && i.getAs[Long]("dof") == 1L)
     // perfect association, only 2 of 4 cells present: present pass
     // contributes 2 * (4*2-4)^2e6/(4*2*2) = 2e6; the absent pool
@@ -399,7 +399,7 @@ class ReconSpec extends SparkSpec {
       .toDF("a", "b")
     val d = Recon.chisqIndependence(dep, col("a"), col("b"))
       .collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(d.getAs[Long]("chi2_e6") == 4000000L)
     assert(d.getAs[Long]("n") == 4L && d.getAs[Long]("cells") == 2L)
     assert(d.getAs[Long]("levels_a") == 2L &&

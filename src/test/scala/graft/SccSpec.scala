@@ -28,7 +28,7 @@ class SccSpec extends SparkSpec {
     val got = Scc.stronglyConnected(edges, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(got == want, s"got $got")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("the counterexample chain: a node reachable FROM a smaller " +
@@ -39,7 +39,7 @@ class SccSpec extends SparkSpec {
     val got = Scc.stronglyConnected(edges, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L), s"got $got")
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("a long directed path peels entirely through TRIM (singleton " +
@@ -48,7 +48,7 @@ class SccSpec extends SparkSpec {
     val got = Scc.stronglyConnected(edges, localMaxEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(got == (1L to 20L).map(i => i -> i).toMap)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("tradeReciprocity: mutual counts match a naive pair check and " +
@@ -70,7 +70,7 @@ class SccSpec extends SparkSpec {
       s -> es.count { case (a, b) => e.contains((b, a)) } }
     r.foreach { case (n, _, mut, _) =>
       assert(wantMut.getOrElse(n, 0) == mut, s"nation $n mutual") }
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("sharedTradeEdges: one derivation per session — the second " +
@@ -86,7 +86,7 @@ class SccSpec extends SparkSpec {
     assert(a.as[(Long, Long)].collect().toSet == fresh,
       "cached trade edges diverge from the uncached derivation")
     graft.core.SessionCache.clear(spark)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 
   test("tradeScc: labels partition the trade graph, scc_id is the " +
@@ -109,6 +109,6 @@ class SccSpec extends SparkSpec {
     // every fixture scale (verified against the closure oracle)
     assert(rows.exists(_._4 == 1L), "no mutual-trade core found")
     r.unpersist()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
   }
 }

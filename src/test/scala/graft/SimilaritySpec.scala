@@ -41,7 +41,7 @@ class SimilaritySpec extends SparkSpec {
     val r = Similarity.pqTopK(emb)
       .select($"q_id", $"rank", $"nn_id", $"adc")
       .as[(Long, Long, Long, Double)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val first = r.filter(x => x._1 == 0L && x._2 == 1L)
     assert(first.length == 1 && first.head._3 == 2L &&
       first.head._4 == 0.0, s"got: ${first.toSeq}")
@@ -174,7 +174,7 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id", $"keeper_id", $"is_semantic_dup")
       .as[(Long, Long, Long)].collect()
       .map { case (v, k, d) => (v, (k, d)) }.toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // the scaled copy lands in vector 1's bucket (identical sign
     // pattern) and clears the cosine gate against keeper 1
     assert(r(2L) == ((1L, 1L)), s"got $r")
@@ -190,10 +190,10 @@ class SimilaritySpec extends SparkSpec {
     val e = graft.core.Tables(spark, SfDir, "embeddings")
     val local = Similarity.mmrTopK(e)
       .as[(Long, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val dist = Similarity.mmrTopK(e, localMaxRows = 0L)
       .as[(Long, Long, Long, Long)].collect().toSet
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(local == dist,
       s"paths diverge: local-only=${(local -- dist).take(3)} " +
         s"dist-only=${(dist -- local).take(3)}")
@@ -207,7 +207,7 @@ class SimilaritySpec extends SparkSpec {
         e.select("label").distinct().count()))
       .select($"q_id", $"label", $"rank", $"nn_id")
       .as[(Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rows.nonEmpty)
     val labels = e.select($"vec_id", $"label".cast("long"))
       .as[(Long, Long)].collect().toMap
@@ -277,7 +277,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.core.Tables(spark, SfDir, "embeddings")
     val r = Similarity.ivfRecallAudit(emb)
       .as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val nQueries = Similarity.bruteForceTopK(emb)
       .select("q_id").distinct().count()
     assert(r.length == nQueries)
@@ -299,14 +299,14 @@ class SimilaritySpec extends SparkSpec {
     // recall must be exactly 1e6 for every query
     val full = Similarity.matryoshkaRecallAudit(emb,
       prefixDims = Similarity.Dim).as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(full.nonEmpty)
     full.foreach { case (_, hits, ppm) =>
       assert(hits == Similarity.TopK && ppm == 1000000L)
     }
     val quarter = Similarity.matryoshkaRecallAudit(emb)
       .as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(quarter.length == full.length)
     quarter.foreach { case (_, hits, ppm) =>
       assert(hits >= 0 && hits <= Similarity.TopK)
@@ -341,7 +341,7 @@ class SimilaritySpec extends SparkSpec {
     val l3 = rankOf(Similarity.randomProjection(emb)
       .select(col("vec_id"), array((0 until 8).map(j =>
         col(s"p$j").cast("double")): _*).as("f")))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val contribs = (l1 ++ l2 ++ l3).groupBy(t => (t._1, t._2))
       .map { case (k, xs) =>
         k -> ((xs.map(t => 1000000L / (Similarity.RrfC + t._3)).sum,
@@ -373,7 +373,7 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.mmrTopK(emb)
       .as[(Long, Long, Long, Long)].collect()
       .sortBy(_._2).map(r => (r._2, r._3))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.toList === List((1L, 1L), (2L, 3L), (3L, 2L)))
   }
 
@@ -382,7 +382,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.core.Tables(spark, SfDir, "embeddings")
     val rows = Similarity.mmrTopK(emb)
       .as[(Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rows.nonEmpty)
     rows.groupBy(_._1).foreach { case (_, xs) =>
       assert(xs.map(_._2).sorted.toList === (1L to xs.length).toList)
@@ -406,7 +406,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val r = Similarity.centroidOutliers(emb)
       .select("vec_id", "is_outlier").as[(Long, Long)].collect().toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(4L) == 1L, "planted outlier not flagged")
     assert(Seq(0L, 1L, 2L, 3L, 5L, 6L).forall(r(_) == 0L))
   }
@@ -425,7 +425,7 @@ class SimilaritySpec extends SparkSpec {
       .select("q_id", "nn_id", "nn_label")
       .as[(Long, Long, Long)].collect()
       .map { case (q, n, l) => q -> (n, l) }.toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r(0L) == ((50L, 1L)), r.toString)
   }
 
@@ -495,7 +495,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val r = Similarity.pqCodeBalance(emb)
       .as[(Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val bySub = r.groupBy(_._1)
     assert(bySub.keySet == (0L until 8L).toSet)
     bySub.values.foreach { g =>
@@ -518,13 +518,13 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.recallCurve(emb, ks, queryMod = 5, nBits = 4)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val ex = Similarity.bruteForceTopK(emb, 10, queryMod = 5)
       .select("q_id", "nn_id", "rank").as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val ap = Similarity.lshTopK(emb, 10, queryMod = 5, nBits = 4)
       .select("q_id", "nn_id", "rank").as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val aRank = ap.map(t => (t._1, t._2) -> t._3).toMap
     val queries = (0L to 19L).filter(_ % 5 == 0)
     val want = (for (q <- queries; k <- ks) yield (q, k) -> {
@@ -553,7 +553,7 @@ class SimilaritySpec extends SparkSpec {
       (i, if (i == t || i == e) Seq(1.0f, 0.0f) else Seq(0.0f, 1.0f))
     }.toDF("vec_id", "embedding")
     val rows = Similarity.splitLeakageAudit(emb).collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rows.map(_.getLong(0)).toSet == ids.filter(!isTrain(_)).toSet)
     val er = rows.find(_.getLong(0) == e).get
     assert(er.getLong(1) >= 1L, "twin not found as candidate")
@@ -584,10 +584,10 @@ class SimilaritySpec extends SparkSpec {
     }).toDF("vec_id", "embedding")
     val got = Similarity.mutualNeighborRate(emb, nBits = 4)
       .as[(Long, Long, Long)].collect().head
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val nn = Similarity.nearestNeighbor(emb, nBits = 4)
       .select("q_id", "nn_id").as[(Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val pairs = nn.toSet
     val nMutual = nn.count(p => pairs.contains((p._2, p._1))).toLong
     assert(got == ((nn.length.toLong, nMutual,
@@ -606,7 +606,7 @@ class SimilaritySpec extends SparkSpec {
     }).toDF("vec_id", "embedding")
     val got = Similarity.lshBucketProfile(emb, nBits = 4)
       .as[(Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.map(_._3).sum == 20L)
     val total = 20L
     got.foreach { case (cls, nb, nv, ppm) =>
@@ -729,14 +729,14 @@ class SimilaritySpec extends SparkSpec {
     val r = Similarity.thresholdCalibration(emb, nBits = 4,
         thresholds = Seq(900000L, 990000L))
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.toList == List((900000L, 2L, 500000L),
       (990000L, 2L, 500000L)), r.toList.toString)
     // fixture: counts never increase as the threshold rises
     val fix = Similarity.thresholdCalibration(
       graft.core.Tables(spark, SfDir, "embeddings"))
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(fix.map(_._1).toSeq ==
       Similarity.CalibThresholdsE6.sorted)
     assert(fix.sliding(2).forall(p => p(0)._2 >= p(1)._2),
@@ -852,7 +852,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val r = Similarity.silhouette(emb).collect()
       .map(x => x.getAs[Long]("label") -> x).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // label 0 origin points: a = 2*333333^2 = 222221777778,
     // b = 2e12 -> s = (b-a)*1e6 div b = 888889; the planted point:
     // a = 2*666667^2, b = 0 -> s = -1e6
@@ -879,7 +879,7 @@ class SimilaritySpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("ivf_inc_").toFile.getAbsolutePath
     val inc = topkRows(Similarity.ivfIncremental(emb, root))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     // full recompute: assign the WHOLE corpus in one shot against the
     // centers trained on the base split — must be identical
     val base = emb.filter(col("vec_id") % 4 =!= 0)
@@ -889,7 +889,7 @@ class SimilaritySpec extends SparkSpec {
       col("embedding").cast("array<double>").as("v"),
       l2Norm(col("embedding").cast("array<double>")).as("nrm"))
     val full = topkRows(Similarity.ivfTopKFromCenters(feat, centers))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(inc.nonEmpty && inc == full)
     // replay guard: the committed v1 is not rewritten on a second run
     assert(graft.streaming.VersionedState
@@ -897,7 +897,7 @@ class SimilaritySpec extends SparkSpec {
     val v1 = new java.io.File(s"$root/v1/_SUCCESS")
     val stamp = v1.lastModified()
     val again = topkRows(Similarity.ivfIncremental(emb, root))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(again == inc)
     assert(v1.lastModified() == stamp,
       "replayed arrival rewrote the committed index version")
@@ -912,18 +912,18 @@ class SimilaritySpec extends SparkSpec {
       df.select("q_id", "rank", "nn_id", "adc")
         .as[(Long, Long, Long, Double)].collect().sorted.toSeq
     val inc = adcRows(Similarity.pqIncremental(emb, root))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val baseSeeds = Similarity.seedCenters(
       emb.filter(col("vec_id") % 4 =!= 0), Similarity.PqCodes)
     val full = adcRows(Similarity.pqTopKWithSeeds(emb, baseSeeds))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(inc.nonEmpty && inc == full)
     assert(graft.streaming.VersionedState
       .currentVersion(spark, root) == 1L)
     val v1 = new java.io.File(s"$root/v1/_SUCCESS")
     val stamp = v1.lastModified()
     val again = adcRows(Similarity.pqIncremental(emb, root))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(again == inc && v1.lastModified() == stamp)
   }
 
@@ -932,9 +932,9 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet(s"$SfDir/embeddings.parquet")
     val nBits = Similarity.scaledNBits(emb.count())
     val split = topkRows(Similarity.lshSplitTopK(emb, nBits = nBits))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val plain = topkRows(Similarity.lshTopK(emb, nBits = nBits))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(split.nonEmpty && split == plain)
   }
 
@@ -950,7 +950,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = (collinear ++ healthy).toDF("vec_id", "embedding")
       .withColumn("label", lit(0))
     val b = Similarity.lshSplitBuckets(emb).collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val byKey = b.groupBy(r =>
       (r.getAs[String]("bucket"), r.getAs[Long]("sub")))
     val mega = b.groupBy(_.getAs[String]("bucket"))

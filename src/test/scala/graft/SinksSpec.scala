@@ -209,7 +209,7 @@ class SinksSpec extends SparkSpec {
       assert(spark.read.parquet(t).select($"k").as[Long].collect().toSet ==
         Set(1L, 2L))
     } finally {
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -15,7 +15,7 @@ class TrianglesSpec extends SparkSpec {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L)).toDF("a", "b")
     val r = Triangles.triangleCounts(e)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(x => x._1 -> x._3).toSeq ==
       Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
     assert(r.map(x => x._1 -> x._2).toSeq ==
@@ -27,12 +27,12 @@ class TrianglesSpec extends SparkSpec {
       .toDF("a", "b")
     val rk = Triangles.triangleCounts(k4)
       .as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rk.forall(x => x._3 == 3L) && rk.map(_._3).sum == 12L)
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)).toDF("a", "b")
     val rs = Triangles.triangleCounts(star)
       .as[(Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rs.forall(_._3 == 0L))
   }
 
@@ -45,7 +45,7 @@ class TrianglesSpec extends SparkSpec {
     val r = Triangles.edgeEmbeddedness(e)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(x => (x._1, x._2) -> ((x._3, x._4, x._5))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r == Map(
       (1L, 2L) -> ((7L, 1L, 0L)), (1L, 3L) -> ((1L, 1L, 0L)),
       (2L, 3L) -> ((2L, 1L, 0L)),
@@ -56,7 +56,7 @@ class TrianglesSpec extends SparkSpec {
       yield (a, b, 1L)).toDF("a", "b", "w")
     val rk = Triangles.edgeEmbeddedness(k4)
       .as[(Long, Long, Long, Long, Long)].collect()
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(rk.length == 6 && rk.forall(x => x._4 == 2L && x._5 == 0L),
       rk.toSeq.toString)
   }
@@ -69,7 +69,7 @@ class TrianglesSpec extends SparkSpec {
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)).toDF("a", "b")
     val r = graft.graph.Communities.labelPropagation(e)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.map(x => x._1 -> x._2).toSeq ==
       Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 3L, 5L -> 3L, 6L -> 3L),
       r.toSeq.toString)
@@ -97,7 +97,7 @@ class TrianglesSpec extends SparkSpec {
     val got = graft.graph.LinkPredict
       .commonNeighborTopK(edges, maxMidDegree = 5, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got.toSeq === Seq((4L, 6L, 2L), (5L, 7L, 2L),
       (1L, 3L, 1L)))
   }
@@ -125,7 +125,7 @@ class TrianglesSpec extends SparkSpec {
     val got = graft.graph.Triangles.clusteringCoefficients(edges)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(got(1L) == ((2L, 1L, 1000000L)))
     assert(got(2L) == ((2L, 1L, 1000000L)))
     assert(got(3L) == ((3L, 1L, 333333L)))

@@ -54,7 +54,7 @@ class WinnowModelSpec extends SparkSpec {
       val got = Dedup.winnowedFingerprints(df)
         .as[(Long, Long)].collect()
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      graft.core.CacheBay.drain()
+      graft.core.SessionCache.endQuery()
       texts.zipWithIndex.foreach { case (t, i) =>
         val want = modelFingerprints(t)
         assert(got.getOrElse(i.toLong, Set.empty) == want,

@@ -18,7 +18,7 @@ class WinnowSpec extends SparkSpec {
   test("identical docs select identical fingerprint sets") {
     val t = "the quick brown fox jumps over the lazy dog again and again"
     val r = fps(Seq(1L -> t, 2L -> t))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val (a, b) = (r.filter(_._1 == 1L).map(_._2).toSet,
       r.filter(_._1 == 2L).map(_._2).toSet)
     assert(a.nonEmpty && a == b)
@@ -29,7 +29,7 @@ class WinnowSpec extends SparkSpec {
     val tail = "alpha beta gamma delta epsilon zeta eta theta iota " +
       "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
     val r = fps(Seq(1L -> tail, 2L -> s"completely new leading words $tail"))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     val a = r.filter(_._1 == 1L).map(_._2).toSet
     val b = r.filter(_._1 == 2L).map(_._2).toSet
     // every window fully inside the shared tail selects the same min
@@ -42,7 +42,7 @@ class WinnowSpec extends SparkSpec {
     val r = fps(Seq(1L -> "too short text", // 3 tokens → 1 gram < w
       2L -> ("w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 " +
         "w16 w17 w18 w19 w20 w21 w22 w23 w24 w25 w26 w27 w28 w29 w30")))
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(r.forall(_._1 != 1L))
     val n2 = r.count(_._1 == 2L)
     // 28 grams, 25 full windows: selections ≥ ng/w (a new min at least
@@ -59,7 +59,7 @@ class WinnowSpec extends SparkSpec {
         "spanning enough words to fingerprint something real"))
     val p = Dedup.winnowPairs(docs.toDF("doc_id", "text"))
       .as[(Long, Long, Long)].collect().toSeq
-    graft.core.CacheBay.drain()
+    graft.core.SessionCache.endQuery()
     assert(p.exists(x => x._1 == 1L && x._2 == 2L && x._3 >= 2L))
     assert(!p.exists(x => x._1 == 3L || x._2 == 3L))
   }
