@@ -8,6 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plain columnar parquet scans that Catalyst can push filters into and
   * prune columns from. At cluster scale these would be partitioned
   * tables (e.g. by snapshot month); locally they are single files.
+  *
+  * Each table's schema is inferred once per session (a one-task job
+  * that reads a file footer) and memoized in [[SessionCache]];
+  * every later read passes it to `spark.read.schema`, so it launches
+  * no job. Each call still returns a fresh DataFrame with fresh
+  * attribute ids, so two reads of one table self-join cleanly. A
+  * table rewritten in place under the same path within one session
+  * needs `SessionCache.clear(spark)` before it is read again.
   */
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -15,6 +23,9 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(all.contains(name), s"unknown table $name")
+    val path = s"$dir/$name.parquet"
+    def read() = spark.read.schema(SessionCache.memo(spark,
+      s"table-schema:$path")(spark.read.parquet(path).schema)).parquet(path)
     if (name == "events") {
       // The driver's fixture generator has written events.ts as parquet
       // TIMESTAMP(NANOS) in some rounds and TIMESTAMP(MICROS) in others,
@@ -25,8 +36,9 @@ object Tables {
       //  - TimestampNTZType: MICROS without UTC adjustment; the session runs
       //    in UTC so a plain cast to TIMESTAMP is value-identical
       //  - TimestampType: already what every downstream query expects
+      // (the conf is set first, so inference and the scan both see it)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = read()
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       raw.schema("ts").dataType match {
@@ -37,6 +49,6 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts has unsupported parquet type $other — update Tables.apply")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read()
   }
 }

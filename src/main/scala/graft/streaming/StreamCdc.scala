@@ -70,9 +70,9 @@ object StreamCdc {
     if (id <= last) return false
     val cols = (pk ++ valueCols).map(col)
     val snap = snapshot.select(cols: _*)
-    val prev = VersionedState.current(spark, snapRoot(root))
-      .map(_.select(cols: _*))
-      .getOrElse(snap.limit(0)) // first batch: every row is an insert
+    val prev =
+      if (last < 0) snap.limit(0) // first batch: every row is an insert
+      else VersionedState.read(spark, snapRoot(root), last, snap.schema)
     Recon.snapshotCdc(prev, snap, pk, valueCols)
       .withColumn("batch_id", lit(id))
       .write.mode(SaveMode.Overwrite).parquet(feedDir(root, id))

@@ -57,15 +57,15 @@ object StreamDrift {
     val last = VersionedState.currentVersion(spark, root)
     if (id <= last) return false
     val prof = batchProfile(batch)
+    val onboard = prof.select(col("source"),
+      col("mean_q_e6").as("base_q_e6"),
+      expr(s"mean_q_e6 div $allowDiv").as("k"),
+      lit(0L).as("cusum"), lit(1L).as("n_batches"),
+      lit(0L).as("is_alarm"))
     val merged =
-      if (last < 0)
-        prof.select(col("source"),
-          col("mean_q_e6").as("base_q_e6"),
-          expr(s"mean_q_e6 div $allowDiv").as("k"),
-          lit(0L).as("cusum"), lit(1L).as("n_batches"),
-          lit(0L).as("is_alarm"))
+      if (last < 0) onboard
       else {
-        val st = spark.read.parquet(s"$root/v$last")
+        val st = VersionedState.read(spark, root, last, onboard.schema)
         st.join(prof, Seq("source"), "full_outer")
           .select(col("source"),
             // a brand-new source becomes its own baseline

@@ -40,8 +40,13 @@ object StreamIngest {
   def parsePayload(raw: DataFrame, inner: StructType): DataFrame = {
     val parsed = raw.select(
       from_json(col("value"), MapType(StringType, inner)).as("batch"))
-    val exploded = parsed.select(explode(col("batch"))
-      .as(Seq("row_index", "row")))
+    // explode_outer + a key filter rather than explode: Catalyst infers
+    // `size(batch) > 0` below an explode and pushes it past the
+    // Project, copying from_json into it (every payload parsed twice).
+    // Map keys are never null, so the filter drops exactly the row
+    // explode_outer adds for a null or empty map.
+    val exploded = parsed.select(explode_outer(col("batch"))
+      .as(Seq("row_index", "row"))).filter(col("row_index").isNotNull)
     exploded.select(
       col("row_index").cast("long").as("row_index") +:
         inner.fields.toIndexedSeq.map(f => col(s"row.${f.name}").as(f.name)): _*)
@@ -126,8 +131,9 @@ object StreamIngest {
   /** S17: the producer's raw-line variant (`stream.py:204-226`): each
     * batch is a JSON ARRAY of raw text lines → one row per line. */
   def parseLineArray(raw: DataFrame): DataFrame =
-    raw.select(posexplode(from_json(col("value"),
+    raw.select(posexplode_outer(from_json(col("value"),
       ArrayType(StringType))).as(Seq("line_index", "line")))
+      .filter(col("line_index").isNotNull) // see parsePayload
 
   /** Deterministic batch reconstruction of the producer payload from
     * the `events` table — used to exercise the exact payload JSON shape

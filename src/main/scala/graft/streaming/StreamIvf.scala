@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** X316 streaming leg: the incremental IVF index driven by a live
@@ -35,6 +36,11 @@ object StreamIvf {
 
   private def qRoot(root: String) = s"$root/quantizer"
 
+  /** What [[seed]] commits under [[qRoot]]: `(cell, dim, c_e6)`. */
+  private val QuantizerSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("dim", IntegerType),
+    StructField("c_e6", LongType)))
+
   /** Train the frozen quantizer on the seed corpus and commit it plus
     * the seed corpus' own assignments as version 0. Call once before
     * starting the stream; a no-op if the quantizer already exists. */
@@ -53,12 +59,11 @@ object StreamIvf {
   /** Stored-quantizer read-back (bounded: nCells·dim rows). */
   private def centersOf(spark: SparkSession, root: String)
       : Array[Array[Double]] = {
-    val rows = VersionedState.current(spark, qRoot(root))
-      .getOrElse(throw new IllegalStateException(
-        s"StreamIvf: no committed quantizer under ${qRoot(root)} — " +
-          "call seed() before streaming arrivals"))
-      .select(col("cell").cast("int"), col("dim").cast("int"),
-        col("c_e6").cast("long"))
+    val v = VersionedState.currentVersion(spark, qRoot(root))
+    if (v < 0) throw new IllegalStateException(
+      s"StreamIvf: no committed quantizer under ${qRoot(root)} — " +
+        "call seed() before streaming arrivals")
+    val rows = VersionedState.read(spark, qRoot(root), v, QuantizerSchema)
       .collect()
     val dim = rows.map(_.getInt(1)).max + 1
     val out = Array.ofDim[Long](rows.map(_.getInt(0)).max + 1, dim)
@@ -82,10 +87,11 @@ object StreamIvf {
     val spark = batch.sparkSession
     val last = VersionedState.currentVersion(spark, root)
     if (id + 1 <= last) return false
+    val arrivals = assign(batch, root)
     val merged =
-      if (last < 0) assign(batch, root)
-      else spark.read.parquet(s"$root/v$last")
-        .unionByName(assign(batch, root))
+      if (last < 0) arrivals
+      else VersionedState.read(spark, root, last, arrivals.schema)
+        .unionByName(arrivals)
     VersionedState.commit(merged, id + 1, root)
     true
   }

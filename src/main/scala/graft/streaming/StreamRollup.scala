@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, round}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.analytics.Analytics
@@ -36,10 +37,16 @@ object StreamRollup {
     val last = VersionedState.currentVersion(spark, root)
     if (id <= last) return false
     val newRoll = Analytics.eventRollup(batch)
+    // one aggregation over the stored rollup and the raw batch rows
+    // (n = 1, cents as eventRollup rounds them): integer sums, so the
+    // result equals merging the batch's own rollup
     val merged =
       if (last < 0) newRoll
-      else Analytics.mergeRollups(spark.read.parquet(s"$root/v$last"),
-        newRoll, Seq("user_id", "event_type"))
+      else Analytics.mergeRollups(
+        VersionedState.read(spark, root, last, newRoll.schema),
+        batch.select(col("user_id"), col("event_type"), lit(1L).as("n"),
+          round(col("value") * 100).cast("long").as("cents")),
+        Seq("user_id", "event_type"))
     // reads v<last>, writes v<id> — never overwrites what it reads
     VersionedState.commit(merged, id, root)
     true

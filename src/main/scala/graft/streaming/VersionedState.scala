@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned parquet state with an atomic commit point — the shared
   * persistence primitive under the `foreachBatch` sinks
@@ -46,6 +47,13 @@ object VersionedState {
     val v = currentVersion(spark, root)
     if (v < 0) None else Some(spark.read.parquet(s"$root/v$v"))
   }
+
+  /** Committed version `v`, read with the schema its writer commits:
+    * a sink calls this once per micro-batch, so it skips the schema
+    * inference job that [[current]] pays on every read. */
+  def read(spark: SparkSession, root: String, v: Long,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$root/v$v")
 
   /** Write `df` as version `id` and garbage-collect superseded
     * versions. The caller must have already checked the replay guard

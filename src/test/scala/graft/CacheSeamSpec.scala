@@ -44,4 +44,21 @@ class CacheSeamSpec extends AnyFunSuite {
     "scoped foreachBatch persists") {
     assert(filesWith(".persist(") -- ScopedPersists - Seam == Set.empty)
   }
+
+  /** Bench's warm-up probe reads lineitem before any query runs. */
+  private val TableProbes = Set("Bench.scala" -> "lineitem.parquet")
+
+  test("src/main reads a fixture table's parquet path only inside " +
+    "core/Tables.scala (its per-session schema memo) and Bench's probe") {
+    // a table name or an interpolated name before `.parquet"`: a bare
+    // read of a table path would bring back a schema inference job per
+    // query build
+    val path = ("\\b(" + graft.core.Tables.all.mkString("|") +
+      ")\\.parquet\"|\\$\\{?\\w+\\}?\\.parquet\"").r
+    val found = sources.toSeq.filter(_._1 != "core/Tables.scala")
+      .flatMap { case (f, text) =>
+        path.findAllIn(text).map(m => f -> m.stripSuffix("\"")).toSeq
+      }
+    assert(found.sorted == TableProbes.toSeq.sorted)
+  }
 }

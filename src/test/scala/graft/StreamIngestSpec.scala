@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.StreamIngest
@@ -172,5 +174,74 @@ class StreamIngestSpec extends SparkSpec {
         col("event_type").as("label"))
     assert(rt.exceptAll(direct).count() == 0 &&
       direct.exceptAll(rt).count() == 0)
+  }
+
+  // The spelling parsePayload/parseLineArray had before they parsed each
+  // payload once: plain explode/posexplode, which Catalyst guards with
+  // an inferred `size(...) > 0` filter that copies from_json.
+  private def explodeSpelling(raw: DataFrame, inner: StructType): DataFrame =
+    raw.select(from_json(col("value"), MapType(StringType, inner)).as("batch"))
+      .select(explode(col("batch")).as(Seq("row_index", "row")))
+      .select(col("row_index").cast("long").as("row_index") +:
+        inner.fields.toIndexedSeq.map(f => col(s"row.${f.name}").as(f.name)): _*)
+  private def posexplodeSpelling(raw: DataFrame): DataFrame =
+    raw.select(posexplode(from_json(col("value"),
+      ArrayType(StringType))).as(Seq("line_index", "line")))
+
+  private def jsonParses(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+      }.size).sum
+    }.sum
+
+  private val payloadLines = Seq(payload, "{}", "[]", "null", "{\"0\": ",
+    """{"5": {"feature0": 1.0}, "7": null}""", "not json")
+  private val arrayLines = Seq("""["a", "b", null]""", "[]", "{}", "null",
+    """["unterminated""", "42")
+
+  /** `f` applied to `lines` as one MemoryStream micro-batch. */
+  private def streamed(lines: Seq[String], name: String)(
+      f: DataFrame => DataFrame): Seq[Row] = {
+    val ms = MemoryStream[String](org.apache.spark.sql.Encoders.STRING, spark.sqlContext)
+    val q = f(ms.toDF().toDF("value")).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      ms.addData(lines: _*)
+      q.processAllAvailable()
+      spark.table(name).collect().toSeq
+    } finally q.stop()
+  }
+
+  private def sameRows(a: Seq[Row], b: Seq[Row]): Unit =
+    assert(a.map(_.toString).sorted == b.map(_.toString).sorted)
+
+  test("parsePayload and parseLineArray parse each payload once and " +
+    "keep the explode spelling's rows on edge lines (batch and stream)") {
+    // a text source: a local Seq would fold into a LocalRelation
+    val dir = java.nio.file.Files.createTempDirectory("ingest_edge_")
+    def textOf(name: String, ls: Seq[String]) = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, ls.asJava)
+      spark.read.text(f.toString)
+    }
+    try {
+      val lines = textOf("payloads.txt", payloadLines)
+      val arrays = textOf("arrays.txt", arrayLines)
+      assert(jsonParses(StreamIngest.parsePayload(lines, inner)) == 1)
+      assert(jsonParses(StreamIngest.parseLineArray(arrays)) == 1)
+      // the old spelling really did parse twice (what this case guards)
+      assert(jsonParses(explodeSpelling(lines, inner)) > 1)
+      sameRows(StreamIngest.parsePayload(lines, inner).collect().toSeq,
+        explodeSpelling(lines, inner).collect().toSeq)
+      sameRows(StreamIngest.parseLineArray(arrays).collect().toSeq,
+        posexplodeSpelling(arrays).collect().toSeq)
+      assert(StreamIngest.parsePayload(lines, inner).count() == 4)
+      assert(StreamIngest.parseLineArray(arrays).count() == 3)
+      sameRows(streamed(payloadLines, "ingest_edge_new")(StreamIngest.parsePayload(_, inner)),
+        streamed(payloadLines, "ingest_edge_old")(explodeSpelling(_, inner)))
+      sameRows(streamed(arrayLines, "lines_edge_new")(StreamIngest.parseLineArray),
+        streamed(arrayLines, "lines_edge_old")(posexplodeSpelling))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

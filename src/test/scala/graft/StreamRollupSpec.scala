@@ -62,4 +62,23 @@ class StreamRollupSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(root)
     }
   }
+
+  test("merging raw batch rows into the stored rollup equals the batch " +
+    "rollup of everything, null values included") {
+    val root = java.nio.file.Files.createTempDirectory("roll_null_").toFile
+    val target = new java.io.File(root, "rollup").getAbsolutePath
+    val b0: Seq[(Long, String, Option[Double])] = Seq((1L, "view", Some(0.005)), (2L, "view", None),
+      (3L, "buy", Some(1.0)))
+    val b1: Seq[(Long, String, Option[Double])] = Seq((1L, "view", None), (2L, "view", None),
+      (3L, "buy", Some(-2.675)), (4L, "click", Some(3.0)))
+    def df(rows: Seq[(Long, String, Option[Double])]) = rows.toDF("user_id", "event_type", "value")
+    try {
+      assert(StreamRollup.mergeBatch(df(b0), 0L, target))
+      assert(StreamRollup.mergeBatch(df(b1), 1L, target))
+      val got = StreamRollup.current(spark, target).get.collect().map(_.toString).toSet
+      val want = Analytics.eventRollup(df(b0 ++ b1)).collect().map(_.toString).toSet
+      assert(got == want)
+      assert(got.contains("[2,view,2,null]"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
 }
