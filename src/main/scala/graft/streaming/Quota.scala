@@ -5,8 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
-  ValueState}
+  OutputMode}
 
 /** Per-key admission quota (X276) — the crawl-politeness / per-tenant
   * rate cap a live ingestion front-end enforces: admit at most `n`
@@ -51,9 +50,9 @@ object Quota {
           .orderBy(col("ts"), col("event_id"))).cast("long"))
       .filter(col("quota_rank") <= n)
 
-  /** The admission fold BOTH state APIs share: consume one group's
-    * micro-batch rows in (ts, event_id) order against the carried
-    * count, admit while under budget. */
+  /** The admission fold: consume one group's micro-batch rows in
+    * (ts, event_id) order against the carried count, admit while under
+    * budget. */
   private def admitRows(n: Long, rows: Iterator[Ev],
       acc0: Long): (Seq[Kept], Long) = {
     var acc = acc0
@@ -87,42 +86,5 @@ object Quota {
       .flatMapGroupsWithState(OutputMode.Append,
         if (evictAfter.isDefined) GroupStateTimeout.ProcessingTimeTimeout
         else GroupStateTimeout.NoTimeout)(admit(n, evictAfter))
-  }
-
-  /** The same admission rule on the Spark 4 `transformWithState` API
-    * (VERDICT r13 #6, the [[Stateful.SpikeProcessor]] pattern): one
-    * typed `ValueState[QState]` cell per key, with per-cell TTL as
-    * the quota window — TTL evicting an idle key's count resets its
-    * budget, exactly `evictAfter`'s semantics on the
-    * `flatMapGroupsWithState` face. [[admitRows]] is shared, so the
-    * two faces cannot drift; the spec proves output equality across
-    * micro-batches. */
-  class QuotaProcessor(n: Long, ttl: Option[java.time.Duration])
-      extends StatefulProcessor[Long, Ev, Kept] {
-    @transient private var st: ValueState[QState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[QState]("quotaState",
-        org.apache.spark.sql.Encoders.product[QState],
-        ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[Kept] = {
-      val (out, acc) = admitRows(n, rows,
-        if (st.exists()) st.get().accepted else 0L)
-      st.update(QState(acc))
-      out.iterator
-    }
-  }
-
-  /** [[quotaStream]] via `transformWithState` (requires the RocksDB
-    * state store provider when streaming). */
-  def quotaStreamTws(events: Dataset[Ev], n: Long = DefaultQuota,
-      ttl: Option[java.time.Duration] = None): Dataset[Kept] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new QuotaProcessor(n, ttl),
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 /** X296: event-time sessionization with ARBITRARY per-key state — the
   * session shape `session_window` (X34) cannot express: the built-in
@@ -104,74 +103,5 @@ object SessionState extends Serializable {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** The same sessionizer on the Spark 4 `transformWithState` API
-    * (VERDICT r14 #4, completing the migration story the spike and
-    * quota operators started): one typed `ValueState[OpenSession]`
-    * cell per key plus ONE live event-time timer at
-    * `last_event + gap` — the no-successor close signal
-    * `setTimeoutTimestamp` expressed on the fMGWS face. TWS timers
-    * are per-timestamp (re-registering does NOT replace), so when a
-    * batch extends the open session the processor DELETES the
-    * superseded deadline before registering the new one, and
-    * [[SessionProcessor.handleExpiredTimer]] additionally guards on
-    * the expiry matching the open session's own deadline — a stale
-    * timer can never close a session an in-flight event reopened.
-    * [[foldEvents]] is shared, so the two faces cannot drift; the
-    * spec proves output equality across micro-batches. */
-  class SessionProcessor(gapMinutes: Long)
-      extends StatefulProcessor[Long, Ev, Session] {
-    @transient private var st: ValueState[OpenSession] = _
-
-    private val gapUs = gapMinutes * 60L * 1000000L
-
-    /** The open session's close deadline in ms — the timer key. */
-    private def deadlineMs(s: OpenSession): Long =
-      s.last_us / 1000L + gapMinutes * 60000L
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OpenSession]("sessionState",
-        org.apache.spark.sql.Encoders.product[OpenSession],
-        TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[Session] = {
-      val prev = if (st.exists()) Some(st.get()) else None
-      val sorted = rows.map(e =>
-          (e.ts.getTime * 1000L, math.round(e.value * 100.0)))
-        .toSeq.sortBy(_._1)
-      val (closed, open) = foldEvents(prev, sorted, gapUs)
-      prev.foreach(p => getHandle.deleteTimer(deadlineMs(p)))
-      open match {
-        case Some(s) =>
-          st.update(s)
-          getHandle.registerTimer(deadlineMs(s))
-        case None => st.clear()
-      }
-      closed.map(toSession(user, _)).iterator
-    }
-
-    override def handleExpiredTimer(user: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Session] = {
-      if (st.exists() &&
-          deadlineMs(st.get()) == info.getExpiryTimeInMs) {
-        val out = toSession(user, st.get())
-        st.clear()
-        Iterator.single(out)
-      } else Iterator.empty
-    }
-  }
-
-  /** [[sessionize]] via `transformWithState` (requires the RocksDB
-    * state store provider when streaming). */
-  def sessionizeTws(events: Dataset[Ev],
-      gapMinutes: Long = DefaultGapMinutes,
-      delay: String = DefaultDelay): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMinutes),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+  OutputMode}
 
 /** Custom-state streaming via `flatMapGroupsWithState` — the
   * KeyValueGroupedDataset state API for semantics no built-in stateful
@@ -57,10 +57,10 @@ object Stateful {
 
   private def cents(v: Double): Long = math.round(v * 100)
 
-  /** The scoring fold both state APIs share: consume one group's
-    * micro-batch rows in event-time order against the carried state.
-    * Within a micro-batch, event-time order with value tiebreak for
-    * determinism (matches the batch mirror's ORDER BY). */
+  /** The scoring fold: consume one group's micro-batch rows in
+    * event-time order against the carried state. Within a micro-batch,
+    * event-time order with value tiebreak for determinism (matches the
+    * batch mirror's ORDER BY). */
   private def scoreRows(rows: Iterator[Obs],
       st0: UserState): (Seq[Scored], UserState) = {
     var st = st0
@@ -97,44 +97,5 @@ object Stateful {
       .flatMapGroupsWithState(OutputMode.Append,
         if (evictAfter.isDefined) GroupStateTimeout.ProcessingTimeTimeout
         else GroupStateTimeout.NoTimeout)(score(evictAfter))
-  }
-
-  /** The same detector on the Spark 4 `transformWithState` API — the
-    * arbitrary-state operator that supersedes `flatMapGroupsWithState`:
-    * typed named state cells ([[org.apache.spark.sql.streaming.ValueState]])
-    * instead of one opaque blob, per-cell TTL instead of a group
-    * timeout, and RocksDB-backed incremental checkpoints (the provider
-    * it requires). State and scoring rule are IDENTICAL to
-    * [[spikeScores]] — [[scoreRows]] is shared — so the window-mirror
-    * oracle covers both; the spec proves output equality across APIs
-    * and cross-micro-batch persistence. TTL (the production state
-    * bound) needs `TimeMode.ProcessingTime`. */
-  class SpikeProcessor(ttl: Option[java.time.Duration])
-      extends StatefulProcessor[Long, Obs, Scored] {
-    @transient private var st: ValueState[UserState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[UserState]("spikeState",
-        org.apache.spark.sql.Encoders.product[UserState],
-        ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(user: Long, rows: Iterator[Obs],
-        timers: TimerValues): Iterator[Scored] = {
-      val (out, s) =
-        scoreRows(rows, if (st.exists()) st.get() else UserState(0L, 0L))
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[spikeScores]] via `transformWithState` (requires the RocksDB
-    * state store provider when streaming). */
-  def spikeScoresTws(events: Dataset[Obs],
-      ttl: Option[java.time.Duration] = None): Dataset[Scored] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new SpikeProcessor(ttl),
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
   }
 }

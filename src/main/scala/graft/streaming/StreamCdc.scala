@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -45,18 +46,25 @@ object StreamCdc {
   def currentSnapshot(spark: SparkSession, root: String): Option[DataFrame] =
     VersionedState.current(spark, snapRoot(root))
 
+  private val FeedDir = "^b(\\d+)$".r
+
   /** The accumulated change feed across all committed batches. A crash
     * between the feed write and the snapshot commit leaves an orphan
     * `feed/b<id>` for an UNcommitted batch (replay will idempotently
-    * rewrite it); gating on the committed snapshot version keeps those
-    * phantom rows invisible until the commit lands — the same
-    * read-your-committed contract as [[StreamDedup]]'s segment
-    * watermark. The filter is on the feed's own `batch_id` column, so
-    * it prunes with parquet row-group stats per batch directory. */
+    * rewrite it); reading only the listed `feed/b<id>` directories with
+    * `id <=` the committed snapshot version keeps those phantom rows
+    * invisible until the commit lands — the same read-your-committed
+    * contract as [[SegmentLedger]]'s watermark. Fails before the first
+    * commit (there is no feed yet). */
   def feed(spark: SparkSession, root: String): DataFrame = {
     val committed = currentVersion(spark, root)
-    spark.read.parquet(s"$root/feed/b*")
-      .filter(col("batch_id") <= committed)
+    val fs = VersionedState.fsOf(spark, root)
+    val dirs = fs.listStatus(new Path(s"$root/feed")).toSeq.map(_.getPath)
+      .filter(_.getName match {
+        case FeedDir(id) => id.toLong <= committed
+        case _ => false
+      })
+    spark.read.parquet(dirs.map(_.toString): _*)
   }
 
   /** Diff one full-snapshot micro-batch against the stored snapshot,

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -11,9 +10,9 @@ import graft.operators.Debounce
 /** Streaming arrival-time debounce: [[Debounce]]'s gaps-and-islands
   * burst collapse driven by an event stream under `foreachBatch` — the
   * X84 ledger device applied to bursts. Stored state is an append-only
-  * ledger of burst rows `(key, burst_seq, keeper_id, n_events,
-  * start_us, last_us, batch_id)`, one `seg<id>` segment per
-  * micro-batch, committed atomically by the parquet `_SUCCESS` marker.
+  * [[SegmentLedger]] of burst rows `(key, burst_seq, keeper_id,
+  * n_events, start_us, last_us, batch_id)`, one segment per
+  * micro-batch.
   * A burst that spans a batch boundary is never rewritten in place: the
   * later batch appends an UPDATED row for the same `(key, burst_seq)`
   * and the read view takes the row with the highest batch id — exactly
@@ -28,48 +27,18 @@ import graft.operators.Debounce
   * events family.
   *
   * Effectively-once under `foreachBatch`'s at-least-once contract by
-  * the [[StreamDedup]] argument: the applied batch id is the segment's
-  * own name, persisted atomically with its data; a redelivered id is
-  * detected by `id <= maxSegment` and skipped; a writer that dies
-  * mid-segment leaves no `_SUCCESS`, so readers ignore the partial
-  * directory and the redelivery overwrites it.
+  * the ledger's replay guard (see [[SegmentLedger]]).
   *
   * Scale shape: a batch costs one scan of the ledger to recover the
   * per-key LAST burst (one `groupBy(key)` struct-max — the only state
   * the merge rule can touch, since only the newest burst of a key can
   * still be open) plus the intra-batch islands window (one key shuffle,
   * the [[Debounce]] shape) and a key equi-join of the two — never a
-  * corpus-sized rewrite. Segment count stays bounded operationally the
-  * same way [[StreamDedup.compactSegments]] bounds the dedup ledger
-  * (the device is shared; a compaction pass here would be the same
-  * planner over the same manifest shape).
+  * corpus-sized rewrite. [[SegmentLedger.compactSegments]] bounds the
+  * segment count here as it does for [[StreamDedup]]: it copies rows
+  * verbatim, `batch_id` included, so [[bursts]] reads the same.
   */
 object StreamDebounce {
-
-  private val SegDir = "^seg(\\d+)$".r
-
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def segments(spark: SparkSession, root: String): Seq[Path] = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(new Path(root))) return Seq.empty
-    fs.listStatus(new Path(root)).iterator.collect {
-      case st if SegDir.matches(st.getPath.getName) &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")) => st.getPath
-    }.toSeq
-  }
-
-  /** Highest committed batch id — the replay-guard watermark. */
-  def maxSegment(spark: SparkSession, root: String): Long =
-    segments(spark, root).foldLeft(-1L)((m, p) =>
-      math.max(m, p.getName.drop(3).toLong))
-
-  private def ledger(spark: SparkSession, root: String): Option[DataFrame] = {
-    val segs = segments(spark, root)
-    if (segs.isEmpty) None
-    else Some(spark.read.parquet(segs.map(_.toString): _*))
-  }
 
   /** Latest version of each burst: for every (key, burst_seq) the row
     * written by the highest batch — a later batch only ever SUPERSEDES
@@ -91,10 +60,10 @@ object StreamDebounce {
     * redelivery directly. */
   def mergeBatch(batch: DataFrame, batchId: Long, root: String,
       gapSeconds: Long = Debounce.DefaultGapSeconds): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= maxSegment(spark, root)) return false
+    val led = SegmentLedger.list(batch.sparkSession, root)
+    if (batchId <= led.watermark) return false
     // per-key LAST burst — the only one still open for merging
-    val state = ledger(spark, root).map(latest(_)
+    val state = led.read.map(latest(_)
       .groupBy(col("key"))
       .agg(max(struct(col("burst_seq"), col("keeper_id"), col("n_events"),
         col("start_us"), col("last_us"))).as("s"))
@@ -149,9 +118,8 @@ object StreamDebounce {
             col("prev_start")).otherwise(col("start_us")).as("start_us"),
           col("last_us"))
     }
-    // reads only prior segments, writes seg<id>: commit = _SUCCESS
-    joined.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/seg$batchId")
+    // reads only prior segments, writes seg<id>
+    SegmentLedger.append(joined, batchId, root)
     true
   }
 
@@ -160,7 +128,7 @@ object StreamDebounce {
     * (key, burst) with the keeper, event count, start timestamp and
     * whole-second span. */
   def bursts(spark: SparkSession, root: String): Option[DataFrame] =
-    ledger(spark, root).map(latest(_).select(
+    SegmentLedger.list(spark, root).read.map(latest(_).select(
       col("key"), col("burst_seq").cast("long").as("burst_id"),
       col("keeper_id"), col("n_events"),
       timestamp_micros(col("start_us")).as("burst_start"),

@@ -34,43 +34,6 @@ class StatefulSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState: same verdicts, state survives micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // transformWithState requires the RocksDB state store provider;
-    // scope it to a forked session so the rest of the suite keeps the
-    // default provider
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Obs](
-      org.apache.spark.sql.Encoders.product[Obs], s2.sqlContext)
-    val q = Stateful.spikeScoresTws(ms.toDS())
-      .writeStream.format("memory").queryName("spike_tws")
-      .outputMode("append").start()
-    try {
-      ms.addData(Obs(1L, ts(1), 1.0), Obs(1L, ts(2), 1.0))
-      q.processAllAvailable()
-      ms.addData(Obs(1L, ts(3), 9.0), Obs(2L, ts(3), 50.0))
-      q.processAllAvailable()
-      val rows = s2.table("spike_tws")
-        .select($"user_id", $"value", $"is_spike")
-        .as[(Long, Double, Boolean)].collect().toSet
-      // identical verdicts to the flatMapGroupsWithState test: the
-      // spike is only visible if ValueState crossed the batch boundary
-      assert(rows.contains((1L, 9.0, true)))
-      assert(rows.contains((1L, 1.0, false)))
-      assert(rows.contains((2L, 50.0, false)))
-    } finally q.stop()
-  }
-
-  test("both state APIs emit identical batch output") {
-    val obs = graft.core.Tables(spark, SfDir, "events")
-      .select($"user_id", $"ts", $"value").as[Obs]
-    val a = Stateful.spikeScores(obs).toDF()
-    val b = Stateful.spikeScoresTws(obs).toDF()
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-  }
-
   test("batch run of the state function equals the window mirror") {
     val obs = graft.core.Tables(spark, SfDir, "events")
       .select($"user_id", $"ts", $"value").as[Obs]
@@ -118,48 +81,5 @@ class StatefulSpec extends SparkSpec {
     val viaState = Quota.quotaStream(ev.as[Quota.Ev], n = 5L).toDF()
     assert(viaWindow.exceptAll(viaState).count() == 0 &&
       viaState.exceptAll(viaWindow).count() == 0)
-  }
-
-  test("quota via transformWithState: identical admissions to the " +
-    "flatMapGroupsWithState face across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Quota
-    import graft.streaming.Quota.Ev
-    // transformWithState requires the RocksDB state store provider;
-    // scope it to a forked session (the SpikeProcessor pattern)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Ev](
-      org.apache.spark.sql.Encoders.product[Ev], s2.sqlContext)
-    val q = Quota.quotaStreamTws(ms.toDS(), n = 3L)
-      .writeStream.format("memory").queryName("quota_tws")
-      .outputMode("append").start()
-    try {
-      // the exact micro-batch schedule of the fMGWS test above — the
-      // two APIs must produce the same admission set
-      ms.addData(Ev(1L, ts(1), 10L), Ev(1L, ts(2), 11L))
-      q.processAllAvailable()
-      ms.addData(Ev(1L, ts(3), 12L), Ev(1L, ts(4), 13L),
-        Ev(2L, ts(1), 20L))
-      q.processAllAvailable()
-      ms.addData(Ev(1L, ts(5), 14L)) // over budget — must emit nothing
-      q.processAllAvailable()
-      val got = s2.table("quota_tws")
-        .select($"user_id", $"event_id", $"quota_rank")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == Set((1L, 10L, 1L), (1L, 11L, 2L), (1L, 12L, 3L),
-        (2L, 20L, 1L)), s"TWS quota diverged: $got")
-    } finally q.stop()
-  }
-
-  test("quota: both state APIs emit identical batch output and match " +
-    "the rank-window face") {
-    import graft.streaming.Quota
-    val ev = graft.core.Tables(spark, SfDir, "events")
-      .select($"user_id", $"ts", $"event_id")
-    val a = Quota.quotaStream(ev.as[Quota.Ev], n = 5L).toDF()
-    val b = Quota.quotaStreamTws(ev.as[Quota.Ev], n = 5L).toDF()
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Debounce
-import graft.streaming.StreamDebounce
+import graft.streaming.{SegmentLedger, StreamDebounce}
 
 /** The streaming arrival-time debounce sink: per-batch burst folds
   * append as atomic segments, a burst spanning batches is superseded
@@ -43,8 +43,40 @@ class StreamDebounceSpec extends SparkSpec {
       (2L, 1L, 20L, 1L, ts(300), 0L)))
     // redelivery of a committed id is a no-op
     assert(!StreamDebounce.mergeBatch(b1, 1L, root, gap))
-    assert(StreamDebounce.maxSegment(spark, root) === 2L)
+    assert(SegmentLedger.list(spark, root).watermark === 2L)
     assert(collectBursts(root).size === 3)
+  }
+
+  test("compaction on the shared ledger: bursts read the same and a " +
+    "redelivered batch id is still rejected") {
+    val root = java.nio.file.Files
+      .createTempDirectory("sdb_").toString + "/ledger"
+    val gap = 100L
+    // key 1's burst spans batches 0-2, so its rows from the earlier
+    // batches are superseded ones that compaction must carry along
+    val bs = Seq(
+      Seq((1L, ts(0), 10L), (2L, ts(0), 20L)),
+      Seq((1L, ts(90), 11L)),
+      Seq((1L, ts(150), 12L), (2L, ts(500), 21L)),
+      Seq((3L, ts(10), 30L)))
+      .map(_.toDF("key", "ts", "id"))
+    bs.zipWithIndex.foreach { case (b, i) =>
+      assert(StreamDebounce.mergeBatch(b, i.toLong, root, gap))
+    }
+    val before = collectBursts(root)
+    assert(SegmentLedger.list(spark, root).units.size == 4)
+    assert(SegmentLedger.compactSegments(spark, root,
+      target = Long.MaxValue) == 1)
+    val after = SegmentLedger.list(spark, root)
+    assert(after.units.size == 1 && after.watermark == 3L)
+    assert(collectBursts(root) === before)
+    assert(before === Set(
+      (1L, 1L, 10L, 3L, ts(0), 150L),
+      (2L, 1L, 20L, 1L, ts(0), 0L),
+      (2L, 2L, 21L, 1L, ts(500), 0L),
+      (3L, 1L, 30L, 1L, ts(10), 0L)))
+    assert(!StreamDebounce.mergeBatch(bs(2), 2L, root, gap))
+    assert(collectBursts(root) === before)
   }
 
   test("a batch whose first burst does NOT merge still numbers its " +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamDedup
+import graft.streaming.{SegmentLedger, StreamDedup}
 
 /** The streaming arrival-time dedup sink: per-batch decisions append
   * as atomic segments, keepers index the corpus for later batches,
@@ -37,7 +37,7 @@ class StreamDedupSpec extends SparkSpec {
         (11L, "unrelated novel text nothing shared here with anything"))
       q.processAllAvailable()
 
-      def led = StreamDedup.ledger(spark, target).get
+      def led = SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"is_dup",
           coalesce($"dup_of", lit(-1L)).as("dup_of"), $"batch_id")
         .as[(Long, Long, Long, Long)].collect().toSet
@@ -46,7 +46,7 @@ class StreamDedupSpec extends SparkSpec {
         (10L, 1L, 1L, 1L), (11L, 0L, -1L, 1L))
       assert(led == want)
       // keepers carry signatures; dups don't
-      val sigs = StreamDedup.ledger(spark, target).get
+      val sigs = SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"sig".isNotNull).as[(Long, Boolean)]
         .collect().toMap
       assert(sigs == Map(1L -> true, 2L -> true, 10L -> false,
@@ -55,7 +55,7 @@ class StreamDedupSpec extends SparkSpec {
       val replay = Seq((99L, base)).toDF("doc_id", "text")
       assert(!StreamDedup.mergeBatch(replay, 1L, target))
       assert(led == want)
-      assert(StreamDedup.maxSegment(spark, target) == 1L)
+      assert(SegmentLedger.list(spark, target).watermark == 1L)
       // a NEW id flags against the accumulated keeper index
       assert(StreamDedup.mergeBatch(replay, 5L, target))
       assert(led.contains((99L, 1L, 1L, 5L)))
@@ -77,25 +77,25 @@ class StreamDedupSpec extends SparkSpec {
             s"words ${('a' + id.toInt).toChar} end")).toDF("doc_id", "text"),
           id, target))
       }
-      val before = StreamDedup.ledger(spark, target).get
+      val before = SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"is_dup", $"batch_id")
         .as[(Long, Long, Long)].collect().toSet
-      assert(StreamDedup.unitCount(spark, target) == 10)
-      val openBefore = StreamDedup.ledger(spark, target).get
+      assert(SegmentLedger.list(spark, target).units.size == 10)
+      val openBefore = SegmentLedger.list(spark, target).read.get
         .inputFiles.length
 
       // compact with a target big enough to swallow everything
-      assert(StreamDedup.compactSegments(spark, target,
+      assert(SegmentLedger.compactSegments(spark, target,
         target = Long.MaxValue) == 1)
       // the batch-cost proxy (files a ledger scan opens) collapsed...
-      assert(StreamDedup.unitCount(spark, target) == 1)
-      assert(StreamDedup.ledger(spark, target).get
+      assert(SegmentLedger.list(spark, target).units.size == 1)
+      assert(SegmentLedger.list(spark, target).read.get
         .inputFiles.length < openBefore)
       // ...while content, watermark, and the replay guard are intact
-      assert(StreamDedup.ledger(spark, target).get
+      assert(SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"is_dup", $"batch_id")
         .as[(Long, Long, Long)].collect().toSet == before)
-      assert(StreamDedup.maxSegment(spark, target) == 9L)
+      assert(SegmentLedger.list(spark, target).watermark == 9L)
       assert(!StreamDedup.mergeBatch(
         Seq((999L, "whatever")).toDF("doc_id", "text"), 9L, target))
       // new batches append fresh segments after the generation and
@@ -103,20 +103,20 @@ class StreamDedupSpec extends SparkSpec {
       assert(StreamDedup.mergeBatch(
         Seq((999L, "unique document number 3 with its own words d end"))
           .toDF("doc_id", "text"), 10L, target))
-      val dup = StreamDedup.ledger(spark, target).get
+      val dup = SegmentLedger.list(spark, target).read.get
         .filter($"doc_id" === 999L)
         .select($"is_dup", $"batch_id").as[(Long, Long)].collect().toSeq
       assert(dup == Seq((1L, 10L)))
-      assert(StreamDedup.unitCount(spark, target) == 2)
+      assert(SegmentLedger.list(spark, target).units.size == 2)
 
       // compacting repeatedly stays idempotent-ish and cheap: a second
       // run merges the generation with the new segment; a third is a
       // no-op (single unit left)
-      assert(StreamDedup.compactSegments(spark, target,
+      assert(SegmentLedger.compactSegments(spark, target,
         target = Long.MaxValue) == 1)
-      assert(StreamDedup.compactSegments(spark, target,
+      assert(SegmentLedger.compactSegments(spark, target,
         target = Long.MaxValue) == 0)
-      assert(StreamDedup.maxSegment(spark, target) == 10L)
+      assert(SegmentLedger.list(spark, target).watermark == 10L)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
@@ -142,10 +142,10 @@ class StreamDedupSpec extends SparkSpec {
         q.processAllAvailable()
       }
       // 9 batches with maintenance every 3: never 9 units on disk
-      assert(StreamDedup.unitCount(spark, target) <= 4,
-        s"units: ${StreamDedup.unitCount(spark, target)}")
-      assert(StreamDedup.maxSegment(spark, target) == 8L)
-      val led = StreamDedup.ledger(spark, target).get
+      assert(SegmentLedger.list(spark, target).units.size <= 4,
+        s"units: ${SegmentLedger.list(spark, target).units.size}")
+      assert(SegmentLedger.list(spark, target).watermark == 8L)
+      val led = SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"is_dup").as[(Long, Long)].collect().toMap
       assert(led.size == 9)
       assert(led(3L) == 1L && led.filter(_._1 != 3L).values.forall(_ == 0L))
@@ -167,20 +167,20 @@ class StreamDedupSpec extends SparkSpec {
       }
       // simulate: a committed cmp0_2 exists AND the covered seg dirs
       // were never deleted (crash mid-cleanup)
-      val all = StreamDedup.ledger(spark, target).get
+      val all = SegmentLedger.list(spark, target).read.get
       all.write.parquet(s"$target/cmp0_2")
-      val rows = StreamDedup.ledger(spark, target).get
+      val rows = SegmentLedger.list(spark, target).read.get
         .select($"doc_id", $"batch_id").as[(Long, Long)].collect().toSeq
       // three rows, not six: the covered segments are masked
       assert(rows.size == 3)
-      assert(StreamDedup.maxSegment(spark, target) == 2L)
-      assert(StreamDedup.unitCount(spark, target) == 1)
+      assert(SegmentLedger.list(spark, target).watermark == 2L)
+      assert(SegmentLedger.list(spark, target).units.size == 1)
       // the next compaction run clears the leftovers (and, with a
       // single live unit, writes nothing)
-      assert(StreamDedup.compactSegments(spark, target) == 0)
+      assert(SegmentLedger.compactSegments(spark, target) == 0)
       assert(!new java.io.File(target, "seg0").exists())
-      assert(StreamDedup.maxSegment(spark, target) == 2L)
-      assert(StreamDedup.ledger(spark, target).get.count() == 3)
+      assert(SegmentLedger.list(spark, target).watermark == 2L)
+      assert(SegmentLedger.list(spark, target).read.get.count() == 3)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 }
